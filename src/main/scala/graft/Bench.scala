@@ -1,6 +1,60 @@
 package graft
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** The stage-cache chains, longest first so the pool's tail is short
+    * ones. Every public `warm*` entry point of `graft.ops` is here once
+    * (BenchSpec pins that). */
+  private[graft] val Chains: Seq[(String, (SparkSession, String) => Unit)] = {
+    import ops._
+    Seq(
+      "kmeans" -> Clustering.warmKmeansStages _,
+      "ivf" -> Sketches.warmIvfStage _,
+      "pq" -> Sketches.warmPqStage _,
+      "minhash_sigs" -> Sketches.warmMinhashStage _,
+      "text_postings" -> TextSim.warmStages _,
+      "simhash_sigs" -> Sketches.warmSimhashStage _,
+      "minhash_capped" -> Sketches.warmMinhashCappedStage _,
+      "dedup_lsh_sigs" -> Sketches.warmDedupLshStage _,
+      "lsh_sigs" -> Sketches.warmLshSigStage _,
+      "bigrams" -> TextSim.warmBigramStage _,
+      "docgrams" -> TextSim.warmDocGramStage _,
+      "graph" -> Graph.warmGraphStages _,
+      "text_stats" -> TextSim.warmTextStatStages _,
+      "learn" -> Learn.warmLearnStages _,
+      "mask" -> TextSim.warmMaskStage _)
+  }
+
+  /** Spark local property naming the work a thread submits: the chain
+    * name during the stage build, `query#run` in the timed loop. */
+  private[graft] val LabelKey = "graft.bench.label"
+
+  /** Jobs, stages and tasks run under one label. */
+  private[graft] final case class Shape(jobs: Long, stages: Long, tasks: Long) {
+    def +(o: Shape): Shape =
+      Shape(jobs + o.jobs, stages + o.stages, tasks + o.tasks)
+    def json: String = s"[$jobs,$stages,$tasks]"
+  }
+
+  /** Counts each label's jobs, stages and tasks. Spark copies the
+    * submitting thread's local properties into every job and stage it
+    * runs for it, so attribution holds under the concurrent chain pool.
+    * Events arrive asynchronously: read after the session has stopped,
+    * which drains the listener bus. Stages skipped as already computed
+    * are never submitted and do not count. */
+  private[graft] final class ShapeListener extends SparkListener {
+    private val shapes = new java.util.concurrent.ConcurrentHashMap[String, Shape]()
+    private def add(props: java.util.Properties, s: Shape): Unit =
+      Option(props).flatMap(p => Option(p.getProperty(LabelKey))).foreach {
+        shapes.merge(_, s, (a: Shape, b: Shape) => a + b)
+      }
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      add(e.properties, Shape(1, 0, 0))
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      add(e.properties, Shape(0, 1, e.stageInfo.numTasks))
+    def apply(label: String): Shape = shapes.getOrDefault(label, Shape(0, 0, 0))
+  }
+
   // Co-residency sentinel (r8 postmortem: a same-host neighbor inflated
   // every query ~2.4x with zero signal in the JSON). A FIXED single-
   // threaded unit of arithmetic whose wall time on an idle core is a
@@ -56,14 +110,17 @@ object Bench {
         f"$CleanLoadBar%.1f at start — record marked contaminated; " +
         "stop campaign mains before benching")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // FAIR job scheduling, for the stage-build pre-pass only: the six
-    // artifact chains submit jobs from six threads, and under FIFO a
-    // 32-task stage fills every local[32] slot, serializing the
-    // chains end-to-end (measured: concurrency bought almost nothing).
-    // FAIR round-robins runnable tasks across the concurrent jobs, so
-    // the chains genuinely overlap; the timed per-query loop below is
+    // FAIR job scheduling, for the stage-build pre-pass only: the
+    // chains submit jobs from several threads, and under FIFO one wide
+    // stage fills every slot, serializing the chains end-to-end
+    // (measured: concurrency bought almost nothing). FAIR round-robins
+    // runnable tasks across the concurrent jobs, so the chains
+    // genuinely overlap; the timed per-query loop below is
     // single-threaded, where FAIR == FIFO.
     val spark = Local.session(fair = true)
+    val sc = spark.sparkContext
+    val shapes = new ShapeListener
+    sc.addSparkListener(shapes)
     // Untimed warmup: absorbs JVM/codegen/scan warmup so the first timed
     // query isn't polluted (r1's first map entry carried ~4s of warmup).
     try {
@@ -107,20 +164,22 @@ object Bench {
     // Per-chain wall times (concurrent, so they overlap — stage_build is
     // the max-ish envelope, NOT the sum): the r8 driver run jumped
     // 12.7 -> 49.8 s with zero visibility into which chain paid it.
-    // Each chain reports its own seconds so a future jump is
-    // attributable in one read of the bench line.
+    // Each chain reports its own seconds, and its [jobs,stages,tasks]
+    // in stage_build_shape, so a future jump is attributable in one
+    // read of the bench line.
     val stageDetail = new java.util.concurrent.ConcurrentHashMap[String, Double]()
     val tStage0 = System.nanoTime()
     // Chain concurrency is BOUNDED (r21, guide §2.6 "2-3 jobs in flight
     // is plenty"): the old unbounded 10-thread fan-out was measured
     // 2.4-8x SLOWER than a serial build on the r21 host (56.6 s serial
-    // vs 137/204/461 s concurrent — StageWarmProbe), where concurrent
+    // vs 137/204/461 s with every chain on its own thread), where concurrent
     // task dispatch burns ~10x more system than user CPU
     // (futex/park syscalls are expensive under that hypervisor). A
     // width-4 pool keeps the fast-host overlap win — the envelope is
     // max(longest chain, sum/width), and the longest chain (ivf)
     // already dominates at width 4 — without the 10-way pileup.
-    // Parameterized for other hosts: SPARK_GRAFT_STAGE_THREADS.
+    // Parameterized for other hosts: SPARK_GRAFT_STAGE_THREADS (1 =
+    // serial, for isolated per-chain walls).
     val stageThreads = sys.env.get("SPARK_GRAFT_STAGE_THREADS")
       .map(_.toInt).getOrElse(4)
     val stageBuild = if (!needsStages) 0.0 else {
@@ -134,29 +193,12 @@ object Bench {
         .newFixedThreadPool(math.max(1, stageThreads))
       try {
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        def timed(name: String)(body: => Unit): Future[Unit] = Future {
+        Await.result(Future.traverse(Chains) { case (name, warm) => Future {
+          sc.setLocalProperty(LabelKey, name)
           val t0 = System.nanoTime()
-          body
+          warm(spark, sfDir)
           stageDetail.put(name, (System.nanoTime() - t0) / 1e9)
-        }
-        // Longest chains first so the pool's tail is short ones.
-        Await.result(Future.sequence(Seq(
-          timed("kmeans") { ops.Clustering.warmKmeansStages(spark, sfDir) },
-          timed("ivf") { ops.Sketches.warmIvfStage(spark, sfDir) },
-          timed("pq") { ops.Sketches.warmPqStage(spark, sfDir) },
-          timed("minhash_sigs") { ops.Sketches.warmMinhashStage(spark, sfDir) },
-          timed("text_postings") { ops.TextSim.warmStages(spark, sfDir) },
-          timed("simhash_sigs") { ops.Sketches.warmSimhashStage(spark, sfDir) },
-          timed("minhash_capped") { ops.Sketches.warmMinhashCappedStage(spark, sfDir) },
-          timed("dedup_lsh_sigs") { ops.Sketches.warmDedupLshStage(spark, sfDir) },
-          timed("lsh_sigs") { ops.Sketches.warmLshSigStage(spark, sfDir) },
-          timed("bigrams") { ops.TextSim.warmBigramStage(spark, sfDir) },
-          timed("docgrams") { ops.TextSim.warmDocGramStage(spark, sfDir) },
-          timed("graph") { ops.Graph.warmGraphStages(spark, sfDir) },
-          timed("text_stats") { ops.TextSim.warmTextStatStages(spark, sfDir) },
-          timed("learn") { ops.Learn.warmLearnStages(spark, sfDir) },
-          timed("mask") { ops.TextSim.warmMaskStage(spark, sfDir) })),
-          30.minutes)
+        } }, 30.minutes)
         (System.nanoTime() - tStage0) / 1e9
       } catch { case e: Throwable =>
         System.err.println(s"bench: stage build failed: ${e.getMessage}"); -1.0
@@ -188,26 +230,30 @@ object Bench {
     // timed immediately before each run (the co-residency sentinel at
     // query granularity — contention arriving mid-run is visible at
     // the query it hit, not just at the end of the session).
+    // Each run is labelled `query#run`, so query_shape can give the min
+    // run's [jobs,stages,tasks].
     val ProbeIters = 1 << 23
     val Runs = 2
-    final case class QRun(sec: Double, gcMs: Long, probeS: Double)
+    final case class QRun(sec: Double, gcMs: Long, probeS: Double, label: String)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      val attempts = (1 to Runs).map { _ =>
+      val attempts = (1 to Runs).map { run =>
+        val label = s"$name#$run"
+        sc.setLocalProperty(LabelKey, label)
         val probe = spin(ProbeIters)
         val gc0 = gcMs()
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).count()
-          Some(QRun((System.nanoTime() - t0) / 1e9, gcMs() - gc0, probe))
+          Some(QRun((System.nanoTime() - t0) / 1e9, gcMs() - gc0, probe, label))
         }
         catch { case e: Throwable =>
           System.err.println(s"bench: $name failed: ${e.getMessage}"); None }
       }
       val times = attempts.flatten
       val best = if (times.nonEmpty) times.minBy(_.sec)
-        else QRun(-1.0, 0L, -1.0)
+        else QRun(-1.0, 0L, -1.0, "")
       val spread =
         if (times.size >= 2) times.map(_.sec).max - times.map(_.sec).min
         else 0.0
@@ -244,6 +290,19 @@ object Bench {
     val spinEnd = spinCal()
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
+    // cpus = the session's resolved core count (local[$SPARK_GRAFT_CPUS])
+    // so a c8 record is self-identifying without the caller's wrapper.
+    val cpus = sc.defaultParallelism
+    // Stopping drains the listener bus, so every shape below is final.
+    spark.stop()
+    val stageShape = Chains.collect {
+      case (k, _) if stageDetail.containsKey(k) => "\"" + k + "\":" + shapes(k).json }
+      .mkString("{", ",", "}")
+    // [jobs, stages, tasks] of the min run — file copies only, like
+    // query_noise.
+    val qshape = results.collect { case (k, v, _, true, _) =>
+      "\"" + k + "\":" + shapes(v.label).json }
+      .mkString("{", ",", "}")
     val sentinel =
       f""""spin_cal":{"start_s":$spinStart%.3f,"end_s":$spinEnd%.3f},""" +
         f""""load_avg":$loadAvg%.2f,"load_avg_start":$loadStart%.2f,""" +
@@ -254,7 +313,7 @@ object Bench {
     //  * headline fields FIRST, per-query map LAST, so a fixed-size tail
     //    capture that cuts the line keeps per-query times (recoverable
     //    by regex) instead of the noise triples;
-    //  * the per-run noise map lives ONLY in the file copies —
+    //  * the per-run noise and shape maps live ONLY in the file copies —
     //    bench/bench_full.json is the canonical full artifact, named by
     //    the "bench_full" pointer field in every record;
     //  * the SAME full record prints as both the FIRST and the LAST
@@ -264,12 +323,9 @@ object Bench {
     //    now forks the run with OutputStrategy.StdoutOutput (no sbt
     //    "[info] " prefix) and showSuccess:=false (no trailing
     //    "[success] Total time" line after the record).
-    // cpus = the session's resolved core count (local[$SPARK_GRAFT_CPUS])
-    // so a c8 record is self-identifying without the caller's wrapper.
-    val cpus = spark.sparkContext.defaultParallelism
-    val head = f""""metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus,"stage_build":$stageBuild%.3f,"stage_build_detail":$stageJson,"warm":$warm,"runs":$Runs,$sentinel,"gc_total_ms":$gcTotal,"probe_max_s":$probeMax%.3f,"n_queries":${results.length},"n_errors":$nErr,"errors":$errs,"flaky":$flaky,"sf":"$sfDir","bench_full":"bench/bench_full.json""""
+    val head = f""""metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus,"stage_build":$stageBuild%.3f,"stage_build_detail":$stageJson,"stage_build_shape":$stageShape,"warm":$warm,"runs":$Runs,$sentinel,"gc_total_ms":$gcTotal,"probe_max_s":$probeMax%.3f,"n_queries":${results.length},"n_errors":$nErr,"errors":$errs,"flaky":$flaky,"sf":"$sfDir","bench_full":"bench/bench_full.json""""
     val jsonStdout = s"""{$head,"queries":$qs}"""
-    val json = s"""{$head,"query_noise":$qnoise,"queries":$qs}"""
+    val json = s"""{$head,"query_noise":$qnoise,"query_shape":$qshape,"queries":$qs}"""
     println(jsonStdout)
     // Also persist to files: a fixed-size tail capture of stdout
     // truncated BENCH_r05 mid-line and lost the headline totals — the
@@ -302,10 +358,9 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"bench: could not write $p: ${e.getMessage}") }
     }
-    spark.stop()
     // Final stdout line == the full record (see layout comment above).
-    // Printed after spark.stop() so no late Spark/log4j stdout chatter
-    // can land between it and process exit.
+    // Both lines print after spark.stop(), so no late Spark/log4j stdout
+    // chatter can land between them and process exit.
     println(jsonStdout)
   }
 }

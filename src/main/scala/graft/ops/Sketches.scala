@@ -575,14 +575,6 @@ object Sketches {
     ()
   }
 
-  /** Both vector-index families, serially (kept for callers that are
-    * not wall-clock-sensitive; Bench uses the per-family entry points
-    * concurrently). */
-  def warmStages(s: SparkSession, d: String): Unit = {
-    warmIvfStage(s, d)
-    warmPqStage(s, d)
-  }
-
   // ---- PQ (product quantization) ----------------------------------------
 
   /** PQ geometry: 64-dim vectors split into [[PqM]]=8 subvectors, each
@@ -906,12 +898,6 @@ object Sketches {
   def warmSimhashStage(s: SparkSession, d: String): Unit = {
     simhashSigs(s, d).count()
     ()
-  }
-
-  /** Both signature indexes, serially (see [[warmStages]]). */
-  def warmSigStage(s: SparkSession, d: String): Unit = {
-    warmLshSigStage(s, d)
-    warmSimhashStage(s, d)
   }
 
   // ---- Incremental dedup against a maintained index ----------------------

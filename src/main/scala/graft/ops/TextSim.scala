@@ -2810,23 +2810,12 @@ object TextSim {
           .as(Seq("idx", "wh")))
         .select(col("doc_id"), (col("idx") + 1).as("i"), col("wh"))
       // Occurrence counts attach by a count-over-partition window on
-      // the one wh exchange (no self-join re-running the explode).
-      // The r21 verdict flagged this query perf-suspect (#5), so the
-      // alternative — aggregate wh counts and join back (both sides
-      // hash-partition on wh, so the join reuses the exchange and
-      // replaces the window's partition sort with a hash aggregate) —
-      // is kept behind `spark.graft.spans.impl=selfjoin` for the
-      // interleaved within-JVM A/B; both arms filter the identical
-      // per-wh counts, so rows are identical by construction. The
-      // default is the measured winner (see OPTIMIZATION_r22.md).
+      // the one wh exchange, so the explode is not re-run by a
+      // self-join against aggregated counts (that spelling measured no
+      // faster, see OPTIMIZATION_r22.md).
+      val byWh = org.apache.spark.sql.expressions.Window.partitionBy("wh")
       val covered =
-        if (s.conf.get("spark.graft.spans.impl", "window") == "selfjoin") {
-          val cnt = win.groupBy("wh").agg(count(lit(1)).as("c"))
-          win.join(cnt, "wh").filter(col("c") > 1)
-        } else {
-          val byWh = org.apache.spark.sql.expressions.Window.partitionBy("wh")
-          win.withColumn("c", count(lit(1)).over(byWh)).filter(col("c") > 1)
-        }
+        win.withColumn("c", count(lit(1)).over(byWh)).filter(col("c") > 1)
       val ncov = covered
         .select(col("doc_id"),
           explode(sequence(col("i"), col("i") + (k - 1))).as("p"))

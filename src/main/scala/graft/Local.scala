@@ -52,7 +52,7 @@ object Local {
 
   /** Recursive tree delete (no symlink traversal concerns in this
     * repo's temp-dir usage; listFiles does not follow into anything
-    * we did not create). Shared by the stage cache's shutdown sweep,
+    * we did not create). Shared by the stage cache's dir cleanup,
     * the probes, and the test suites. */
   def rmTree(f: java.io.File): Unit = {
     Option(f.listFiles).foreach(_.foreach(rmTree))

@@ -2,26 +2,29 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-scoped driver-side memo for small derived values (centroid
-  * histories, trained weights, domain-check verdicts) that several
-  * queries share within one session but that must never leak across
-  * sessions.
+/** Session-scoped driver-side memo for derived values (centroid
+  * histories, trained weights, domain-check verdicts, and every
+  * [[StageCache]] stage's dir under the reserved `stage|` key prefix)
+  * that several queries share within one session but that must never
+  * leak across sessions.
   *
   * Keying discipline (r14 advice): the outer map holds the
   * SparkSession itself under WEAK keys, so entries die with their
   * session instead of accumulating forever in long-lived multi-session
   * processes — and a new session can never collide with a dead one
-  * (the previous identity-hash-string keys had both defects). Values
-  * must be plain data (no references back to the session), or the
-  * weak entry never clears; every current value is an integer
-  * array/history or a boxed verdict.
+  * (identity-hash-string keys had both defects). Values must be plain
+  * data with NO reference back to the session, or the weak entry never
+  * clears; every current value is an integer array/history, a boxed
+  * verdict or a path holder.
   *
-  * The BUILD runs inside the slot's own lock, never inside the map's
-  * computeIfAbsent — same recursion hazard StageCache documents
-  * (nested computeIfAbsent on one ConcurrentHashMap is undefined):
-  * builds here trigger StageCache stage builds and can re-enter this
-  * memo through them. A failed build leaves the slot empty, so the
-  * next caller retries instead of caching the failure.
+  * The BUILD runs inside the slot's own lock, NEVER inside the map's
+  * computeIfAbsent: builds nest (the edge list derives the pair counts
+  * derives the gram index, each a memo entry of its own), and nested
+  * computeIfAbsent on one ConcurrentHashMap is documented undefined
+  * behavior — it throws IllegalStateException("Recursive update")
+  * whenever the keys land in colliding bins. The map operation only
+  * creates the (empty) slot; a failed build leaves the slot empty, so
+  * the next caller retries instead of caching the failure.
   */
 object SessionMemo {
 

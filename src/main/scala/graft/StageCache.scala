@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
 
 /** Storage-backed stage memo (FileMap's P6 stage cache): derived
   * frames shared by several queries are written to parquet ONCE per
@@ -9,62 +13,74 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * persist() was measured a net loss (eager pinning defeats per-query
   * pruning); a columnar materialization keeps pruning AND removes the
   * rebuild — at 100 TB this is a partitioned table the pipeline
-  * maintains, here a session temp dir. Keyed by session identity so
-  * fixture edits between sessions cannot serve stale stages;
-  * computeIfAbsent makes concurrent first access build exactly once
-  * (ConcurrencySpec races it). Temp dirs are swept recursively on JVM
-  * exit.
+  * maintains, here a session temp dir.
+  *
+  * Keys: each stage is the [[SessionMemo]] entry `stage|<dir>|<stage>`
+  * of its session (weak session keys, so fixture edits between
+  * sessions cannot serve stale stages and dead sessions free their
+  * entries); the memo's per-slot lock makes concurrent first access
+  * build exactly once (ConcurrencySpec races it). The entry holds only
+  * the stage's current root dir, never the session.
+  *
+  * Lifetime: every stage dir is a `graft_<stage>*` dir directly under
+  * `java.io.tmpdir`, recorded against its SparkContext and deleted
+  * when that context ends (stop() drains the listener bus, so they are
+  * gone when it returns) — including dirs a rewrite or invalidation
+  * abandoned. One JVM shutdown hook sweeps whatever is left.
   */
 object StageCache {
 
-  /** One materialization slot per (session, dir, stage). The BUILD
-    * runs inside the slot's own lock, NEVER inside the map's
-    * computeIfAbsent: stage builds nest (the edge list derives the
-    * pair counts derives the gram index), and nested computeIfAbsent
-    * on one ConcurrentHashMap is documented undefined behavior — it
-    * throws IllegalStateException("Recursive update") whenever the
-    * keys land in colliding bins, which made cluster/curate fail
-    * intermittently depending on the session's identity hash. The map
-    * operation now only creates the (empty) slot; a failed build
-    * leaves the slot empty, so the next caller retries. */
-  private final class Slot {
-    @volatile private var path: String = _
-    def get(build: => String): String = {
-      if (path == null) synchronized { if (path == null) path = build }
-      path
+  /** A stage's current materialization root. `rewrite` swaps it under
+    * this holder's lock; the volatile write means a reader sees wholly
+    * the old dir or wholly the new one, never a half-written one. */
+  private final class Root(@volatile var dir: Path)
+
+  /** Stage dirs of each live SparkContext. */
+  private val owned = mutable.HashMap.empty[SparkContext, mutable.Buffer[Path]]
+
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    owned.synchronized(owned.values.flatten.toList)
+      .foreach(p => Local.rmTree(p.toFile))))
+
+  /** A new `graft_<stage>*` dir, owned by the session's context and
+    * handed to `fill`. */
+  private def newDir(s: SparkSession, stage: String)(fill: Path => Unit): Path = {
+    val dir = Files.createTempDirectory(s"graft_$stage")
+    val sc = s.sparkContext
+    owned.synchronized {
+      owned.getOrElseUpdate(sc, {
+        sc.addSparkListener(new SparkListener {
+          override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+            owned.synchronized(owned.remove(sc)).foreach(
+              _.foreach(p => Local.rmTree(p.toFile)))
+        })
+        mutable.ArrayBuffer.empty[Path]
+      }) += dir
     }
-    /** Replace the materialization: `next` maps the CURRENT path to a
-      * freshly-written one; the swap is atomic for readers (volatile
-      * write — a reader sees wholly the old or wholly the new dir,
-      * never a half-written one). Runs under the slot lock, so a
-      * concurrent first-touch build cannot interleave. */
-    def swap(next: String => String): Unit = synchronized {
-      require(path != null, "swap before first build")
-      path = next(path)
-    }
+    fill(dir)
+    dir
   }
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Slot]()
+  private def root(s: SparkSession, d: String, stage: String)(
+      fill: Path => Unit): Root =
+    SessionMemo.memo(s, s"stage|$d|$stage")(new Root(newDir(s, stage)(fill)))
 
-  /** A fresh temp data path for `stage`, swept on JVM exit. */
-  private def freshPath(stage: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_$stage")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      Local.rmTree(dir.toFile)))
-    dir.resolve("data").toString
-  }
+  private def data(dir: Path): String = dir.resolve("data").toString
+
+  private def writeTo(df: => DataFrame): Path => Unit =
+    dir => df.write.mode("overwrite").parquet(data(dir))
 
   private def pathFor(s: SparkSession, d: String, stage: String)(
-      build: => DataFrame): String = {
-    val key = s"${Integer.toHexString(System.identityHashCode(s))}|$d|$stage"
-    val slot = cache.computeIfAbsent(key, _ => new Slot)
-    slot.get {
-      val p = freshPath(stage)
-      build.write.mode("overwrite").parquet(p)
-      p
-    }
-  }
+      build: => DataFrame): String =
+    data(stageDir(s, d, stage)(writeTo(build)))
+
+  /** The stage's root dir, made fresh and handed to `fill` on the
+    * first touch per (session, dir, stage) — the primitive under
+    * [[memoized]], for stages that are not one parquet table (e.g.
+    * q_scan_csv's CSV tree). */
+  def stageDir(s: SparkSession, d: String, stage: String)(
+      fill: Path => Unit): Path =
+    root(s, d, stage)(fill).dir
 
   def memoized(s: SparkSession, d: String, stage: String)(
       build: => DataFrame): DataFrame =
@@ -87,38 +103,33 @@ object StageCache {
     * lifecycle verb appendTo lacks: `transform` maps the stage's
     * current content to its replacement (apply tombstones, coalesce a
     * year of appended fragments, roll sketch rows up), the result is
-    * written to a FRESH directory, and the slot swaps to it
+    * written to a FRESH directory, and the holder swaps to it
     * atomically. Readers holding the old frame keep their snapshot —
-    * parquet files are immutable and the old dir lives until JVM
-    * exit — while every later read sees only the rewrite: the local
-    * analogue of a compaction job committing a new table version.
+    * parquet files are immutable and the old dir lives until the
+    * context stops — while every later read sees only the rewrite: the
+    * local analogue of a compaction job committing a new table version.
     * Mutation verbs (append/rewrite) on one stage are single-writer
     * by contract, like every maintenance verb here: an appendTo racing
     * a rewrite can land its rows in the abandoned directory. */
   def rewrite(s: SparkSession, d: String, stage: String)(
       build: => DataFrame)(transform: DataFrame => DataFrame): Unit = {
-    pathFor(s, d, stage)(build) // ensure built before swapping
-    val key = s"${Integer.toHexString(System.identityHashCode(s))}|$d|$stage"
-    cache.get(key).swap { cur =>
-      val p = freshPath(stage)
-      transform(s.read.parquet(cur)).write.mode("overwrite").parquet(p)
-      p
+    val r = root(s, d, stage)(writeTo(build))
+    r.synchronized {
+      r.dir = newDir(s, stage)(writeTo(transform(s.read.parquet(data(r.dir)))))
     }
   }
 
   /** Drop every stage of (session, dir) whose name starts with
     * `stagePrefix` — the retrain-and-swap verbs' invalidation hook
-    * (the [[graft.SessionMemo.dropByPrefix]] discipline at the stage
-    * tier): the slot disappears, so the NEXT memoized() read rebuilds
-    * from the live corpus, while readers already holding a DataFrame
-    * keep their consistent old materialization (its temp dir lives
-    * until JVM exit). Not for general use — ordinary code relies on
-    * the per-session-immutability contract. */
+    * ([[graft.SessionMemo.dropByPrefix]] on the stage keys): the
+    * entry disappears, so the NEXT memoized() read rebuilds from the
+    * live corpus, while readers already holding a DataFrame keep their
+    * consistent old materialization (its dir lives until the context
+    * stops). Not for general use — ordinary code relies on the
+    * per-session-immutability contract. */
   def invalidatePrefix(s: SparkSession, d: String,
-      stagePrefix: String): Unit = {
-    val p = s"${Integer.toHexString(System.identityHashCode(s))}|$d|$stagePrefix"
-    cache.keySet.removeIf(_.startsWith(p))
-  }
+      stagePrefix: String): Unit =
+    SessionMemo.dropByPrefix(s, s"stage|$d|$stagePrefix")
 
   /** Number of parquet data files currently materialized for `stage` —
     * the compaction spec's observable (inputFiles of a fresh read). */
@@ -132,14 +143,8 @@ object StageCache {
     * already on local disk, so this is a directory walk, not a job. */
   def bytesOf(s: SparkSession, d: String, stage: String)(
       build: => DataFrame): Long = {
-    val p = java.nio.file.Paths.get(pathFor(s, d, stage)(build))
-    val dir = if (java.nio.file.Files.isDirectory(p)) p else p.getParent
-    var total = 0L
-    val walk = java.nio.file.Files.walk(dir)
-    try walk.forEach { f =>
-      if (java.nio.file.Files.isRegularFile(f))
-        total += java.nio.file.Files.size(f)
-    } finally walk.close()
-    total
+    val walk = Files.walk(java.nio.file.Paths.get(pathFor(s, d, stage)(build)))
+    try walk.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
+    finally walk.close()
   }
 }

@@ -62,44 +62,25 @@ object Graph {
     * double-exactness bound the truncating casts rely on. */
   private val WScale = 1000000L
 
-  /** Env-gated phase timing (SPARK_GRAFT_GRAPH_TIMING=1): the eager
-    * checkpoint builds run at plan-construction time, so when a bench
-    * host shows an unexplained pagerank wall-clock (r8: 6.2 s driver vs
-    * 1.6 s local) these stderr lines split setup from the iterate job
-    * in one read. Zero overhead when unset. */
-  private def phase[T](name: String)(body: => T): T =
-    if (!sys.env.contains("SPARK_GRAFT_GRAPH_TIMING")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[graph-timing] $name: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** Materialization anchor for a derived graph frame (r21): with a
     * stage context the frame is stage-cached parquet — built ONCE per
-    * (session, corpus) and shared by both bench runs of a query (at
-    * 100 TB these symmetrized/canonicalized/oriented edge tables are
-    * maintained next to the edge list, exactly like the gram
+    * (session, corpus, input) and shared by both bench runs of a query
+    * (at 100 TB these symmetrized/canonicalized/oriented edge tables
+    * are maintained next to the edge list, exactly like the gram
     * postings) — without one it stays the per-run eager
     * localCheckpoint the generic API always used (tests, ad-hoc
     * graphs). Values are identical either way: every consumer
     * aggregates or joins, nothing reads row order (GraphSpec pins
-    * bit-stability across partitionings). Measured on q_graph_pagerank
-    * (SPARK_GRAFT_GRAPH_TIMING): the eIn/eDeg/conn rebuild was ~50-70%
-    * of every warm run.
+    * bit-stability across partitionings). Measured on q_graph_pagerank:
+    * the eIn/eDeg/conn rebuild was ~50-70% of every warm run.
     *
-    * STAGE-KEY CONTRACT (r21 advice): the anchor key is
-    * (session, corpus, name, tag) and does NOT hash the edge frame, so
-    * a stage-context call whose edge/node frame is not the registry's
-    * MUST pass an `anchorTag` distinguishing it (the registry call
-    * sites tag their similarity-edge thresholds: j01 / j05 / wj) —
-    * otherwise it would silently read the first caller's anchor. */
+    * The stage key is `name` plus the semantic hash of `input`'s
+    * analyzed plan, so callers with different inputs never share an
+    * anchor and equal inputs (the warm pass and the registry) meet. */
   private def anchored(stage: Option[(SparkSession, String)], name: String,
-      tag: String)(df: => DataFrame): DataFrame = stage match {
+      input: DataFrame)(df: => DataFrame): DataFrame = stage match {
     case Some((s, d)) =>
-      val key = if (tag.isEmpty) name else s"${name}_$tag"
+      val key = s"${name}_${Integer.toHexString(input.semanticHash())}"
       val anchor = graft.StageCache.memoized(s, d, key)(df)
       // The stage read is additionally PINNED (one eager checkpoint
       // per construction): the unrolled rounds reference these anchors
@@ -124,22 +105,22 @@ object Graph {
   // pass builds just the anchor without running anyone's loop, and
   // the algorithm bodies use the identical builder (no drift).
   private def bfsSymAnchor(edges: DataFrame,
-      stage: Option[(SparkSession, String)], tag: String): DataFrame =
-    anchored(stage, "gr_bfs_sym", tag)(
+      stage: Option[(SparkSession, String)]): DataFrame =
+    anchored(stage, "gr_bfs_sym", edges)(
       edges.select(col("ida").as("a"), col("idb").as("b"))
         .unionByName(edges.select(col("idb").as("a"), col("ida").as("b")))
         .distinct())
 
   private def ccCanonAnchor(edges: DataFrame,
-      stage: Option[(SparkSession, String)], tag: String): DataFrame =
-    anchored(stage, "gr_cc_canon", tag)(
+      stage: Option[(SparkSession, String)]): DataFrame =
+    anchored(stage, "gr_cc_canon", edges)(
       edges.select(greatest(col("ida"), col("idb")).as("hi"),
           least(col("ida"), col("idb")).as("lo"))
         .filter(col("hi") =!= col("lo")).distinct())
 
   private def kcoreEdgesAnchor(edges: DataFrame,
-      stage: Option[(SparkSession, String)], tag: String): DataFrame =
-    anchored(stage, "gr_kcore_e", tag)(edges.select(col("ida"), col("idb"))
+      stage: Option[(SparkSession, String)]): DataFrame =
+    anchored(stage, "gr_kcore_e", edges)(edges.select(col("ida"), col("idb"))
       .filter(col("ida") =!= col("idb")).distinct())
 
   /** Force-build the graph family's stage-cached anchors (the
@@ -153,24 +134,20 @@ object Graph {
     val docs = Tables.documents(s, d).select("doc_id")
     val e01 = graft.ops.TextSim.similarityEdges(s, d, minJac = 0.1)
     val e05 = graft.ops.TextSim.similarityEdges(s, d, minJac = 0.5)
-    // Tags MUST match the registry call sites' (the anchored() key
-    // contract): j01/j05 = similarity edges at that minJac, wj =
-    // the weighted edge list.
-    pagerank(docs, e01, iters = 1, stage = ctx, anchorTag = "j01")
+    pagerank(docs, e01, iters = 1, stage = ctx)
     pagerank(docs, graft.ops.TextSim.similarityEdgesWeighted(s, d),
-      iters = 1, weightCol = Some("jac"), stage = ctx, anchorTag = "wj")
-    labelPropagation(docs, e01, iters = 1, stage = ctx, anchorTag = "j01")
-    triangleCounts(e01, stage = ctx, anchorTag = "j01")
-    bfsSymAnchor(e05, ctx, "j05")
-    ccCanonAnchor(e05, ctx, "j05")
-    kcoreEdgesAnchor(e01, ctx, "j01")
+      iters = 1, weightCol = Some("jac"), stage = ctx)
+    labelPropagation(docs, e01, iters = 1, stage = ctx)
+    triangleCounts(e01, stage = ctx)
+    bfsSymAnchor(e05, ctx)
+    ccCanonAnchor(e05, ctx)
+    kcoreEdgesAnchor(e01, ctx)
     ()
   }
 
   def pagerank(nodes: DataFrame, edges: DataFrame, iters: Int,
       weightCol: Option[String] = None,
-      stage: Option[(SparkSession, String)] = None,
-      anchorTag: String = ""): DataFrame = {
+      stage: Option[(SparkSession, String)] = None): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     // Checkpoint the caller's edge list FIRST: symmetrize + degree
     // reference it four times, and each reference would otherwise
@@ -195,6 +172,13 @@ object Graph {
     // plan; only q_graph_pagerank_w pays for weights.
     val weighted = weightCol.isDefined
     val sfx = if (weighted) "w" else ""
+    // The caller's edge columns, weight scaled to longs — the input
+    // both anchors are keyed by.
+    val eSrc = weightCol match {
+      case Some(wc) => edges.select(col("ida"), col("idb"),
+        (col(wc) * WScale).cast("long").as("w"))
+      case None => edges.select(col("ida"), col("idb"))
+    }
     // Symmetrize, attach sender degree (+ total weight when weighted) —
     // the one frame every round scans — then the connected-node table
     // derived from it. Both anchored ([[anchored]]): stage-cached when
@@ -202,12 +186,8 @@ object Graph {
     // eIn checkpoint only exists to stop sym + deg re-running the
     // upstream edge pipeline four times DURING the build, so it lives
     // inside the eDeg anchor's build closure.
-    val eDeg = phase("eDeg-checkpoint")(anchored(stage, s"gr_pr${sfx}_edeg", anchorTag) {
-      val eIn = phase("eIn-checkpoint")((weightCol match {
-        case Some(wc) => edges.select(col("ida"), col("idb"),
-          (col(wc) * WScale).cast("long").as("w"))
-        case None => edges.select(col("ida"), col("idb"))
-      }).localCheckpoint(true))
+    val eDeg = anchored(stage, s"gr_pr${sfx}_edeg", eSrc) {
+      val eIn = eSrc.localCheckpoint(true)
       val wCols = if (weighted) Seq(col("w")) else Seq.empty
       val sym = eIn.select(col("ida").as("a") +: col("idb").as("b") +: wCols: _*)
         .unionByName(
@@ -217,20 +197,22 @@ object Graph {
           .agg(count(lit(1)).as("deg"), sum("w").as("tw"))
         else sym.groupBy("a").agg(count(lit(1)).as("deg"))
       sym.join(deg, "a")
-    })
+    }
     // conn is referenced by EVERY round's rank rebuild (and there is no
     // cross-plan subtree sharing), so without its own anchor the
     // distinct-over-edges would inline once per round.
-    val conn = phase("conn-checkpoint")(anchored(stage, s"gr_pr${sfx}_conn", anchorTag)(
-      eDeg.select(col("a").as("doc_id"), col("deg")).distinct()))
+    val conn = anchored(stage, s"gr_pr${sfx}_conn", eSrc)(
+      eDeg.select(col("a").as("doc_id"), col("deg")).distinct())
     // N is a driver-side count of the NODE table (same documented
     // stats-pass family as the codebook sizing counts); with a corpus
-    // context it is session-memoized — the node table is per-corpus.
-    val n = phase("node-count")(stage match {
+    // context it is session-memoized, keyed like the anchors by the
+    // node frame's plan hash.
+    val n = stage match {
       case Some((s, d)) => graft.SessionMemo.memo(s,
-        s"gr_nodecount|$d")(java.lang.Long.valueOf(nodes.count())).longValue()
+        s"gr_nodecount|$d|${nodes.semanticHash()}")(
+        java.lang.Long.valueOf(nodes.count())).longValue()
       case None => nodes.count()
-    })
+    }
     require(n > 0, "pagerank needs a non-empty node frame")
     val base = Scale / n
     // Join strategy is deliberately LEFT TO CATALYST: with the conn
@@ -297,9 +279,8 @@ object Graph {
     * low-diameter graph never pays for the cap. */
   def bfsDistances(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
       maxHops: Int,
-      stage: Option[(SparkSession, String)] = None,
-      anchorTag: String = ""): DataFrame = {
-    val sym = bfsSymAnchor(edges, stage, anchorTag)
+      stage: Option[(SparkSession, String)] = None): DataFrame = {
+    val sym = bfsSymAnchor(edges, stage)
     var settled = seeds.select(col("doc_id"), lit(0L).as("dist"))
       .distinct().localCheckpoint(true)
     var frontier = settled.select("doc_id")
@@ -350,8 +331,7 @@ object Graph {
     * from the edge set are their own singleton components. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 30,
-      stage: Option[(SparkSession, String)] = None,
-      anchorTag: String = ""): DataFrame = {
+      stage: Option[(SparkSession, String)] = None): DataFrame = {
     def canon(e: DataFrame): DataFrame =
       e.select(greatest(col("a"), col("b")).as("hi"),
           least(col("a"), col("b")).as("lo"))
@@ -381,7 +361,7 @@ object Graph {
       (out, (m("n").asInstanceOf[Long],
         BigDecimal(m("h").asInstanceOf[java.math.BigDecimal])))
     }
-    var e = ccCanonAnchor(edges, stage, anchorTag)
+    var e = ccCanonAnchor(edges, stage)
     var sum0 = checksum(e)
     var round = 0
     var done = false
@@ -426,8 +406,7 @@ object Graph {
     * the simpler ID-ordered form and GraphSpec brute-forces random
     * graphs. Nodes in no triangle are absent (count 0). */
   def triangleCounts(edges: DataFrame,
-      stage: Option[(SparkSession, String)] = None,
-      anchorTag: String = ""): DataFrame = {
+      stage: Option[(SparkSession, String)] = None): DataFrame = {
     val canon = edges.select(col("ida"), col("idb"))
     val deg = canon
       .select(explode(array(col("ida"), col("idb"))).as("id"))
@@ -436,7 +415,7 @@ object Graph {
     // pairs (v, w) can be ordered without re-joining degrees. The
     // oriented list is referenced three times (two wedge sides + the
     // closing semi-join) — checkpoint it.
-    val out = anchored(stage, "gr_tri_out", anchorTag)(canon
+    val out = anchored(stage, "gr_tri_out", canon)(canon
       .join(deg.select(col("id").as("ida"), col("dg").as("da")), "ida")
       .join(deg.select(col("id").as("idb"), col("dg").as("db")), "idb")
       .select(
@@ -473,10 +452,9 @@ object Graph {
     * (doc_id, core_deg) — degree WITHIN the core, >= k by
     * construction. Empty result when no k-core exists. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 100,
-      stage: Option[(SparkSession, String)] = None,
-      anchorTag: String = ""): DataFrame = {
+      stage: Option[(SparkSession, String)] = None): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    var e = kcoreEdgesAnchor(edges, stage, anchorTag)
+    var e = kcoreEdgesAnchor(edges, stage)
     var nPrev = -1L
     var rounds = 0
     var done = false
@@ -538,15 +516,14 @@ object Graph {
     * round references it. Returns (doc_id, community, csize). */
   def labelPropagation(nodes: DataFrame, edges: DataFrame,
       iters: Int,
-      stage: Option[(SparkSession, String)] = None,
-      anchorTag: String = ""): DataFrame = {
+      stage: Option[(SparkSession, String)] = None): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     // The symmetrized neighbor list is the frame EVERY round scans, so
     // it (not the raw edge list) is the anchored artifact.
-    val nb = phase("lpa-edges-checkpoint")(anchored(stage, "gr_lpa_sym", anchorTag) {
+    val nb = anchored(stage, "gr_lpa_sym", edges) {
       val e = edges.select(col("ida"), col("idb")).localCheckpoint(true)
       e.unionByName(e.select(col("idb").as("ida"), col("ida").as("idb")))
-    })
+    }
     var lab = nb.select(col("ida").as("id")).distinct()
       .withColumn("lab", col("id"))
     var i = 0
@@ -731,7 +708,7 @@ object Graph {
       (s, d) =>
         pagerank(Tables.documents(s, d).select("doc_id"),
             graft.ops.TextSim.similarityEdges(s, d), iters = 10,
-            stage = Some((s, d)), anchorTag = "j01")
+            stage = Some((s, d)))
           .select(col("doc_id"), col("deg"),
             round(col("rank_scaled") / 1e9, 6).as("rank"))
           .orderBy(col("rank").desc, col("doc_id"))
@@ -749,8 +726,7 @@ object Graph {
       (s, d) =>
         pagerank(Tables.documents(s, d).select("doc_id"),
             graft.ops.TextSim.similarityEdgesWeighted(s, d), iters = 10,
-            weightCol = Some("jac"), stage = Some((s, d)),
-            anchorTag = "wj")
+            weightCol = Some("jac"), stage = Some((s, d)))
           .select(col("doc_id"), col("deg"),
             round(col("rank_scaled") / 1e9, 6).as("rank"))
           .orderBy(col("rank").desc, col("doc_id"))
@@ -765,7 +741,7 @@ object Graph {
     // peeling; goldens pin the fixture output.
     QuerySpec.sql("q_graph_kcore", kcoreOracleSql(k = 2)) { (s, d) =>
       kCore(graft.ops.TextSim.similarityEdges(s, d, minJac = 0.1), k = 2,
-        stage = Some((s, d)), anchorTag = "j01")
+        stage = Some((s, d)))
     },
 
     // True connected components over the jac >= 0.5 near-dup graph —
@@ -778,7 +754,7 @@ object Graph {
       (s, d) =>
         connectedComponents(Tables.documents(s, d).select("doc_id"),
             graft.ops.TextSim.similarityEdges(s, d, minJac = 0.5),
-            stage = Some((s, d)), anchorTag = "j05")
+            stage = Some((s, d)))
           .orderBy("doc_id")
     },
 
@@ -815,7 +791,7 @@ object Graph {
       bfsDistances(docs.select("doc_id"),
           graft.ops.TextSim.similarityEdges(s, d, minJac = 0.5),
           docs.filter(col("lang") === "en").select("doc_id"),
-          maxHops = 6, stage = Some((s, d)), anchorTag = "j05")
+          maxHops = 6, stage = Some((s, d)))
         .orderBy("doc_id")
     },
 
@@ -831,7 +807,7 @@ object Graph {
     QuerySpec.sql("q_graph_lpa", lpaOracleSql()) { (s, d) =>
       labelPropagation(Tables.documents(s, d).select("doc_id"),
         graft.ops.TextSim.similarityEdges(s, d, minJac = 0.1),
-        iters = LpaRounds, stage = Some((s, d)), anchorTag = "j01")
+        iters = LpaRounds, stage = Some((s, d)))
     },
 
     // Triangle participation per document on the jac >= 0.1 similarity
@@ -866,7 +842,7 @@ object Graph {
         |FROM corners GROUP BY doc_id
         |ORDER BY doc_id""") { (s, d) =>
       triangleCounts(graft.ops.TextSim.similarityEdges(s, d, minJac = 0.1),
-        stage = Some((s, d)), anchorTag = "j01")
+        stage = Some((s, d)))
     }
   )
 }

@@ -166,19 +166,16 @@ object Relational {
       }: _*)
   }
 
-  /** q_scan_csv's fixture tree, built ONCE per (session, dir): the
-    * documents scalar columns as a header'd CSV tree under `clean/`
-    * (Spark's own CSV sink — the write half of CAP-SRC-CSV) plus one
-    * hand-written `dirty/` part carrying, per lang, one good probe
-    * row and two rows whose n_chars is not a BIGINT. Deterministic by
-    * construction (langs sorted, fixed literals); the distinct-lang
-    * collect is bounded by the tiny language set. Swept on JVM exit
-    * like every stage temp dir. */
+  /** q_scan_csv's fixture tree, built ONCE per (session, dir) as the
+    * `csv_stage` stage dir: the documents scalar columns as a header'd
+    * CSV tree under `clean/` (Spark's own CSV sink — the write half of
+    * CAP-SRC-CSV) plus one hand-written `dirty/` part carrying, per
+    * lang, one good probe row and two rows whose n_chars is not a
+    * BIGINT. Deterministic by construction (langs sorted, fixed
+    * literals); the distinct-lang collect is bounded by the tiny
+    * language set. */
   private def csvStage(s: SparkSession, d: String): String =
-    graft.SessionMemo.memo(s, s"csv_stage|$d") {
-      val root = java.nio.file.Files.createTempDirectory("graft_csv_stage")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.Local.rmTree(root.toFile)))
+    graft.StageCache.stageDir(s, d, "csv_stage") { root =>
       Tables.documents(s, d)
         .select("doc_id", "lang", "source", "n_chars")
         .coalesce(2)
@@ -194,8 +191,7 @@ object Relational {
       java.nio.file.Files.createDirectories(root.resolve("dirty"))
       java.nio.file.Files.writeString(
         root.resolve("dirty").resolve("part-dirty.csv"), dirty.toString)
-      root.toString
-    }
+    }.toString
 
   val specs: Seq[QuerySpec] = Seq(
 

@@ -1267,8 +1267,9 @@ object Sketches {
     require(name.nonEmpty,
       "the shared registry index is immutable; compact a named instance")
     // Snapshot the tombstone frame BEFORE clearing its stage: parquet
-    // files are immutable and dirs live until JVM exit, so the rewrite
-    // below reads a stable set even as the stage swaps to empty.
+    // files are immutable and dirs live until the context stops, so
+    // the rewrite below reads a stable set even as the stage swaps to
+    // empty.
     val t = tombstones(s, d, DocTombs, name)
     graft.StageCache.rewrite(s, d, bandStage(name))(
       minhashBands(Tables.documents(s, d).select("doc_id", "text"),

@@ -2,12 +2,14 @@ package graft
 
 import java.lang.reflect.Modifier
 import scala.concurrent.{Await, Future}
+import scala.jdk.CollectionConverters._
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench's chain list and shape listener, without building any stage. */
+/** Bench's chain list and shape listener, and a scan of the main
+  * sources, without building any stage. */
 class BenchSpec extends AnyFunSuite {
 
   test("Bench.Chains lists every public ops warm entry point once") {
@@ -47,5 +49,18 @@ class BenchSpec extends AnyFunSuite {
       }
       assert(shapes("c") == Bench.Shape(0, 0, 0))
     } finally sc.removeSparkListener(shapes)
+  }
+
+  test("temp-dir ownership and session keying live in one module") {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val sources = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toVector finally files.close()
+    assert(sources.nonEmpty)
+    def filesWith(word: String) = sources.flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      Seq.fill(word.r.findAllMatchIn(text).size)(f.getFileName.toString)
+    }
+    assert(filesWith("addShutdownHook") === Seq("StageCache.scala"))
+    assert(filesWith("identityHashCode").isEmpty)
   }
 }

@@ -93,6 +93,24 @@ class GraphSpec extends AnyFunSuite {
       "skewed weights changed no rank")
   }
 
+  test("stage-context callers with different inputs each read their own anchors") {
+    import spark.implicits._
+    val ctx = Some((spark, "graphspec-untagged-inputs"))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val nodes = (1L to 8L).toDF("doc_id")
+    for (edges <- Seq(Seq((1L, 2L), (2L, 3L), (5L, 6L)),
+        Seq((1L, 5L), (7L, 8L), (3L, 4L))).map(_.toDF("ida", "idb")))
+      assert(rows(ops.Graph.connectedComponents(nodes, edges, stage = ctx)) ===
+        rows(ops.Graph.connectedComponents(nodes, edges)))
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L)).toDF("ida", "idb")
+    for (n <- Seq(8L, 20L)) {
+      val ns = (1L to n).toDF("doc_id")
+      assert(rows(ops.Graph.pagerank(ns, edges, iters = 3, stage = ctx)) ===
+        rows(ops.Graph.pagerank(ns, edges, iters = 3)), s"$n nodes")
+    }
+  }
+
   test("bit-stable under a different edge partitioning") {
     val nodes = Tables.documents(spark, sf).select("doc_id")
     val e = ops.TextSim.similarityEdges(spark, sf)

@@ -25,6 +25,23 @@ object Bench {
       "mask" -> TextSim.warmMaskStage _)
   }
 
+  /** Does query `n` read a stage some chain of [[Chains]] builds?
+    * Conservative: a prefix family warms for every member, even one
+    * that needs none of the stages. BenchSpec pins it against the
+    * stage-dir column of perfbench/expected/sf0.01.tsv. */
+  private[graft] def readsStages(n: String): Boolean =
+    Seq("q_dedup_", "q_sim_ann_", "q_graph_", "q_embed_", "q_quality_")
+      .exists(n.startsWith) || StageReaders(n)
+
+  private val StageReaders = Set(
+    "q_curate", "q_source_overlap",
+    "q_text_tfidf", "q_text_bm25", "q_sim_hybrid_rrf", "q_text_unigram_nll",
+    "q_text_ppl_bucket", "q_text_topterms_sketch", "q_text_bigram_nll",
+    "q_text_pmi", "q_text_keyphrase", "q_text_boilerplate",
+    "q_text_decontaminate", "q_text_decontam_bloom",
+    "q_mix_split_dedup", "q_mix_split_neardup", "q_mix_decontam_split",
+    "q_mix_weights", "q_mix_temperature", "q_mix_epochs")
+
   /** Spark local property naming the work a thread submits: the chain
     * name during the stage build, `query#run` in the timed loop. */
   private[graft] val LabelKey = "graft.bench.label"
@@ -138,18 +155,9 @@ object Bench {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.mkString(", ")}")
     }
-    // Only the dedup/ANN/curation families read the stage caches; an
-    // allowlist touching none of them skips the warm-up entirely so
-    // profiling one scan query doesn't pay the whole index build.
-    // (Conservative prefix test: warms for any q_dedup_*/q_sim_ann_*
-    // name even when that one query doesn't strictly need every stage.)
-    val needsStages = only.forall(_.exists(n =>
-      n.startsWith("q_dedup_") || n.startsWith("q_sim_ann_") ||
-        n.startsWith("q_graph_") || n.startsWith("q_embed_") ||
-        n.startsWith("q_quality_") ||
-        n == "q_curate" || n == "q_text_bigram_nll" || n == "q_text_pmi" ||
-        n == "q_text_decontaminate" || n == "q_text_decontam_bloom" ||
-        n == "q_mix_decontam_split"))
+    // An allowlist touching no stage reader skips the warm-up entirely
+    // so profiling one scan query doesn't pay the whole index build.
+    val needsStages = only.forall(_.exists(readsStages))
     // Shared stage-cache builds (gram postings -> pair stats -> edge
     // list; IVF codebook -> assignments -> PQ codebook/codes) run ONCE
     // here, timed as their own line: they are one-time per-session

@@ -255,9 +255,8 @@ object Cli {
     * discipline): a second invocation over an unchanged corpus must
     * say `loaded`. `cluster-retrain` is the sanctioned recovery after
     * an in-place corpus refresh or a tripped q_embed_drift alarm.
-    * Dispatches on the resolved STATE regime (r16 verdict #7): past
-    * DriverStateMaxK — or at a forced `spark.graft.kmeans.state=frame`
-    * — the verbs are the FRAME store's
+    * Dispatches on the STATE regime of k (r16 verdict #7): past
+    * DriverStateMaxK the verbs are the FRAME store's
     * ([[ops.Clustering.persistentFrameCentroids]] /
     * [[ops.Clustering.retrainFrameCentroids]], parquet centroid
     * table, `state=frame` in the summary line) instead of inheriting
@@ -265,12 +264,17 @@ object Cli {
     * ([[ops.Clustering.persistentCentroidHistory]] /
     * [[ops.Clustering.retrainCentroids]]). */
   def clusterTrain(spark: SparkSession, sfDir: String, storeDir: String,
-      k: Int, retrain: Boolean = false): String = {
+      k: Int, retrain: Boolean = false): String =
+    clusterTrain(spark, sfDir, storeDir, k, retrain,
+      ops.Clustering.frameState(k))
+
+  /** [[clusterTrain]] in an explicit state regime — the seam the tests
+    * reach the frame store through at fixture-sized k. */
+  private[graft] def clusterTrain(spark: SparkSession, sfDir: String,
+      storeDir: String, k: Int, retrain: Boolean,
+      frame: Boolean): String = {
     val c0 = ops.Clustering.trainCounter.get()
-    if (ops.Clustering.stateOf(spark, k) == "frame") {
-      // the estep-exact class-conflict refusal fires inside the frame
-      // machinery itself (frameCentroids / the store verbs) — no
-      // per-entry-point check to forget
+    if (frame) {
       val cents =
         if (retrain)
           ops.Clustering.retrainFrameCentroids(spark, sfDir, k, storeDir)
@@ -303,12 +307,17 @@ object Cli {
     * `trained|loaded` word is the same work observable (a second
     * process over an unchanged corpus must say `loaded` — pinned). */
   def clusterAssign(spark: SparkSession, sfDir: String, storeDir: String,
-      outDir: String, k: Int): String = {
+      outDir: String, k: Int): String =
+    clusterAssign(spark, sfDir, storeDir, outDir, k,
+      ops.Clustering.frameState(k))
+
+  /** [[clusterAssign]] in an explicit state regime (see the
+    * [[clusterTrain]] seam). */
+  private[graft] def clusterAssign(spark: SparkSession, sfDir: String,
+      storeDir: String, outDir: String, k: Int, frame: Boolean): String = {
     val c0 = ops.Clustering.trainCounter.get()
-    val state = ops.Clustering.stateOf(spark, k)
     val df =
-      if (state == "frame") {
-        // class-conflict refusal fires inside the frame machinery;
+      if (frame) {
         // the load seeds the artifact pointer, so the assignment's
         // frameCentroids read serves the store, never a training
         ops.Clustering.persistentFrameCentroids(spark, sfDir, k, storeDir)
@@ -322,6 +331,7 @@ object Cli {
     writeTsv(spark, df, outDir)
     val did = if (ops.Clustering.trainCounter.get() > c0) "trained"
               else "loaded"
+    val state = if (frame) "frame" else "driver"
     s"$did k=$k state=$state store=$storeDir out=$outDir"
   }
 

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 /** Routed-E-step operating curve (the [[AnnCurve]] discipline applied
   * to the two-level k-means assignment): for one corpus and one K,
   * measure routed-vs-flat assignment agreement and distance-eval work
-  * across the probe knob — the curve a pipeline reads to pick
-  * `spark.graft.kmeans.rprobe`, exactly like recall/nprobe for IVF.
+  * across the probe count P — the curve behind the K-adaptive
+  * default (Clustering.adaptiveProbes), like recall/nprobe for IVF.
   * Isotropic corpora are routing's WORST case (no similarity gap, so
   * every branch boundary is contested); clustered real corpora sit
   * above this curve.
@@ -31,7 +31,7 @@ object RouteCurve {
       s"trainMode must be join|routed, got $trainMode")
     // "auto" as a probe token resolves to the K-adaptive default
     // (Clustering.adaptiveProbes) so the curve marks the point the
-    // production knob actually lands on at this K.
+    // routed paths actually use at this K.
     val probeArgs = if (args.length > 3) args.drop(3).toSeq
                     else Seq("1", "2", "3", "4", "6", "8", "auto")
     val probes = probeArgs.map {
@@ -58,17 +58,17 @@ object RouteCurve {
     }
     val b = ops.Clustering.base(s, dir)
     val n = b.count()
-    s.conf.set("spark.graft.kmeans.estep", trainMode)
-    val cents = ops.Clustering.centroids(s, dir, k)
+    val cents = ops.Clustering.trainHistory(b, k, ops.Clustering.Iters,
+      if (trainMode == "join") ops.Clustering.assignJoin
+      else ops.Clustering.assignRouted).last
     val flat = ops.Clustering.assignJoin(b, cents)
       .select(col("vec_id"), col("cid").as("cf")).localCheckpoint(true)
     for (p <- probes) {
-      s.conf.set("spark.graft.kmeans.rprobe", p.toString)
-      val routed = ops.Clustering.assignRouted(b, cents)
+      val routed = ops.Clustering.assignRouted(b, cents, p)
         .select(col("vec_id"), col("cid").as("cr"))
       val agree = flat.join(routed, "vec_id")
         .filter(col("cf") === col("cr")).count()
-      val evals = ops.Clustering.routedEstepEvals(b, cents)
+      val evals = ops.Clustering.routedEstepEvals(b, cents, p)
       println(s"""{"dir":"$dir","k":$k,"train":"$trainMode","rprobe":$p,""" +
         s""""p_auto":${ops.Clustering.adaptiveProbes(k)},""" +
         f""""n":$n,"agree":${agree.toDouble / n}%.4f,"evals":$evals,""" +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Measured scaling curve (round-11 verdict task #1): runs the heavy
@@ -123,12 +123,12 @@ object ScaleBench {
     // in-cluster pair bound Σ n_c(n_c−1)/2 must then stay ~linear in n
     // (≈ n²/2K balanced-cluster algebra), unlike the √n-cell IVF
     // second moment above, whose designed law is n^1.5. Training runs
-    // the ROUTED E-step (forced, r15) — the path `auto` takes in this
-    // regime past RoutedMinK, and the fix for the r14-flagged n×K ≈
-    // n²/125 training cost; at K ≤ LiteralMaxK (the ×1 tier) routed
-    // falls back to the literal path by construction. The K-row cell
-    // table is checkpointed so the three counts don't re-run the
-    // E-step.
+    // the ROUTED E-step (passed to trainHistory, r15) — the path the K
+    // dispatch takes in this regime past RoutedMinK, and the fix for
+    // the r14-flagged n×K ≈ n²/125 training cost; at K ≤ LiteralMaxK
+    // (the ×1 tier) routed falls back to the literal path by
+    // construction. The K-row cell table is checkpointed so the three
+    // counts don't re-run the E-step.
     // The kmeans/routed chain stops at the x100 decade (LOUD cap, not
     // silent: the artifact simply lacks the kmeans_*/estep_* keys and
     // this note is the contract): with K = n/125 the single
@@ -144,53 +144,45 @@ object ScaleBench {
       return (walls.toSeq, counts.toSeq)
     }
     val kmK = math.max(2, (nVec / 125).toInt)
-    val estepPrev = s.conf.get("spark.graft.kmeans.estep", "auto")
-    s.conf.set("spark.graft.kmeans.estep", "routed")
-    try {
-      val kmCells = ops.Clustering.kmeansAssign(s, d, kmK)
-        .groupBy("cid").agg(count(lit(1)).as("n")).localCheckpoint(true)
-      cnt("kmeans_cells")(kmCells.count())
-      cnt("kmeans_max_cell")(kmCells.select(max("n")).head().getLong(0))
-      cnt("kmeans_pair_work")(kmCells
-        .select(sum((col("n") * (col("n") - 1) / 2).cast("long")))
-        .head().getLong(0))
-      // The r15 E-step work chain: flat evaluations are exactly n×K
-      // (the r14-flagged quadratic, recorded arithmetically); the
-      // routed count is MEASURED (n·√K routing + per-vector probed
-      // branch sizes) and must grow ~n^1.5 across the decades. The
-      // agreement count (routed cid == exact flat cid, one flat
-      // assignment pass — the chain's only remaining n×K job) measures
-      // the approximation the way LSH recall is measured.
-      val kmBase = ops.Clustering.base(s, d)
-      val kmCents = ops.Clustering.centroids(s, d, kmK)
-      cnt("estep_evals_flat")(nVec * kmK)
-      // Two routed measurements per tier (r16): the FIXED-P3 chain
-      // keeps the pure two-level cost law on record (designed n^1.5
-      // when K ∝ n), and the ADAPTIVE-default chain (rprobe=auto,
-      // P = ⌈K^¼⌉) is the production configuration — it spends
-      // ~n^1.75 to hold assignment agreement scale-stable instead of
-      // letting a fixed probe count decay with K (r15 verdict #1).
-      // One flat assignment pass serves both agreement counts.
-      val rprobePrev = s.conf.get("spark.graft.kmeans.rprobe", "auto")
-      val flatA = ops.Clustering.assignJoin(kmBase, kmCents)
-        .select(col("vec_id"), col("cid").as("cf")).localCheckpoint(true)
-      def agreeOf(routed: org.apache.spark.sql.DataFrame): Long =
-        flatA.join(routed.select(col("vec_id"), col("cid").as("cr")),
-          "vec_id").filter(col("cf") === col("cr")).count()
-      try {
-        s.conf.set("spark.graft.kmeans.rprobe", "3")
-        cnt("estep_evals_routed")(
-          ops.Clustering.routedEstepEvals(kmBase, kmCents))
-        cnt("estep_routed_agree")(
-          agreeOf(ops.Clustering.assignRouted(kmBase, kmCents)))
-        s.conf.set("spark.graft.kmeans.rprobe", "auto")
-        cnt("estep_evals_routed_auto")(
-          ops.Clustering.routedEstepEvals(kmBase, kmCents))
-        cnt("estep_routed_agree_auto")(
-          agreeOf(ops.Clustering.assignRouted(kmBase, kmCents)))
-        cnt("estep_p_auto")(ops.Clustering.adaptiveProbes(kmK).toLong)
-      } finally s.conf.set("spark.graft.kmeans.rprobe", rprobePrev)
-    } finally s.conf.set("spark.graft.kmeans.estep", estepPrev)
+    val kmBase = ops.Clustering.base(s, d)
+    val kmCents = ops.Clustering.trainHistory(kmBase, kmK,
+      ops.Clustering.Iters, ops.Clustering.assignRouted).last
+    val kmCells = ops.Clustering.assignRouted(kmBase, kmCents)
+      .groupBy("cid").agg(count(lit(1)).as("n")).localCheckpoint(true)
+    cnt("kmeans_cells")(kmCells.count())
+    cnt("kmeans_max_cell")(kmCells.select(max("n")).head().getLong(0))
+    cnt("kmeans_pair_work")(kmCells
+      .select(sum((col("n") * (col("n") - 1) / 2).cast("long")))
+      .head().getLong(0))
+    // The r15 E-step work chain: flat evaluations are exactly n×K
+    // (the r14-flagged quadratic, recorded arithmetically); the
+    // routed count is MEASURED (n·√K routing + per-vector probed
+    // branch sizes) and must grow ~n^1.5 across the decades. The
+    // agreement count (routed cid == exact flat cid, one flat
+    // assignment pass — the chain's only remaining n×K job) measures
+    // the approximation the way LSH recall is measured.
+    cnt("estep_evals_flat")(nVec * kmK)
+    // Two routed measurements per tier (r16): the FIXED-P3 chain
+    // keeps the pure two-level cost law on record (designed n^1.5
+    // when K ∝ n), and the ADAPTIVE chain (P = ⌈K^¼⌉, the probe count
+    // every routed path uses) is the production configuration — it
+    // spends ~n^1.75 to hold assignment agreement scale-stable instead
+    // of letting a fixed probe count decay with K (r15 verdict #1).
+    // One flat assignment pass serves both agreement counts.
+    val flatA = ops.Clustering.assignJoin(kmBase, kmCents)
+      .select(col("vec_id"), col("cid").as("cf")).localCheckpoint(true)
+    def agreeOf(routed: DataFrame): Long =
+      flatA.join(routed.select(col("vec_id"), col("cid").as("cr")),
+        "vec_id").filter(col("cf") === col("cr")).count()
+    cnt("estep_evals_routed")(
+      ops.Clustering.routedEstepEvals(kmBase, kmCents, 3))
+    cnt("estep_routed_agree")(
+      agreeOf(ops.Clustering.assignRouted(kmBase, kmCents, 3)))
+    cnt("estep_evals_routed_auto")(
+      ops.Clustering.routedEstepEvals(kmBase, kmCents))
+    cnt("estep_routed_agree_auto")(
+      agreeOf(ops.Clustering.assignRouted(kmBase, kmCents)))
+    cnt("estep_p_auto")(ops.Clustering.adaptiveProbes(kmK).toLong)
 
     // the measured queries — min-of-2, like Bench: single-JVM walls at
     // this scale carry large session-state variance (SCALE.md

@@ -77,10 +77,12 @@ import org.apache.spark.sql.functions._
   *     invariant, with per-row dist2 ≥ the exact argmin by
   *     construction. Agreement vs the flat paths is MEASURED like LSH
   *     recall (ClusteringSpec / ScaleSpec pins), not assumed.
-  *   `spark.graft.kmeans.estep` ∈ auto|literal|join|routed forces a
-  *   path (tests, ops); auto dispatches literal ≤ [[LiteralMaxK]] <
-  *   join ≤ [[RoutedMinK]] < routed — exact through mid K, routed in
-  *   the regime where exact flat assignment is the scale defect.
+  *   K alone picks the path: literal ≤ [[LiteralMaxK]] < join ≤
+  *   [[RoutedMinK]] < routed — exact through mid K, routed in the
+  *   regime where exact flat assignment is the scale defect. Likewise
+  *   the centroid state ([[frameState]]) and the routing probe count
+  *   ([[effProbes]]) are pure functions of K; there is no session
+  *   knob for any of the three.
   *
   * 100 TB shape: per iteration the M-step is one posexplode +
   * groupBy(cid, idx) — map-side combinable, shuffle output bounded by
@@ -128,33 +130,26 @@ object Clustering {
     * own K — and diverges from the pinned oracle, exactly like a
     * non-default `spark.graft.bpe.merges`. */
   private[ops] val K = 8
-  private[ops] val Iters = 4
-  /** Largest K routed to the literal E-step under `auto`: past a few
+  private[graft] val Iters = 4
+  /** Largest K [[assign]] serves with the literal E-step: past a few
     * hundred struct literals the least() expression tree dominates
     * compile time, so the broadcast-join path takes over well before. */
   private[graft] val LiteralMaxK = 64
 
-  /** Largest K the `auto` dispatch serves with the EXACT join E-step;
+  /** Largest K the dispatch serves with the EXACT join E-step;
     * above it the two-level routed path takes over. 1024 keeps every
     * oracle/golden K (8–16) and any plausible hand-picked K exact,
     * while the K∝n SemDeDup regime (K ~ n/125 — thousands to millions
     * of clusters) lands on the path whose work is ~n√K instead of the
     * n×K ≈ n²/125 the r14 verdict flagged. Callers needing exact
-    * assignment at larger K force `spark.graft.kmeans.estep=join` and
-    * accept the quadratic. */
+    * assignment at larger K call [[assignJoin]] directly and accept
+    * the quadratic. */
   private[graft] val RoutedMinK = 1024
 
   private[graft] def kOf(s: SparkSession): Int = {
     val k = s.conf.get("spark.graft.kmeans.k", K.toString).toInt
     require(k >= 1, s"spark.graft.kmeans.k must be >= 1, got $k")
     k
-  }
-
-  private def estepOf(s: SparkSession): String = {
-    val m = s.conf.get("spark.graft.kmeans.estep", "auto")
-    require(Set("auto", "literal", "join", "routed")(m),
-      s"spark.graft.kmeans.estep must be auto|literal|join|routed, got $m")
-    m
   }
 
   /** The per-coordinate quantization map — exposed so the streaming
@@ -328,9 +323,8 @@ object Clustering {
     * centroid sits just across a branch boundary — on the isotropic
     * fixture that costs ~1/3 of assignments. Probing the P nearest
     * branches and taking the exact argmin across their members
-    * recovers most of it at P× the in-branch work.
-    * Session knob `spark.graft.kmeans.rprobe`: an explicit integer
-    * pins P; the default `auto` derives it from K via
+    * recovers most of it at P× the in-branch work. The probe count
+    * actually used is [[effProbes]], derived from K via
     * [[adaptiveProbes]] so approximation QUALITY is scale-stable. */
   private[graft] val RouteProbes = 3
 
@@ -351,12 +345,14 @@ object Clustering {
     math.max(RouteProbes,
       math.ceil(math.sqrt(routeCount(k).toDouble)).toInt)
 
-  private def rprobeOf(s: SparkSession, k: Int): Int = {
-    val v = s.conf.get("spark.graft.kmeans.rprobe", "auto")
-    val p = if (v == "auto") adaptiveProbes(k) else v.toInt
-    require(p >= 1, s"spark.graft.kmeans.rprobe must be >= 1, got $v")
-    p
-  }
+  /** The probe count every routed and frame path uses at this k:
+    * [[adaptiveProbes]] clamped at routeCount(k), since every P ≥
+    * routeCount(k) probes all branches and trains identically. Also
+    * the `_p<P>` component of the routed memo/store keys and the frame
+    * stage names, so it stays a pure function of k — never of the
+    * data (not the post-compaction branch count). */
+  private[graft] def effProbes(k: Int): Int =
+    math.min(adaptiveProbes(k), routeCount(k))
 
   /** Stage 1 of the routed E-step: each row of `keyed` exploded to its
     * `p` nearest coarse branches (`_rt` column, ≤ p rows per input).
@@ -430,7 +426,14 @@ object Clustering {
     * [[LiteralMaxK]] falls back to the literal path: a hierarchy under
     * 64 centroids costs more in routing than it saves. */
   private[graft] def assignRouted(b: DataFrame,
-      cents: Array[Array[Long]]): DataFrame = {
+      cents: Array[Array[Long]]): DataFrame =
+    assignRouted(b, cents, effProbes(cents.length))
+
+  /** [[assignRouted]] at an explicit probe count `p` — the seam the
+    * operating-curve measurements (RouteCurve, ScaleBench) vary P
+    * through. */
+  private[graft] def assignRouted(b: DataFrame,
+      cents: Array[Array[Long]], p: Int): DataFrame = {
     if (cents.length <= LiteralMaxK) return assignLiteral(b, cents)
     val s = b.sparkSession
     val (coarse, memberOf) = coarsen(cents, routeCount(cents.length))
@@ -446,7 +449,7 @@ object Clustering {
     // stay distinct through the argmin, the id never reaches output
     val keyed = guardXq(b, "assignRouted")
       .withColumn("_rid", monotonically_increasing_id())
-    val probed = routeProbe(keyed, coarse, rprobeOf(s, cents.length))
+    val probed = routeProbe(keyed, coarse, p)
     argminOverMembers(probed, membersDf(s, cents, memberOf),
       b.columns.toIndexedSeq)
   }
@@ -473,9 +476,14 @@ object Clustering {
     * it re-runs coarsen + the n·r probe pass rather than entangling
     * [[assignRouted]]'s API with count plumbing — one extra ~n√K
     * routing job per ARTIFACT REFRESH (seconds at the ×100 tier,
-    * never on a query path). */
+    * never on a query path). `p` is the probe count, as in
+    * [[assignRouted]]. */
   private[graft] def routedEstepEvals(b: DataFrame,
-      cents: Array[Array[Long]]): Long = {
+      cents: Array[Array[Long]]): Long =
+    routedEstepEvals(b, cents, effProbes(cents.length))
+
+  private[graft] def routedEstepEvals(b: DataFrame,
+      cents: Array[Array[Long]], p: Int): Long = {
     val n = b.count()
     val k = cents.length
     if (k <= LiteralMaxK) return n * k
@@ -486,7 +494,7 @@ object Clustering {
       .map { case (rid, a) => (rid.toLong, a.length.toLong) }
       .toDF("_rt", "_bs")
     val keyed = b.withColumn("_rid", monotonically_increasing_id())
-    val branchSum = routeProbe(keyed, coarse, rprobeOf(s, cents.length))
+    val branchSum = routeProbe(keyed, coarse, p)
       .join(broadcast(sizes), "_rt")
       .agg(coalesce(sum("_bs"), lit(0L))).head().getLong(0)
     n * coarse.length + branchSum
@@ -512,39 +520,12 @@ object Clustering {
   /** Largest K the driver-array training paths accept: K×dim longs ≈
     * 50 MB at this bound — fine on a driver, and the cheapest spelling
     * at test/oracle K. Beyond it [[trainHistory]] REFUSES (fail-loud
-    * discipline) and `auto` state dispatch serves the frame path. */
+    * discipline) and [[frameState]] serves the frame path. */
   private[graft] val DriverStateMaxK = 131072
 
-  /** Did this session FORCE an exact E-step class? ONE definition
-    * (r17 second review: the set was duplicated between the dispatch
-    * and the refusal — a future exact-class knob value added to one
-    * but not the other would make them silently disagree). */
-  private def exactClassForced(s: SparkSession): Boolean =
-    Set("literal", "join")(estepOf(s))
-
-  /** The estep-exact vs frame-state contradiction, refused in ONE
-    * place: the frame machinery routes (approximate class), so a
-    * session that FORCED an exact E-step class must never be served
-    * by it — neither by [[kmeansAssign]]'s dispatch nor by the CLI
-    * verbs' frame branches (r17 review #1: the CLI bypassed the
-    * kmeansAssign-local require and silently trained/assigned the
-    * routed class). */
-  private[graft] def requireFrameServesClass(s: SparkSession): Unit =
-    require(!exactClassForced(s),
-      s"conflicting knobs: spark.graft.kmeans.estep=${estepOf(s)} " +
-        "forces an EXACT assignment class while the resolved state " +
-        "regime is frame (the routed machinery), which cannot serve " +
-        "it — drop one of the two knobs")
-
-  /** Session knob `spark.graft.kmeans.state`: driver | frame | auto
-    * (auto = frame past [[DriverStateMaxK]], driver below). */
-  private[graft] def stateOf(s: SparkSession, k: Int): String = {
-    val m = s.conf.get("spark.graft.kmeans.state", "auto")
-    require(Set("auto", "driver", "frame")(m),
-      s"spark.graft.kmeans.state must be auto|driver|frame, got $m")
-    if (m == "auto") { if (k > DriverStateMaxK) "frame" else "driver" }
-    else m
-  }
+  /** Does K put the centroid state in a frame (past
+    * [[DriverStateMaxK]]) rather than a driver array? */
+  private[graft] def frameState(k: Int): Boolean = k > DriverStateMaxK
 
   /** Driver-collected centroid-state rows this JVM (seeds + M-step
     * collects + coarse-level collects) — the frame path's scale claim
@@ -646,13 +627,12 @@ object Clustering {
     * oracle-checked frame query rides). */
   private[graft] def assignFrame(b: DataFrame, cents: DataFrame,
       k: Int): DataFrame = {
-    val s = b.sparkSession
     val (coarse, memberOf) = coarsenDf(cents, routeCount(k))
     val members = cents.join(memberOf, "cid")
       .select(col("_rt"), col("cid").as("_ccid"), col("cq").as("_cq"))
     val keyed = guardXq(b, "assignFrame")
       .withColumn("_rid", monotonically_increasing_id())
-    val probed = routeProbe(keyed, coarse, rprobeOf(s, k))
+    val probed = routeProbe(keyed, coarse, effProbes(k))
     argminOverMembers(probed, members, b.columns.toIndexedSeq)
   }
 
@@ -667,8 +647,8 @@ object Clustering {
           "Clustering.base / Clustering.quantize")).isNull, col("xq")))
 
   /** The frame scorer's routing state, derived ONCE per (session,
-    * dir, k, resolved probes) and re-served on every later scorer
-    * request (r17 review: a stream-verb re-invocation — the
+    * dir, k) and re-served on every later scorer request (r17
+    * review: a stream-verb re-invocation — the
     * nothing-new AvailableNow resume — must not re-pay the O(K^1.5)
     * distributed coarsening). Placement respects the SessionMemo
     * plain-data contract: the coarse level is a √K×dim long array in
@@ -678,7 +658,7 @@ object Clustering {
     * dropped together by [[rebuildAndInvalidate]]. */
   private def frameRouting(s: SparkSession, d: String,
       k: Int): (Array[Array[Long]], DataFrame) = {
-    val p = effProbes(s, k)
+    val p = effProbes(k)
     val membersStage = s"kmeans_frame_members_k${k}_p$p"
     def buildMembers(memberOf: DataFrame): DataFrame =
       frameCentroids(s, d, k).join(memberOf, "cid")
@@ -710,12 +690,8 @@ object Clustering {
     * row-for-row). */
   private[graft] def frameScorer(s: SparkSession, d: String,
       k: Int): DataFrame => DataFrame = {
-    // refuse BEFORE the memo peek: warm routing state from an earlier
-    // (unconflicted) call must not let a later exact-forced session
-    // be served the approximate class
-    requireFrameServesClass(s)
     val (coarse, members) = frameRouting(s, d, k)
-    val p = rprobeOf(s, k)
+    val p = effProbes(k)
     (b: DataFrame) => {
       val keyed = guardXq(b, "frameScorer")
         .withColumn("_rid", monotonically_increasing_id())
@@ -787,7 +763,7 @@ object Clustering {
     * centroids as a (cid, cq) DataFrame end-to-end — identical seeds
     * (k smallest (md5(vec_id), vec_id)), identical integer E/M
     * arithmetic, so the result is BIT-IDENTICAL to the driver-array
-    * routed path at the same knobs (pinned). Each iteration
+    * routed path at the same K (pinned). Each iteration
     * localCheckpoints the K-row centroid frame (the Graph.scala
     * fixed-round discipline): lineage stays flat across iterations
     * and the frame's blocks live on executors, never the driver. */
@@ -849,12 +825,11 @@ object Clustering {
   private def frameArtKey(d: String, k: Int, p: Int): String =
     s"kmeans_frame_art|$d|k$k|p$p"
 
-  /** Frame-state centroids per (session, dir, k, resolved probes),
-    * materialized via the stage cache — the frame analogue of
-    * [[centroidHistory]]'s memo (and of the persistent store: the
-    * materialization IS a parquet table a 100 TB pipeline would
-    * maintain). The probe count is in the key for the same reason it
-    * is in [[modeKey]] (r16 review #2): frame training routes, so its
+  /** Frame-state centroids per (session, dir, k), materialized via
+    * the stage cache — the frame analogue of [[centroidHistory]]'s
+    * memo (and of the persistent store: the materialization IS a
+    * parquet table a 100 TB pipeline would maintain). The stage name
+    * carries [[effProbes]] because frame training routes, so its
     * result depends on P. A loaded store artifact (the pointer memo)
     * takes precedence — then nothing here trains at all. The build
     * anchors the corpus fingerprint AT TRAINING TIME, like
@@ -863,17 +838,10 @@ object Clustering {
     * and poison the frame store. */
   private[graft] def frameCentroids(s: SparkSession, d: String,
       k: Int): DataFrame = {
-    // the never-silently-approximate refusal lives HERE, inside the
-    // machinery every frame-serving entry point flows through
-    // (kmeansAssignFrame, the stores, the CLI verbs, the stream twin)
-    // — per-entry-point checks proved forgettable (r17 review: the
-    // new stream verb had bypassed them)
-    requireFrameServesClass(s)
-    graft.SessionMemo.peek[String](s,
-        frameArtKey(d, k, effProbes(s, k))) match {
+    graft.SessionMemo.peek[String](s, frameArtKey(d, k, effProbes(k))) match {
       case Some(path) => s.read.parquet(path)
       case None =>
-        StageCache.memoized(s, d, s"kmeans_frame_k${k}_p${effProbes(s, k)}") {
+        StageCache.memoized(s, d, s"kmeans_frame_k${k}_p${effProbes(k)}") {
           graft.SessionMemo.memo(s, s"kmeans_fp|$d")(
             java.lang.Long.valueOf(corpusFingerprint(s, d)))
           trainFrame(base(s, d), k, Iters)
@@ -883,7 +851,7 @@ object Clustering {
 
   /** PUBLIC OPERATOR (frame state): per-vector assignment at k with
     * centroid state distributed end-to-end — the far-K twin of
-    * [[kmeansAssign]]. At default knobs and tiny K the result is
+    * [[kmeansAssign]]. At tiny K the result is
     * bit-identical to the exact paths (all branches probed — see
     * [[assignFrame]]), which is what the oracle checks; past
     * [[DriverStateMaxK]] this is the ONLY path that does not grow
@@ -909,63 +877,31 @@ object Clustering {
     ()
   }
 
-  /** E-step dispatch: knob override, else by K — exact paths through
-    * [[RoutedMinK]], the two-level routed path in the K∝n regime. */
+  /** E-step dispatch by K — exact paths through [[RoutedMinK]], the
+    * two-level routed path in the K∝n regime. */
   private[graft] def assign(b: DataFrame,
       cents: Array[Array[Long]]): DataFrame =
-    estepOf(b.sparkSession) match {
-      case "literal" => assignLiteral(b, cents)
-      case "join"    => assignJoin(b, cents)
-      case "routed"  => assignRouted(b, cents)
-      case _ if cents.length <= LiteralMaxK => assignLiteral(b, cents)
-      case _ if cents.length <= RoutedMinK  => assignJoin(b, cents)
-      case _         => assignRouted(b, cents)
-    }
+    if (cents.length <= LiteralMaxK) assignLiteral(b, cents)
+    else if (cents.length <= RoutedMinK) assignJoin(b, cents)
+    else assignRouted(b, cents)
 
-  /** The RESOLVED training-result class of the session's E-step knob
-    * at this k — the memo/store key component. "exact" covers literal,
-    * join, AND auto below [[RoutedMinK]]: those paths are bit-identical
-    * by pin, so sharing one memo entry between them is sound and
-    * avoids duplicate trainings (r15 review #3 — a forced 'routed'
-    * session and an 'auto' session past RoutedMinK likewise share).
-    * The routed class carries the RESOLVED probe count (r16 review
-    * #2): routed-trained centroids depend on P — with the default now
-    * K-adaptive, a P3-pinned session and an auto session at large K
-    * train DIFFERENT histories and must never serve each other's memo
-    * or store artifact (this also quietly retires every pre-r16
-    * 'routed' store artifact, trained at the old fixed default, whose
-    * training r16 would not reproduce). */
-  private[graft] def modeKey(s: SparkSession, k: Int): String =
-    estepOf(s) match {
-      // forced routed at k ≤ LiteralMaxK falls back to the literal
-      // path inside assignRouted, so the trained history is the exact
-      // class's — same key, no duplicate training/artifact
-      case "routed" if k > LiteralMaxK => s"routed_p${effProbes(s, k)}"
-      case "auto" if k > RoutedMinK    => s"routed_p${effProbes(s, k)}"
-      case _                           => "exact"
-    }
-
-  /** The EFFECTIVE probe count at this k — the key component: every
-    * P ≥ routeCount(k) probes all branches and trains identically, so
-    * keying on the raw knob would store duplicate content-identical
-    * artifacts for rprobe=50 vs 60 (r16 review). Clamped at
-    * routeCount(k), not the post-compaction branch count, so the key
-    * stays a pure function of (conf, k) — never of the data. */
-  private def effProbes(s: SparkSession, k: Int): Int =
-    math.min(rprobeOf(s, k), routeCount(k))
+  /** The training-result class at this k — the memo/store key
+    * component. "exact" covers literal and join (bit-identical by
+    * pin). The routed class carries the probe count, because
+    * routed-trained centroids depend on P. */
+  private[graft] def modeKey(k: Int): String =
+    if (k > RoutedMinK) s"routed_p${effProbes(k)}" else "exact"
 
   /** Per-iteration centroid history (seeds c0 .. final c_iters),
-    * memoized per (session, dir, k, resolved E-step class): training
-    * runs ONCE even though several registry queries ride it (final
-    * centroids for the report/dedup, the full trace for the elbow
-    * readout). The class is part of the key because past
-    * [[LiteralMaxK]] the routed path trains (deterministically)
-    * DIFFERENT centroids than the exact paths — a session that flips
-    * the knob must not be served the other class's history. Weak-keyed
-    * on the session ([[graft.SessionMemo]], r14 advice). */
+    * memoized per (session, dir, k): training runs ONCE even though
+    * several registry queries ride it (final centroids for the
+    * report/dedup, the full trace for the elbow readout). The key
+    * spells [[modeKey]] like the store file name, under which a store
+    * load seeds it. Weak-keyed on the session ([[graft.SessionMemo]],
+    * r14 advice). */
   private[graft] def centroidHistory(s: SparkSession, d: String,
       k: Int): Seq[Array[Array[Long]]] =
-    graft.SessionMemo.memo(s, s"kmeans_cents|$d|$k|${modeKey(s, k)}") {
+    graft.SessionMemo.memo(s, s"kmeans_cents|$d|$k|${modeKey(k)}") {
       // Anchor the session's corpus fingerprint AT TRAINING TIME (one
       // narrow scan, once per session+dir): persistentCentroidHistory
       // compares against this anchor, so a corpus swapped AFTER an
@@ -1067,7 +1003,7 @@ object Clustering {
     * too. */
   def persistentCentroidHistory(s: SparkSession, d: String, k: Int,
       storeDir: String): Seq[Array[Array[Long]]] = {
-    val mode = modeKey(s, k)
+    val mode = modeKey(k)
     val fp = anchoredFingerprintHex(s, d)
     val file = java.nio.file.Paths.get(storeDir,
       s"kmeans_k${k}_${mode}_fp$fp.txt")
@@ -1175,9 +1111,9 @@ object Clustering {
     *    is never addressed again and training reruns — and a
     *    MID-SESSION change trips the shared anchor guard
     *    ([[anchoredFingerprintHex]]) instead of poisoning the store;
-    *  - the key carries the RESOLVED probe count, like [[modeKey]]'s
-    *    routed class: frame training routes, so its result depends
-    *    on P.
+    *  - the key carries the probe count ([[effProbes]]), like
+    *    [[modeKey]]'s routed class: frame training routes, so its
+    *    result depends on P.
     *
     * The artifact is K rows of (cid, cq) parquet — data-scale-free
     * state that never touches the driver on either side (written from
@@ -1189,8 +1125,7 @@ object Clustering {
     * a crashed writer can never serve a half-written table. */
   def persistentFrameCentroids(s: SparkSession, d: String, k: Int,
       storeDir: String): DataFrame = {
-    requireFrameServesClass(s) // the LOAD branch below skips frameCentroids
-    val p = effProbes(s, k)
+    val p = effProbes(k)
     val fp = anchoredFingerprintHex(s, d)
     val file = java.nio.file.Paths.get(storeDir,
       s"kmeans_frame_k${k}_p${p}_fp$fp.parquet")
@@ -1362,12 +1297,8 @@ object Clustering {
     * trace equals [[kcenterTrace]]'s bit-for-bit (pinned). */
   def kcenterSampled(s: SparkSession, d: String, k: Int,
       kClusters: Int, cap: Int): Seq[(Long, Long, Option[Long])] =
-    // the resolved E-step class is in the key (r17 review #2): the
-    // sample derives from centroids trained under it, and a flipped
-    // estep/rprobe knob must recompute, not serve the other class's
-    // draw — the modeKey discipline centroidHistory itself follows
     graft.SessionMemo.memo(s,
-        s"kcenter_sampled|$d|$k|$kClusters|$cap|${modeKey(s, kClusters)}") {
+        s"kcenter_sampled|$d|$k|$kClusters|$cap|${modeKey(kClusters)}") {
       val b = base(s, d)
       val sample = TextSim.cappedKeepByHashPriority(
           assign(b, centroids(s, d, kClusters)).select("vec_id", "cid"),
@@ -1398,19 +1329,23 @@ object Clustering {
       iters: Int): Array[Array[Long]] =
     trainHistory(b, k, iters).last
 
-  private[graft] def trainHistory(b: DataFrame, k: Int,
-      iters: Int): Seq[Array[Array[Long]]] = {
+  /** Driver-array Lloyd training. `estep` is the E-step, [[assign]]'s
+    * dispatch by K unless a caller pins one path (the tests and the
+    * operating-curve mains reach the scale-only paths on small
+    * corpora this way). */
+  private[graft] def trainHistory(b: DataFrame, k: Int, iters: Int,
+      estep: (DataFrame, Array[Array[Long]]) => DataFrame = assign)
+      : Seq[Array[Array[Long]]] = {
     require(k >= 1, s"kmeans k must be >= 1, got $k")
     // Hard bound (r15 verdict #2): past this K the driver-array
     // spelling IS the scale defect — K×dim seeds/M-step collects and
     // O(K^1.5) driver coarsening. Refuse loudly; the frame-state path
-    // ([[trainFrame]] / [[kmeansAssignFrame]], auto-dispatched by
-    // [[stateOf]]) is the supported spelling there.
+    // ([[trainFrame]] / [[kmeansAssignFrame]], dispatched by
+    // [[frameState]]) is the supported spelling there.
     require(k <= DriverStateMaxK,
       s"k=$k exceeds DriverStateMaxK=$DriverStateMaxK for driver-array " +
         "training: centroid state must not grow on the driver at this " +
-        "scale — use the frame-state path (kmeansAssignFrame / " +
-        "spark.graft.kmeans.state=frame)")
+        "scale — use the frame-state path (kmeansAssignFrame)")
     trainCounter.incrementAndGet()
     // Non-negativity guard for the truncating-division contract: one
     // scan of the materialized narrow stage, once per (session, dir).
@@ -1441,8 +1376,13 @@ object Clustering {
       // exchange and collected k×dim rows; element-wise long sums are
       // partitioning-invariant and the per-position count equals the
       // group count, so sv(i) / n reproduces the old per-(cid, idx)
-      // truncating mean bit-for-bit.
-      val m = assign(b, cents)
+      // truncating mean bit-for-bit. Rows without a vector (NULL or
+      // empty xq) still get a cid but add nothing to a mean, like the
+      // drift path's filter: LongVecSum skips them, so counting them
+      // would shrink the mean, and a cluster of only such rows would
+      // read a NULL sum.
+      val m = estep(b, cents)
+        .filter(size(col("xq")) > 0)
         .groupBy("cid")
         .agg(graft.functions.VectorFunctions.longVecSum(col("xq"))
           .as("sv"), count(lit(1)).as("n"))
@@ -1466,30 +1406,12 @@ object Clustering {
   /** PUBLIC OPERATOR: per-vector cluster assignment at an explicit k —
     * (vec_id, label, cid, dist2), dist2 in quantized squared-integer
     * units. Trains (memoized) at k, then assigns via the path fitting
-    * k. State dispatch ([[stateOf]]): past [[DriverStateMaxK]] (or
-    * forced via `spark.graft.kmeans.state=frame`) the centroid state
+    * k. Past [[DriverStateMaxK]] ([[frameState]]) the centroid state
     * is a DataFrame end-to-end — [[kmeansAssignFrame]]. */
-  def kmeansAssign(s: SparkSession, d: String, k: Int): DataFrame = {
-    // State dispatch defers to a user-FORCED exact E-step (r16 review
-    // #3): the frame path trains/assigns through the routed machinery,
-    // so silently taking it would swap a pinned exact class for an
-    // approximate one. With estep forced literal/join the array path
-    // runs — and past DriverStateMaxK its require refuses LOUDLY,
-    // naming the conflict, instead of returning the wrong class.
-    // Through estepOf, not a raw conf read (r16 review): an invalid
-    // knob value must fail loudly on BOTH dispatch sides, not only
-    // when the array path happens to validate it. BOTH knobs forced
-    // against each other is a contradiction no silent winner should
-    // resolve (r16 advice: 'the more specific knob wins' partially
-    // undid the never-silently-approximate goal) — refuse, naming it.
-    val exactForced = exactClassForced(s)
-    if (s.conf.get("spark.graft.kmeans.state", "auto") == "frame")
-      requireFrameServesClass(s) // no-op unless an exact class forced
-    if (stateOf(s, k) == "frame" && !exactForced)
-      kmeansAssignFrame(s, d, k)
+  def kmeansAssign(s: SparkSession, d: String, k: Int): DataFrame =
+    if (frameState(k)) kmeansAssignFrame(s, d, k)
     else assign(base(s, d), centroids(s, d, k))
       .select(col("vec_id"), col("label"), col("cid"), col("dist2"))
-  }
 
   /** The quantization CTE (vec_id, idx, xi) the recurrence reads —
     * emitted once per oracle; the K-sweep shares ONE across its four

@@ -3,6 +3,8 @@ package graft.ops
 import graft.{QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Graph analytics over the document similarity graph (nodes = docs,
   * edges = shared-rare-gram pairs from the stage-cached pair stats).
@@ -306,6 +308,34 @@ object Graph {
       .select(col("doc_id"), coalesce(col("dist"), lit(-1L)).as("dist"))
   }
 
+  /** The (hi, lo) edge-set checksum of [[connectedComponents]]: row
+    * count and the decimal sum of pair hashes (decimal: long hashes
+    * overflow an ANSI-mode long sum, the clusterLabelsFixpoint fix). */
+  private def ccChecksumCols: Seq[org.apache.spark.sql.Column] = Seq(
+    count(lit(1)).as("n"),
+    coalesce(sum(xxhash64(col("hi"), col("lo")).cast("decimal(38,0)")),
+      lit(0).cast("decimal(38,0)")).as("h"))
+
+  private[graft] def ccChecksum(e: DataFrame): (Long, BigDecimal) = {
+    val r = e.agg(ccChecksumCols.head, ccChecksumCols.tail: _*).head()
+    (r.getLong(0), BigDecimal(r.getDecimal(1)))
+  }
+
+  /** How long a round waits for its observed checksum. The metrics
+    * arrive with the checkpoint's execution-end listener event, which
+    * trails the (already finished) job by milliseconds; a bus backed
+    * up past this bound costs one recount, not a hang. */
+  private val ObserveWait: FiniteDuration = 30.seconds
+
+  /** The checksum `obs` observed on `out`, or — if it has not arrived
+    * within `bound` — the same checksum recounted from `out`. */
+  private[graft] def observedChecksum(obs: org.apache.spark.sql.Observation,
+      out: DataFrame, bound: FiniteDuration = ObserveWait): (Long, BigDecimal) =
+    try {
+      val r = Await.result(obs.future, bound)
+      (r.getAs[Long]("n"), BigDecimal(r.getAs[java.math.BigDecimal]("h")))
+    } catch { case _: java.util.concurrent.TimeoutException => ccChecksum(out) }
+
   /** Connected components by alternating LARGE-STAR / SMALL-STAR
     * rounds — the O(log n)-round algorithm, vs min-label propagation's
     * O(diameter) (TextSim.clusterLabelsFixpoint): every round HALVES
@@ -336,14 +366,6 @@ object Graph {
       e.select(greatest(col("a"), col("b")).as("hi"),
           least(col("a"), col("b")).as("lo"))
         .filter(col("hi") =!= col("lo")).distinct()
-    def checksum(e: DataFrame): (Long, BigDecimal) = {
-      // Decimal sum: long hashes overflow an ANSI-mode long sum (same
-      // fix as clusterLabelsFixpoint's labelSum).
-      val r = e.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("hi"), col("lo")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)"))).head()
-      (r.getLong(0), BigDecimal(r.getDecimal(1)))
-    }
     // The per-round convergence checksum FOLDS into the round's eager
     // checkpoint (r22, verdict #6): Dataset.observe collects the count
     // and hash sum from the SAME pass localCheckpoint(true) runs to
@@ -353,16 +375,12 @@ object Graph {
     // decimal hash sum, compared round-over-round.
     def ckptWithChecksum(pre: DataFrame): (DataFrame, (Long, BigDecimal)) = {
       val obs = org.apache.spark.sql.Observation()
-      val out = pre.observe(obs, count(lit(1)).as("n"),
-        coalesce(sum(xxhash64(col("hi"), col("lo")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("h"))
+      val out = pre.observe(obs, ccChecksumCols.head, ccChecksumCols.tail: _*)
         .localCheckpoint(true)
-      val m = obs.get // delivered by the checkpoint's execution-end event
-      (out, (m("n").asInstanceOf[Long],
-        BigDecimal(m("h").asInstanceOf[java.math.BigDecimal])))
+      (out, observedChecksum(obs, out))
     }
     var e = ccCanonAnchor(edges, stage)
-    var sum0 = checksum(e)
+    var sum0 = ccChecksum(e)
     var round = 0
     var done = false
     while (!done && round < maxRounds) {

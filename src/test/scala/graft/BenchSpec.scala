@@ -51,16 +51,47 @@ class BenchSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(shapes)
   }
 
-  test("temp-dir ownership and session keying live in one module") {
+  private lazy val mainSources = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val sources = try files.iterator().asScala
+    try files.iterator().asScala
       .filter(_.toString.endsWith(".scala")).toVector finally files.close()
-    assert(sources.nonEmpty)
-    def filesWith(word: String) = sources.flatMap { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      Seq.fill(word.r.findAllMatchIn(text).size)(f.getFileName.toString)
+  }
+  private def read(f: java.nio.file.Path) =
+    new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+
+  test("temp-dir ownership and session keying live in one module") {
+    assert(mainSources.nonEmpty)
+    def filesWith(word: String) = mainSources.flatMap { f =>
+      Seq.fill(word.r.findAllMatchIn(read(f)).size)(f.getFileName.toString)
     }
     assert(filesWith("addShutdownHook") === Seq("StageCache.scala"))
     assert(filesWith("identityHashCode").isEmpty)
+  }
+
+  test("knob census: the conf keys and env vars the library reads") {
+    // A new knob needs a measured reason; adding one edits this list.
+    def found(re: scala.util.matching.Regex) =
+      mainSources.flatMap(f => re.findAllMatchIn(read(f)).map(_.group(1))).toSet
+    assert(found(""""spark\.graft\.([A-Za-z0-9_.]+)"""".r) ===
+      Set("kmeans.k", "bpe.merges", "sea.lexicon", "graph.pinMaxBytes"))
+    assert(found("""SPARK_GRAFT_([A-Z0-9_]+)""".r) ===
+      Set("CONF", "CPUS", "ONLY", "SF_DIR", "STAGE_THREADS"))
+  }
+
+  test("Bench warms the stages for every query that reads a chain-built stage") {
+    // perfbench/expected/sf0.01.tsv: `#chain <name> <dirs>` lines list
+    // what each chain builds; query rows carry (name, class, rows,
+    // hash, dirs). These three build their own stage lazily.
+    val lazyBuilders = Set("q_scan_csv", "q_sim_lsh_points", "q_sketch_cms")
+    val lines = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("perfbench/expected/sf0.01.tsv")).asScala
+      .map(_.split("\t", -1).toSeq)
+    val built = lines.filter(_.head == "#chain").flatMap(_(2).split(",")).toSet
+    val readers = lines.filter(l => !l.head.startsWith("#") && l(1) == "index")
+    assert(readers.nonEmpty)
+    val (chained, unchained) = readers.partition(_(4).split(",").exists(built))
+    assert(unchained.map(_.head).toSet === lazyBuilders)
+    val missed = chained.map(_.head).filterNot(Bench.readsStages)
+    assert(missed.isEmpty, missed.mkString(", "))
   }
 }

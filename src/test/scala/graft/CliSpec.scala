@@ -280,59 +280,36 @@ class CliSpec extends AnyFunSuite {
   }
 
   test("cluster verbs dispatch to the FRAME store at forced frame state (r16 verdict #7)") {
-    // The fm-style shell user at far K (or a forced
-    // spark.graft.kmeans.state=frame) gets the same train/load/
+    // The fm-style shell user at far K gets the same train/load/
     // retrain lifecycle the array store has — never the driver-array
-    // refusal.
+    // refusal. The fixture is far below DriverStateMaxK, so the test
+    // passes the frame state through the verbs' seam.
     val store = tmp("graft_cli_fmstore")
     val dir = tmp("graft_cli_fmcorpus")
     val emb = Tables.embeddings(spark, TestSpark.sf)
     emb.write.mode("overwrite").parquet(Tables.path(dir, "embeddings"))
-    spark.conf.set("spark.graft.kmeans.state", "frame")
-    try {
-      val first = Cli.clusterTrain(spark, dir, store, 7)
-      assert(first.startsWith("trained k=7 ") &&
-        first.contains("state=frame"), first)
-      val second = Cli.clusterTrain(spark, dir, store, 7)
-      assert(second.startsWith("loaded k=7 ") &&
-        second.contains("state=frame"), second)
-      val listed = Cli.clusterStore(store)
-      assert(listed.length === 1, listed)
-      val f = listed.head.split("\t")
-      assert(f.length === 5 && f(0) === "7" && f(1).startsWith("frame_p"),
-        listed.head)
-      // in-place refresh: plain train refuses; retrain recovers and
-      // the store lists both fingerprints
-      emb.limit(5).withColumn("vec_id", col("vec_id") + lit(800000L))
-        .write.mode("append").parquet(Tables.path(dir, "embeddings"))
-      intercept[IllegalArgumentException] {
-        Cli.clusterTrain(spark, dir, store, 7)
-      }
-      val third = Cli.clusterTrain(spark, dir, store, 7, retrain = true)
-      assert(third.startsWith("trained k=7 ") &&
-        third.contains("state=frame"), third)
-      assert(Cli.clusterStore(store).length === 2)
-    } finally spark.conf.set("spark.graft.kmeans.state", "auto")
-  }
-
-  test("CLI frame verbs refuse a forced exact E-step class (no conflict bypass)") {
-    // r17 review #1: kmeansAssign refuses the estep-exact + frame
-    // conflict, and the CLI's frame branches must not bypass that —
-    // cluster-train/assign at a forced exact class never silently
-    // train/serve the routed class.
-    val store = tmp("graft_cli_conflict_store")
-    val out = tmp("graft_cli_conflict_out")
-    val s = spark.newSession()
-    s.conf.set("spark.graft.kmeans.state", "frame")
-    s.conf.set("spark.graft.kmeans.estep", "join")
-    val e1 = intercept[IllegalArgumentException] {
-      Cli.clusterTrain(s, TestSpark.sf, store, 7)
-    }
-    assert(e1.getMessage.contains("conflicting knobs"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      Cli.clusterAssign(s, TestSpark.sf, store, out, 7)
-    }
-    assert(e2.getMessage.contains("conflicting knobs"), e2.getMessage)
+    def train(retrain: Boolean = false) =
+      Cli.clusterTrain(spark, dir, store, 7, retrain, frame = true)
+    val first = train()
+    assert(first.startsWith("trained k=7 ") &&
+      first.contains("state=frame"), first)
+    val second = train()
+    assert(second.startsWith("loaded k=7 ") &&
+      second.contains("state=frame"), second)
+    val listed = Cli.clusterStore(store)
+    assert(listed.length === 1, listed)
+    val f = listed.head.split("\t")
+    assert(f.length === 5 && f(0) === "7" && f(1).startsWith("frame_p"),
+      listed.head)
+    // in-place refresh: plain train refuses; retrain recovers and
+    // the store lists both fingerprints
+    emb.limit(5).withColumn("vec_id", col("vec_id") + lit(800000L))
+      .write.mode("append").parquet(Tables.path(dir, "embeddings"))
+    intercept[IllegalArgumentException] { train() }
+    val third = train(retrain = true)
+    assert(third.startsWith("trained k=7 ") &&
+      third.contains("state=frame"), third)
+    assert(Cli.clusterStore(store).length === 2)
   }
 
   test("cluster-assign rides the store: a fresh session assigns without training") {
@@ -354,16 +331,13 @@ class CliSpec extends AnyFunSuite {
     val r1 = Cli.clusterAssign(s2, dir, store, out1, 6)
     assert(r1.startsWith("loaded k=6 state=driver"), r1)
     assert(lines(out1) === n, "assignment lost rows")
-    // frame regime (forced)
-    val s3 = spark.newSession()
-    s3.conf.set("spark.graft.kmeans.state", "frame")
+    // frame regime (through the verbs' state seam)
     val storeF = tmp("graft_cli_asg_storef")
-    assert(Cli.clusterTrain(s3, dir, storeF, 6)
-      .startsWith("trained k=6 "), "frame train")
-    val s4 = spark.newSession()
-    s4.conf.set("spark.graft.kmeans.state", "frame")
+    assert(Cli.clusterTrain(spark.newSession(), dir, storeF, 6,
+      retrain = false, frame = true).startsWith("trained k=6 "), "frame train")
     val out2 = tmp("graft_cli_asg_out2")
-    val r2 = Cli.clusterAssign(s4, dir, storeF, out2, 6)
+    val r2 = Cli.clusterAssign(spark.newSession(), dir, storeF, out2, 6,
+      frame = true)
     assert(r2.startsWith("loaded k=6 state=frame"), r2)
     assert(lines(out2) === n, "frame assignment lost rows")
     // the header sidecar names the 4 output columns

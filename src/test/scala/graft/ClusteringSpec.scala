@@ -115,15 +115,13 @@ class ClusteringSpec extends AnyFunSuite {
   test("training through the join E-step reproduces the literal path bit-exact") {
     val b = ops.Clustering.base(spark, sf)
     val litC = ops.Clustering.train(b)
-    spark.conf.set("spark.graft.kmeans.estep", "join")
-    try {
-      val jn = ops.Clustering.train(b)
-      assert(jn.length === litC.length)
-      jn.indices.foreach { j =>
-        assert(java.util.Arrays.equals(jn(j), litC(j)),
-          s"centroid $j differs between E-step paths")
-      }
-    } finally spark.conf.set("spark.graft.kmeans.estep", "auto")
+    val jn = ops.Clustering.trainHistory(b, litC.length,
+      ops.Clustering.Iters, ops.Clustering.assignJoin).last
+    assert(jn.length === litC.length)
+    jn.indices.foreach { j =>
+      assert(java.util.Arrays.equals(jn(j), litC(j)),
+        s"centroid $j differs between E-step paths")
+    }
   }
 
   test("public semanticDedup at a non-default k partitions the corpus") {
@@ -195,16 +193,15 @@ class ClusteringSpec extends AnyFunSuite {
 
   test("routed training is deterministic across partitionings") {
     val b = ops.Clustering.base(spark, sf)
-    spark.conf.set("spark.graft.kmeans.estep", "routed")
-    try {
-      val c7 = ops.Clustering.train(b.repartition(7), 80, 2)
-      val c3 = ops.Clustering.train(b.repartition(3), 80, 2)
-      assert(c7.length === c3.length)
-      c7.indices.foreach { j =>
-        assert(java.util.Arrays.equals(c7(j), c3(j)),
-          s"routed-trained centroid $j differs across partitionings")
-      }
-    } finally spark.conf.set("spark.graft.kmeans.estep", "auto")
+    def routed(part: Int) = ops.Clustering.trainHistory(b.repartition(part),
+      80, 2, ops.Clustering.assignRouted).last
+    val c7 = routed(7)
+    val c3 = routed(3)
+    assert(c7.length === c3.length)
+    c7.indices.foreach { j =>
+      assert(java.util.Arrays.equals(c7(j), c3(j)),
+        s"routed-trained centroid $j differs across partitionings")
+    }
   }
 
   test("routed E-step work is below flat n×K even at toy scale") {
@@ -441,27 +438,24 @@ class ClusteringSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cid", "dist2").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    spark.conf.set("spark.graft.kmeans.estep", "routed")
-    try {
-      // training: same seeds, same routed E-step, same truncating
-      // integer M-step — the frame spelling must land on the SAME
-      // centroids bit-for-bit
-      val hist = ops.Clustering.trainHistory(b, 80, 2)
-      val arr = hist.last
-      val frame = ops.Clustering.trainFrame(b, 80, 2)
-        .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-        .sortBy(_._1)
-      assert(frame.length === arr.length)
-      frame.foreach { case (cid, cq) =>
-        assert(java.util.Arrays.equals(cq, arr(cid.toInt)),
-          s"frame-trained centroid $cid differs from array-trained")
-      }
-      // assignment from the same centroids: identical rows
-      val centsDf = arr.zipWithIndex.toIndexedSeq
-        .map { case (c, j) => (j.toLong, c.toIndexedSeq) }.toDF("cid", "cq")
-      assert(rows(ops.Clustering.assignFrame(b, centsDf, 80)) ===
-        rows(ops.Clustering.assignRouted(b, arr)))
-    } finally spark.conf.set("spark.graft.kmeans.estep", "auto")
+    // training: same seeds, same routed E-step, same truncating
+    // integer M-step — the frame spelling must land on the SAME
+    // centroids bit-for-bit
+    val arr = ops.Clustering.trainHistory(b, 80, 2,
+      ops.Clustering.assignRouted).last
+    val frame = ops.Clustering.trainFrame(b, 80, 2)
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+      .sortBy(_._1)
+    assert(frame.length === arr.length)
+    frame.foreach { case (cid, cq) =>
+      assert(java.util.Arrays.equals(cq, arr(cid.toInt)),
+        s"frame-trained centroid $cid differs from array-trained")
+    }
+    // assignment from the same centroids: identical rows
+    val centsDf = arr.zipWithIndex.toIndexedSeq
+      .map { case (c, j) => (j.toLong, c.toIndexedSeq) }.toDF("cid", "cq")
+    assert(rows(ops.Clustering.assignFrame(b, centsDf, 80)) ===
+      rows(ops.Clustering.assignRouted(b, arr)))
   }
 
   test("frame state at tiny K is EXACT (every branch probed) — the oracle witness") {
@@ -483,25 +477,9 @@ class ClusteringSpec extends AnyFunSuite {
       ops.Clustering.trainHistory(b, ops.Clustering.DriverStateMaxK + 1, 1)
     }
     assert(ex.getMessage.contains("kmeansAssignFrame"), ex.getMessage)
-    // and the auto state dispatch serves frame there
-    assert(ops.Clustering.stateOf(spark,
-      ops.Clustering.DriverStateMaxK + 1) === "frame")
-    assert(ops.Clustering.stateOf(spark, 80) === "driver")
-  }
-
-  test("state dispatch defers to a forced exact E-step: loud refusal, never silent approximation") {
-    // r16 review #3: a user who pinned estep=join for an exact
-    // comparison must not be silently served the approximate frame
-    // class at large K — the array path runs and its DriverStateMaxK
-    // require names the conflict.
-    spark.conf.set("spark.graft.kmeans.estep", "join")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        ops.Clustering.kmeansAssign(spark, sf,
-          ops.Clustering.DriverStateMaxK + 1).count()
-      }
-      assert(ex.getMessage.contains("DriverStateMaxK"), ex.getMessage)
-    } finally spark.conf.set("spark.graft.kmeans.estep", "auto")
+    // and the state dispatch serves frame there
+    assert(ops.Clustering.frameState(ops.Clustering.DriverStateMaxK + 1))
+    assert(!ops.Clustering.frameState(80))
   }
 
   test("frame state: driver-collected rows grow ~√K while the array path grows ~K") {
@@ -591,29 +569,13 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   test("modeKey: exact paths share one training; auto resolves by K") {
-    // r15 review #3: 'auto' past RoutedMinK and a forced 'routed' must
-    // share the memo/store key (identical training); literal, join and
-    // small-K auto share the 'exact' key (bit-identical by pin).
-    def at(mode: String, k: Int): String = {
-      spark.conf.set("spark.graft.kmeans.estep", mode)
-      try ops.Clustering.modeKey(spark, k)
-      finally spark.conf.set("spark.graft.kmeans.estep", "auto")
-    }
-    assert(at("auto", 8) === "exact")
-    assert(at("auto", 500) === "exact")
-    // the routed class carries the RESOLVED probe count (r16 review
-    // #2): P3-pinned and auto sessions train different centroids at
-    // large K and must not share a memo/store key
-    assert(at("auto", 2000) === "routed_p7")
-    assert(at("literal", 8) === "exact")
-    assert(at("join", 2000) === "exact")
-    // forced routed at k <= LiteralMaxK falls back to the literal path
-    // inside assignRouted, so its training IS the exact class's
-    assert(at("routed", 8) === "exact")
-    assert(at("routed", 80) === "routed_p3")
-    spark.conf.set("spark.graft.kmeans.rprobe", "3")
-    try assert(at("auto", 2000) === "routed_p3")
-    finally spark.conf.set("spark.graft.kmeans.rprobe", "auto")
+    // literal and join share the 'exact' key (bit-identical by pin);
+    // past RoutedMinK the routed class carries the probe count (r16
+    // review #2), since routed training depends on P
+    assert(ops.Clustering.modeKey(8) === "exact")
+    assert(ops.Clustering.modeKey(500) === "exact")
+    assert(ops.Clustering.modeKey(ops.Clustering.RoutedMinK) === "exact")
+    assert(ops.Clustering.modeKey(2000) === "routed_p7")
   }
 
   test("corpus fingerprint moves on even-multiplicity changes; mid-session mutation is refused") {
@@ -747,32 +709,24 @@ class ClusteringSpec extends AnyFunSuite {
       s"seed rank task held $maxTask rows — not bucket-bounded (n=$n)")
   }
 
-  test("explicit estep-exact + state=frame conflict refuses loudly (r16 advice)") {
-    // Forcing BOTH an exact E-step class and the frame state is a
-    // contradiction: the frame path routes (approximate class), so no
-    // silent winner may resolve it.
-    spark.conf.set("spark.graft.kmeans.estep", "join")
-    spark.conf.set("spark.graft.kmeans.state", "frame")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        ops.Clustering.kmeansAssign(spark, sf, 8).count()
-      }
-      assert(ex.getMessage.contains("conflicting knobs"), ex.getMessage)
-    } finally {
-      spark.conf.set("spark.graft.kmeans.estep", "auto")
-      spark.conf.set("spark.graft.kmeans.state", "auto")
-    }
-    // the refusal lives INSIDE the frame machinery (r17 review: a new
-    // entry point must not be able to forget it): the direct frame
-    // operator refuses under a forced exact class even WITHOUT the
-    // state knob
-    spark.conf.set("spark.graft.kmeans.estep", "join")
-    try {
-      val ex2 = intercept[IllegalArgumentException] {
-        ops.Clustering.kmeansAssignFrame(spark, sf, 8).count()
-      }
-      assert(ex2.getMessage.contains("conflicting knobs"), ex2.getMessage)
-    } finally spark.conf.set("spark.graft.kmeans.estep", "auto")
+  test("rows without a vector add nothing to an M-step mean, even as a whole cluster") {
+    val s = spark
+    import s.implicits._
+    // vec_ids 27 and 6 come first in md5 order, so they seed cids 0
+    // and 1; every NULL-xq row takes cid 0 (a NULL distance sorts
+    // first). Counted into cid 0's mean they would drag it away from
+    // vector 27, leaving cid 0 with NULL rows only — a NULL vector sum.
+    val vecs = Seq(27L -> Seq(3000000L, 3000000L),
+      6L -> Seq(3100000L, 3100000L), 33L -> Seq(3200000L, 3200000L))
+    val nulls = Seq(1L, 2L, 3L, 4L, 5L, 7L, 8L, 10L, 11L, 12L)
+    val withNulls = (vecs.map { case (id, x) => (id, 0, Option(x)) } ++
+        nulls.map(id => (id, 0, Option.empty[Seq[Long]])))
+      .toDF("vec_id", "label", "xq")
+    val clean = vecs.map { case (id, x) => (id, 0, x) }
+      .toDF("vec_id", "label", "xq")
+    def hist(b: org.apache.spark.sql.DataFrame) =
+      ops.Clustering.trainHistory(b, 2, 3).map(_.map(_.toSeq).toSeq)
+    assert(hist(withNulls) === hist(clean))
   }
 
   test("kcenter refuses k past the distinct-vector count instead of re-picking (r16 advice)") {

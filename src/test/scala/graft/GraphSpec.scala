@@ -165,6 +165,20 @@ class GraphSpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  test("CC round checksum: an observation that never fires falls back to a recount within the bound") {
+    import spark.implicits._
+    val out = Seq((2L, 1L), (3L, 1L), (9L, 7L)).toDF("hi", "lo")
+    val never = org.apache.spark.sql.Observation() // never attached
+    val bound = scala.concurrent.duration.Duration(500, "ms")
+    val t0 = System.nanoTime()
+    val got = ops.Graph.observedChecksum(never, out, bound)
+    val waitedS = (System.nanoTime() - t0) / 1e9
+    assert(got === ops.Graph.ccChecksum(out))
+    assert(got._1 === 3L)
+    // the wait ends at the bound; the rest is the one-row recount job
+    assert(waitedS >= 0.5 && waitedS < 30, s"returned after $waitedS s")
+  }
+
   test("triangle counts: synthetic clique, open wedge, and brute-force on random graphs") {
     import spark.implicits._
     // K4 on {1..4}: every node is in C(3,2)=3 triangles. The open

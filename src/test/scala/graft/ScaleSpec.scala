@@ -207,43 +207,41 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // algebra), and the recall trade must not collapse — planted
     // near-dups (brute-force cos ≥ 0.9 ground truth, the same tiers
     // the LSH pins use) still co-cluster and are therefore emitted.
-    // Runs the JOIN E-step — the path production K actually takes.
-    spark.conf.set("spark.graft.kmeans.estep", "join")
-    try {
-      def kFor(d: String): Int =
-        (Tables.embeddings(spark, d).count() / 125).toInt.max(2)
-      def pairWork(d: String): Long =
-        ops.Clustering.kmeansAssign(spark, d, kFor(d))
-          .groupBy("cid").agg(count(lit(1)).as("n"))
-          .select(coalesce(sum((col("n") * (col("n") - 1) / 2)
-            .cast("long")), lit(0L))).head().getLong(0)
-      def recall(d: String): Double = {
-        val truth = bruteTruth(d, 0.9)
-        assert(truth.size >= 10, s"planted dups missing at $d: ${truth.size}")
-        val cid = ops.Clustering.kmeansAssign(spark, d, kFor(d))
-          .select("vec_id", "cid").collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        // co-clustered ⟺ emitted: cos ≥ 0.9 ⇒ d² ≈ 0.2e12, far under
-        // the 1.2e12 bar, so the only way to lose a planted pair is a
-        // cluster split — exactly the trade this pin bounds.
-        truth.count { case (a, b) => cid(a) == cid(b) }.toDouble / truth.size
-      }
-      val (w1, wN) = (pairWork(vd1), pairWork(vdN))
-      val e = exponent(w1, wN)
-      info(f"pair work $w1 -> $wN, exponent $e%.3f (K ${kFor(vd1)} -> ${kFor(vdN)})")
-      assert(e <= 1.35,
-        s"pair work superlinear with K ∝ n: $w1 -> $wN (exponent $e)")
-      // and the screen is genuinely cluster-bounded, not all-pairs:
-      val nN = Tables.embeddings(spark, vdN).count()
-      assert(wN < nN * (nN - 1) / 2 / 4,
-        s"pair work $wN not meaningfully below all-pairs at n=$nN")
-      val (r1, rN) = (recall(vd1), recall(vdN))
-      info(f"planted near-dup recall: x1 $r1%.3f, x$Mult $rN%.3f")
-      // measured 1.000 / 0.990 on the seeded tiers (deterministic);
-      // 0.9 leaves margin for profile drift if the fixtures regenerate
-      assert(r1 >= 0.9 && rN >= 0.9,
-        s"planted near-dup recall collapsed: x1=$r1, x$Mult=$rN")
-    } finally spark.conf.set("spark.graft.kmeans.estep", "auto")
+    // Runs under the K dispatch: K = n/125 stays exact (literal or
+    // join) on these tiers.
+    def kFor(d: String): Int =
+      (Tables.embeddings(spark, d).count() / 125).toInt.max(2)
+    def pairWork(d: String): Long =
+      ops.Clustering.kmeansAssign(spark, d, kFor(d))
+        .groupBy("cid").agg(count(lit(1)).as("n"))
+        .select(coalesce(sum((col("n") * (col("n") - 1) / 2)
+          .cast("long")), lit(0L))).head().getLong(0)
+    def recall(d: String): Double = {
+      val truth = bruteTruth(d, 0.9)
+      assert(truth.size >= 10, s"planted dups missing at $d: ${truth.size}")
+      val cid = ops.Clustering.kmeansAssign(spark, d, kFor(d))
+        .select("vec_id", "cid").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // co-clustered ⟺ emitted: cos ≥ 0.9 ⇒ d² ≈ 0.2e12, far under
+      // the 1.2e12 bar, so the only way to lose a planted pair is a
+      // cluster split — exactly the trade this pin bounds.
+      truth.count { case (a, b) => cid(a) == cid(b) }.toDouble / truth.size
+    }
+    val (w1, wN) = (pairWork(vd1), pairWork(vdN))
+    val e = exponent(w1, wN)
+    info(f"pair work $w1 -> $wN, exponent $e%.3f (K ${kFor(vd1)} -> ${kFor(vdN)})")
+    assert(e <= 1.35,
+      s"pair work superlinear with K ∝ n: $w1 -> $wN (exponent $e)")
+    // and the screen is genuinely cluster-bounded, not all-pairs:
+    val nN = Tables.embeddings(spark, vdN).count()
+    assert(wN < nN * (nN - 1) / 2 / 4,
+      s"pair work $wN not meaningfully below all-pairs at n=$nN")
+    val (r1, rN) = (recall(vd1), recall(vdN))
+    info(f"planted near-dup recall: x1 $r1%.3f, x$Mult $rN%.3f")
+    // measured 1.000 / 0.990 on the seeded tiers (deterministic);
+    // 0.9 leaves margin for profile drift if the fixtures regenerate
+    assert(r1 >= 0.9 && rN >= 0.9,
+      s"planted near-dup recall collapsed: x1=$r1, x$Mult=$rN")
   }
 
   test("routed E-step: work sub-quadratic and planted recall holds when K ∝ n") {
@@ -256,36 +254,36 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // assignment. K here is n/8 (min 65 so the hierarchy actually
     // engages, k > LiteralMaxK at both tiers) — finer than the n/125
     // production regime, i.e. HARDER for both exponent and recall.
-    spark.conf.set("spark.graft.kmeans.estep", "routed")
-    try {
-      def kFor(d: String): Int =
-        math.max(65, (Tables.embeddings(spark, d).count() / 8).toInt)
-      def measure(d: String): (Long, Long, Double) = {
-        val k = kFor(d)
-        val b = ops.Clustering.base(spark, d)
-        val cents = ops.Clustering.centroids(spark, d, k) // routed-trained
-        val evals = ops.Clustering.routedEstepEvals(b, cents)
-        val flat = b.count() * k
-        val truth = bruteTruth(d, 0.9)
-        assert(truth.size >= 10, s"planted dups missing at $d: ${truth.size}")
-        val cid = ops.Clustering.kmeansAssign(spark, d, k)
-          .select("vec_id", "cid").collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val rec = truth.count { case (a, b2) => cid(a) == cid(b2) }
-          .toDouble / truth.size
-        (evals, flat, rec)
-      }
-      val (e1, f1, r1) = measure(vd1)
-      val (eN, fN, rN) = measure(vdN)
-      val ex = exponent(e1, eN)
-      info(f"routed evals $e1 -> $eN (exp $ex%.3f); flat $f1 -> $fN; " +
-        f"recall x1 $r1%.3f, x$Mult $rN%.3f")
-      assert(ex <= 1.7, s"routed E-step work superlinear^1.7: $e1 -> $eN")
-      assert(e1 < f1 && eN < fN,
-        s"routed work not below flat: $e1/$f1, $eN/$fN")
-      assert(r1 >= 0.9 && rN >= 0.9,
-        s"planted recall collapsed under routed training: $r1, $rN")
-    } finally spark.conf.set("spark.graft.kmeans.estep", "auto")
+    // The K dispatch would stay exact at these K, so training and
+    // assignment take the routed path directly.
+    def kFor(d: String): Int =
+      math.max(65, (Tables.embeddings(spark, d).count() / 8).toInt)
+    def measure(d: String): (Long, Long, Double) = {
+      val k = kFor(d)
+      val b = ops.Clustering.base(spark, d)
+      val cents = ops.Clustering.trainHistory(b, k, ops.Clustering.Iters,
+        ops.Clustering.assignRouted).last
+      val evals = ops.Clustering.routedEstepEvals(b, cents)
+      val flat = b.count() * k
+      val truth = bruteTruth(d, 0.9)
+      assert(truth.size >= 10, s"planted dups missing at $d: ${truth.size}")
+      val cid = ops.Clustering.assignRouted(b, cents)
+        .select("vec_id", "cid").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val rec = truth.count { case (a, b2) => cid(a) == cid(b2) }
+        .toDouble / truth.size
+      (evals, flat, rec)
+    }
+    val (e1, f1, r1) = measure(vd1)
+    val (eN, fN, rN) = measure(vdN)
+    val ex = exponent(e1, eN)
+    info(f"routed evals $e1 -> $eN (exp $ex%.3f); flat $f1 -> $fN; " +
+      f"recall x1 $r1%.3f, x$Mult $rN%.3f")
+    assert(ex <= 1.7, s"routed E-step work superlinear^1.7: $e1 -> $eN")
+    assert(e1 < f1 && eN < fN,
+      s"routed work not below flat: $e1/$f1, $eN/$fN")
+    assert(r1 >= 0.9 && rN >= 0.9,
+      s"planted recall collapsed under routed training: $r1, $rN")
   }
 
   test("LSH pair candidates never exceed the all-pairs bound") {

@@ -323,12 +323,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === batch)
   }
 
-  test("CAP-STREAM-KMEANS-LARGE-K: foreachBatch routed scoring == batch assign") {
+  test("CAP-STREAM-KMEANS-LARGE-K: foreachBatch large-K scoring == batch assign") {
     // The large-K twin scoredVecStream's require prescribes: each
     // micro-batch scores through the SAME assign dispatch as batch —
-    // forced ROUTED here at k=80, so the stream exercises the
-    // two-level hierarchy end-to-end and must reproduce the batch
-    // routed assignment row-for-row across two micro-batch files.
+    // at k=80 past LiteralMaxK (the join E-step) — and must reproduce
+    // the batch assignment row-for-row across two micro-batch files.
     val inDir = tmpDir("graft_kmsL_in").toString
     val ck = tmpDir("graft_kmsL_ck").toString
     val out = tmpDir("graft_kmsL_out").toString + "/scored"
@@ -340,28 +339,25 @@ class StreamingSpec extends AnyFunSuite {
       .coalesce(1).write.mode("append").parquet(inDir)
     sample.filter(col("vec_id") % 2 =!= 0)
       .coalesce(1).write.mode("append").parquet(inDir)
-    spark.conf.set("spark.graft.kmeans.estep", "routed")
-    try {
-      StreamDemos.scoredVecBatches(spark, sf, inDir, ck, out, k = 80)
-      val streamed = spark.read.parquet(out)
-        .select("vec_id", "cid", "dist2") // + a `batch` partition column
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .sorted.toSeq
-      val expectIds = sample.select("vec_id").collect()
-        .map(_.getLong(0)).toSet
-      val batch = ops.Clustering
-        .kmeansAssign(spark, sf, 80)
-        .filter(col("vec_id").isInCollection(expectIds))
-        .select("vec_id", "cid", "dist2")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .sorted.toSeq
-      assert(streamed.nonEmpty)
-      assert(streamed === batch)
-      // exactly-once: a second AvailableNow pass with nothing new
-      // appends nothing (the P6 memo on the streaming surface)
-      StreamDemos.scoredVecBatches(spark, sf, inDir, ck, out, k = 80)
-      assert(spark.read.parquet(out).count() === streamed.length.toLong)
-    } finally spark.conf.set("spark.graft.kmeans.estep", "auto")
+    StreamDemos.scoredVecBatches(spark, sf, inDir, ck, out, k = 80)
+    val streamed = spark.read.parquet(out)
+      .select("vec_id", "cid", "dist2") // + a `batch` partition column
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sorted.toSeq
+    val expectIds = sample.select("vec_id").collect()
+      .map(_.getLong(0)).toSet
+    val batch = ops.Clustering
+      .kmeansAssign(spark, sf, 80)
+      .filter(col("vec_id").isInCollection(expectIds))
+      .select("vec_id", "cid", "dist2")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sorted.toSeq
+    assert(streamed.nonEmpty)
+    assert(streamed === batch)
+    // exactly-once: a second AvailableNow pass with nothing new
+    // appends nothing (the P6 memo on the streaming surface)
+    StreamDemos.scoredVecBatches(spark, sf, inDir, ck, out, k = 80)
+    assert(spark.read.parquet(out).count() === streamed.length.toLong)
   }
 
   test("CAP-STREAM-KMEANS-FRAME: foreachBatch frame scoring == batch kmeansAssignFrame") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** FileMap's command-line surface — `fm <inputs> <map-cmd> [n-buckets]
@@ -41,17 +41,23 @@ object Cli {
       mapCmds: Seq[String], reduceCmd: Option[String] = None,
       buckets: Int = 32): Unit = {
     require(mapCmds.nonEmpty, "at least one map stage")
-    val lines = sources.Ingest.lines(spark, glob).select("line")
-    val mapped = mapCmds.foldLeft(lines)((df, cmd) =>
-      sources.ShellPipe.pipe(df, cmd).toDF("line"))
-    val out = reduceCmd match {
-      case Some(r) =>
-        val bucketed = mapped.repartition(buckets, col("line"))
-        sources.ShellPipe.pipe(bucketed, r).toDF("line")
-      case None => mapped
-    }
-    out.write.mode("overwrite").text(outDir)
+    val mapped = mapChain(sources.Ingest.lines(spark, glob).select("line"),
+      mapCmds)
+    reduceCmd.fold(mapped)(bucketReduce(mapped, _, buckets))
+      .write.mode("overwrite").text(outDir)
   }
+
+  /** The map stages fused per partition: `cmd1 | cmd2 | …`. */
+  private def mapChain(lines: DataFrame, mapCmds: Seq[String]): DataFrame =
+    mapCmds.foldLeft(lines)((df, cmd) =>
+      sources.ShellPipe.pipe(df, cmd).toDF("line"))
+
+  /** The reduce: lines HASH into `buckets` partitions, then each bucket
+    * streams through `reduceCmd`. */
+  private def bucketReduce(mapped: DataFrame, reduceCmd: String,
+      buckets: Int): DataFrame =
+    sources.ShellPipe.pipe(mapped.repartition(buckets, col("line")),
+      reduceCmd).toDF("line")
 
   /** P6-MEMOIZED fm pipeline over a partitioned text tree
     * (`inDir/<partCol>=v/` line files) — FileMap's defining feature
@@ -59,22 +65,25 @@ object Cli {
     * (the shell pipeline):
     *
     *  - map stages are per-line, hence per-partition independent, so
-    *    they memoize: a re-run pipes ONLY new-or-changed input
-    *    partitions (fingerprint diff over the file listing —
-    *    [[sources.Incremental.syncChangedEach]]), overwriting just
-    *    those `outDir/map/<partCol>=v` dirs; untouched partitions'
-    *    outputs are not rewritten, their lines never re-piped;
+    *    they memoize by [[sources.Incremental.syncChangedEach]]: a
+    *    re-run pipes ONLY new-or-changed input partitions (fingerprint
+    *    diff over the file listing), overwriting just those
+    *    `outDir/map/<partCol>=v` dirs; untouched partitions' outputs
+    *    are not rewritten, their lines never re-piped. An input
+    *    partition deleted upstream has its `map/<partCol>=v` dir
+    *    deleted too, so it stops feeding the reduce;
     *  - the bucket-shuffle reduce consumes every mapper's output by
     *    construction (all occurrences of a line must meet in one
     *    bucket), so it re-runs as a whole — but only when some map
-    *    partition changed (or its output doesn't exist yet);
+    *    partition changed or was retracted (or its output doesn't exist
+    *    yet). A reduce over zero map partitions is empty;
     *  - the memo sidecar lives in the map output tree, so the state
     *    travels with the data — no external bookkeeping, same as the
     *    parquet P6 path.
     *
     * Output: map tree at `outDir/map/<partCol>=v/`, reduce result (if
     * any) at `outDir/reduce/`. Returns the partition values re-piped
-    * this run (empty = fully memoized no-op). */
+    * or retracted this run (empty = fully memoized no-op). */
   def runStagesMemoized(spark: SparkSession, inDir: String, outDir: String,
       partCol: String, mapCmds: Seq[String],
       reduceCmd: Option[String] = None, buckets: Int = 32): Set[String] = {
@@ -82,20 +91,20 @@ object Cli {
     val mapDir = s"$outDir/map"
     val changed = sources.Incremental.syncChangedEach(
       spark, inDir, mapDir, partCol) { v =>
-      val lines = spark.read.textFile(s"$inDir/$partCol=$v").toDF("line")
-      val mapped = mapCmds.foldLeft(lines)((df, cmd) =>
-        sources.ShellPipe.pipe(df, cmd).toDF("line"))
-      mapped.write.mode("overwrite").text(s"$mapDir/$partCol=$v")
+      mapChain(spark.read.textFile(s"$inDir/$partCol=$v").toDF("line"),
+        mapCmds).write.mode("overwrite").text(s"$mapDir/$partCol=$v")
     }
     reduceCmd.foreach { r =>
       val reduceDir = s"$outDir/reduce"
       val rp = new org.apache.hadoop.fs.Path(reduceDir)
       val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
       if (changed.nonEmpty || !fs.exists(rp)) {
-        val all = spark.read.textFile(s"$mapDir/$partCol=*").toDF("line")
-        val bucketed = all.repartition(buckets, col("line"))
-        sources.ShellPipe.pipe(bucketed, r).toDF("line")
-          .write.mode("overwrite").text(reduceDir)
+        val reduced =
+          if (sources.Incremental.partitionValues(spark, mapDir, partCol)
+              .isEmpty) spark.emptyDataset(Encoders.STRING).toDF("line")
+          else bucketReduce(spark.read.textFile(s"$mapDir/$partCol=*")
+            .toDF("line"), r, buckets)
+        reduced.write.mode("overwrite").text(reduceDir)
       }
     }
     changed

@@ -37,8 +37,8 @@ object StateBench {
     // _SCALE_META marker, which also catches a partial previous write
     // or a stale recipe — an embeddings-dir existence check would
     // accept both and measure a corrupt corpus.
-    // source corpus resolved like the sibling bench mains (Bench,
-    // BpeProbe) so the main runs anywhere (r17 advice #4)
+    // source corpus resolved like the sibling bench mains (Bench)
+    // so the main runs anywhere (r17 advice #4)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val IsoTier = "target/scale_r18/iso_x(\\d+)".r
     tier match {

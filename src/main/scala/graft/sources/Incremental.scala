@@ -4,27 +4,29 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Incremental re-run over a GROWN input tree — FileMap's P6 identity
-  * (re-run the pipeline, recompute only what's new) re-expressed on
-  * partition-tree mechanics:
+/** Incremental re-run over a CHANGING input tree — FileMap's P6
+  * identity (re-run the pipeline, recompute only what changed, and the
+  * result still equals a full recompute) on partition-tree mechanics:
   *
   *  - the input is a Hive-partitioned tree (`part=value/` dirs);
-  *  - the output is a partitioned sink whose directory names record
-  *    which input partitions have been processed — the memo IS the
-  *    output tree, no side-channel state;
-  *  - a re-run lists both trees (metadata-only: directory names, no
-  *    data files opened), diffs them, and processes ONLY the new
-  *    partitions — the filter on the partition column becomes a
-  *    Catalyst PartitionFilter, so already-processed data is never
-  *    even scanned (IncrementalSpec asserts the plan).
+  *  - the output is a partitioned tree with the same `part=value/`
+  *    layout, plus a fingerprint sidecar (one listing hash per
+  *    processed input partition) — the memo travels with the data;
+  *  - a re-run lists both trees (metadata-only: names, lengths,
+  *    mtimes, no data files opened) and applies ONE rule: partitions
+  *    that are new or whose fingerprint moved are recomputed; output
+  *    partitions whose input partition is gone are deleted. Both verbs
+  *    ([[syncChanged]], [[syncChangedEach]]) share that rule, so no
+  *    caller can forget the retraction half.
   *
-  * At 100 TB this is the shape that makes daily re-runs O(new data):
-  * ingest lands `date=.../source=...` partitions, the derivation
-  * appends matching output partitions, and the diff is a listing of
-  * two directory levels. Mid-write crash tolerance is the one thing
-  * this demo does not add — production would write via a transactional
-  * table layer or stage-and-rename; the pruning-driven delta mechanics
-  * are identical.
+  * The delta read filters on the partition column, which Catalyst turns
+  * into a PartitionFilter: unchanged data is never even scanned
+  * (IncrementalSpec asserts the plan). At 100 TB this is the shape that
+  * makes daily re-runs O(changed data). Mid-write crash tolerance is the
+  * one thing this does not add — production would write via a
+  * transactional table layer or stage-and-rename; the memo is saved
+  * only after the work, so a failed run at least retries every stale
+  * partition.
   */
 object Incremental {
 
@@ -40,26 +42,6 @@ object Incremental {
       .filter(_.startsWith(partCol + "="))
       .map(_.stripPrefix(partCol + "="))
       .toSet
-  }
-
-  /** Bring `outDir` up to date with `inDir`: apply `derive` to the
-    * input partitions that have no output partition yet and append
-    * them. `derive` must be partition-wise (its result for a partition
-    * depends only on that partition's rows) and must preserve
-    * `partCol` in its output. Returns the partition values processed
-    * this run — empty when the output is already current.
-    */
-  def syncPartitioned(spark: SparkSession, inDir: String, outDir: String,
-      partCol: String)(derive: DataFrame => DataFrame): Set[String] = {
-    val todo = partitionValues(spark, inDir, partCol) --
-      partitionValues(spark, outDir, partCol)
-    if (todo.nonEmpty) {
-      val fresh = spark.read.parquet(inDir)
-        .filter(col(partCol).isin(todo.toSeq.sorted: _*))
-      derive(fresh)
-        .write.mode("append").partitionBy(partCol).parquet(outDir)
-    }
-    todo
   }
 
   /** Content fingerprint of one input partition: a hash over its file
@@ -97,32 +79,6 @@ object Incremental {
     ()
   }
 
-  /** The P6 staleness diff: (recorded memo, current input fingerprints,
-    * partitions that are new or changed). */
-  private def stalePartitions(spark: SparkSession, inDir: String,
-      outDir: String, partCol: String)
-      : (Map[String, Long], Map[String, Long], Set[String]) = {
-    val seen = loadFingerprints(outDir)
-    val current = partitionValues(spark, inDir, partCol)
-      .map(v => v -> partitionFingerprint(spark, inDir, partCol, v)).toMap
-    val todo = current.collect {
-      case (v, fp) if !seen.get(v).contains(fp) => v
-    }.toSet
-    (seen, current, todo)
-  }
-
-  /** Output partitions that no longer have an input partition — the
-    * RETRACTION set: an upstream takedown (source partition deleted)
-    * must disappear from the derived tree too, the same legal
-    * requirement that motivated the index tombstones. Union of the
-    * memo keys and the materialized output dirs, so trees first built
-    * by [[syncPartitioned]] (no sidecar) retract as well. */
-  private def removedPartitions(spark: SparkSession, outDir: String,
-      partCol: String, seen: Map[String, Long],
-      current: Map[String, Long]): Set[String] =
-    (seen.keySet ++ partitionValues(spark, outDir, partCol)) --
-      current.keySet
-
   private def dropOutputPartition(spark: SparkSession, outDir: String,
       partCol: String, value: String): Unit = {
     val p = new Path(s"$outDir/$partCol=$value")
@@ -131,59 +87,57 @@ object Incremental {
     ()
   }
 
-  /** Full FileMap-P6 semantics: re-run processes partitions that are
-    * NEW **or whose input files changed** since the recorded
-    * fingerprint, and RETRACTS output partitions whose input partition
-    * was removed upstream (directory dropped + memo entry dropped —
-    * unchanged partitions are never touched, byte for byte). Changed
-    * partitions are rewritten in place via dynamic partition overwrite
-    * (only the touched `partCol=v` dirs are replaced); fingerprints
-    * persist as a sidecar in the output tree, so the memo travels with
-    * the data. Returns the partition values processed this run —
-    * rewritten and retracted alike.
-    */
-  def syncChanged(spark: SparkSession, inDir: String, outDir: String,
-      partCol: String)(derive: DataFrame => DataFrame): Set[String] = {
-    val (seen, current, todo) = stalePartitions(spark, inDir, outDir, partCol)
-    val removed = removedPartitions(spark, outDir, partCol, seen, current)
+  /** The one P6 memo core. Stale = input partitions that are new or
+    * whose fingerprint moved. Removed = memo keys plus materialized
+    * `outDir/<partCol>=v` dirs, minus the current input partitions — an
+    * upstream takedown must disappear from the derived tree too. Each
+    * removed output dir is deleted, `recompute` gets the sorted stale
+    * values, and only then is the sidecar saved, so a failed run
+    * retries every stale partition. Returns stale and removed alike. */
+  private def sync(spark: SparkSession, inDir: String, outDir: String,
+      partCol: String)(recompute: Seq[String] => Unit): Set[String] = {
+    val seen = loadFingerprints(outDir)
+    val current = partitionValues(spark, inDir, partCol)
+      .map(v => v -> partitionFingerprint(spark, inDir, partCol, v)).toMap
+    val todo = current.collect {
+      case (v, fp) if !seen.get(v).contains(fp) => v
+    }.toSet
+    val removed = (seen.keySet ++ partitionValues(spark, outDir, partCol)) --
+      current.keySet
     removed.foreach(dropOutputPartition(spark, outDir, partCol, _))
-    if (todo.nonEmpty) {
-      val fresh = spark.read.parquet(inDir)
-        .filter(col(partCol).isin(todo.toSeq.sorted: _*))
-      derive(fresh)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol).parquet(outDir)
-    }
+    if (todo.nonEmpty) recompute(todo.toSeq.sorted)
     if (todo.nonEmpty || removed.nonEmpty)
       saveFingerprints(outDir,
         (seen -- removed) ++ todo.map(v => v -> current(v)))
     todo ++ removed
   }
 
-  /** Format-agnostic P6 memo for pipelines that must process each
-    * partition as its own unit (the CLI shell path: one process chain
-    * per partition, text in / text out — [[graft.Cli.runStagesMemoized]]).
-    * Same staleness diff and sidecar as [[syncChanged]]; `process`
-    * receives each stale partition VALUE and must overwrite that
-    * partition's output itself. Retraction mirrors [[syncChanged]]:
-    * removed input partitions drop their memo entry and are handed to
-    * `retract` (the caller owns the output layout, so it owns the
-    * delete; the default no-op preserves prior behavior). Fingerprints
-    * are recorded only after every stale partition processed, so a
-    * failed run retries all of them. Returns the processed partition
-    * values — processed and retracted alike. */
-  def syncChangedEach(spark: SparkSession, inDir: String, outDir: String,
-      partCol: String, retract: String => Unit = _ => ())(
-      process: String => Unit): Set[String] = {
-    val (seen, current, todo) = stalePartitions(spark, inDir, outDir, partCol)
-    val removed = seen.keySet -- current.keySet
-    removed.toSeq.sorted.foreach(retract)
-    if (todo.nonEmpty || removed.nonEmpty) {
-      todo.toSeq.sorted.foreach(process)
-      saveFingerprints(outDir,
-        (seen -- removed) ++ todo.map(v => v -> current(v)))
+  /** Bring `outDir` up to date with `inDir` by the one memo rule:
+    * `derive` runs once over a partition-filtered read of the stale
+    * partitions, and its result replaces just those `partCol=v` dirs
+    * (dynamic partition overwrite — unchanged partitions are never
+    * touched, byte for byte). `derive` must be partition-wise (its
+    * result for a partition depends only on that partition's rows) and
+    * must keep `partCol`. Returns the partition values recomputed or
+    * retracted this run — empty when the output is already current.
+    */
+  def syncChanged(spark: SparkSession, inDir: String, outDir: String,
+      partCol: String)(derive: DataFrame => DataFrame): Set[String] =
+    sync(spark, inDir, outDir, partCol) { todo =>
+      derive(spark.read.parquet(inDir).filter(col(partCol).isin(todo: _*)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partCol).parquet(outDir)
     }
-    todo ++ removed
-  }
+
+  /** Format-agnostic form of [[syncChanged]] for pipelines that process
+    * each partition as its own unit (the CLI shell path: one process
+    * chain per partition, text in / text out —
+    * [[graft.Cli.runStagesMemoized]]). Same memo rule, retraction
+    * included; `process` receives each stale partition VALUE and must
+    * overwrite `outDir/<partCol>=v` itself. Returns the partition values
+    * recomputed or retracted this run. */
+  def syncChangedEach(spark: SparkSession, inDir: String, outDir: String,
+      partCol: String)(process: String => Unit): Set[String] =
+    sync(spark, inDir, outDir, partCol)(_.foreach(process))
 }

@@ -73,7 +73,7 @@ class BenchSpec extends AnyFunSuite {
     def found(re: scala.util.matching.Regex) =
       mainSources.flatMap(f => re.findAllMatchIn(read(f)).map(_.group(1))).toSet
     assert(found(""""spark\.graft\.([A-Za-z0-9_.]+)"""".r) ===
-      Set("kmeans.k", "bpe.merges", "sea.lexicon", "graph.pinMaxBytes"))
+      Set("kmeans.k", "bpe.merges", "sea.lexicon"))
     assert(found("""SPARK_GRAFT_([A-Z0-9_]+)""".r) ===
       Set("CONF", "CPUS", "ONLY", "SF_DIR", "STAGE_THREADS"))
   }

@@ -125,6 +125,33 @@ class CliSpec extends AnyFunSuite {
     assert(mtimes(s"$out/reduce") === reduceBefore)
   }
 
+  test("memoized fm re-run retracts a deleted input partition") {
+    val in = tmp("graft_cli_rm_in")
+    val out = tmp("graft_cli_rm_out")
+    val docs = Tables.documents(spark, sf)
+    def slice(m: Int) = docs.filter(col("doc_id") % 2 === m).select("text")
+    slice(0).write.mode("overwrite").text(s"$in/src=a")
+    slice(1).write.mode("overwrite").text(s"$in/src=b")
+    def rerun() = Cli.runStagesMemoized(spark, in, out, "src",
+      Seq("tr ' ' '\\n'", "tr 'a-z' 'A-Z'"),
+      reduceCmd = Some("sort | uniq -c"), buckets = 4)
+    assert(rerun() === Set("a", "b"))
+
+    // Upstream takedown: partition b's input vanishes. The re-run
+    // reports it, drops its mapped output, and the reduce equals a
+    // full recompute of what is left.
+    Local.rmTree(new java.io.File(s"$in/src=b"))
+    assert(rerun() === Set("b"))
+    assert(!new java.io.File(s"$out/map/src=b").exists)
+    assert(parseCounts(s"$out/reduce") === fullRecompute(s"$in/src=*"))
+    assert(rerun() === Set.empty)
+
+    // The last partition goes too: a reduce over nothing is empty.
+    Local.rmTree(new java.io.File(s"$in/src=a"))
+    assert(rerun() === Set("a"))
+    assert(parseCounts(s"$out/reduce") === Map.empty)
+  }
+
   test("map-only run streams every line through the command") {
     val in = tmp("graft_cli_in2")
     val out = tmp("graft_cli_out2")

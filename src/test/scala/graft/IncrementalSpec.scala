@@ -39,17 +39,17 @@ class IncrementalSpec extends AnyFunSuite {
     // Day 1: two languages land; first run processes both.
     docs.filter(col("lang").isin(first: _*))
       .write.mode("append").partitionBy("lang").parquet(inDir)
-    val run1 = Incremental.syncPartitioned(spark, inDir, outDir, "lang")(derive)
+    val run1 = Incremental.syncChanged(spark, inDir, outDir, "lang")(derive)
     assert(run1 === first.toSet)
 
     // Day 2: the tree grows; the re-run touches ONLY the new partitions.
     docs.filter(col("lang").isin(grown: _*))
       .write.mode("append").partitionBy("lang").parquet(inDir)
-    val run2 = Incremental.syncPartitioned(spark, inDir, outDir, "lang")(derive)
+    val run2 = Incremental.syncChanged(spark, inDir, outDir, "lang")(derive)
     assert(run2 === grown.toSet)
 
     // A third run finds nothing to do.
-    assert(Incremental.syncPartitioned(spark, inDir, outDir, "lang")(derive)
+    assert(Incremental.syncChanged(spark, inDir, outDir, "lang")(derive)
       === Set.empty)
 
     // The incrementally-built output equals a full recompute.
@@ -146,7 +146,7 @@ class IncrementalSpec extends AnyFunSuite {
     val inDir = tmp("graft_inc_prune")
     docs.filter(col("lang").isin(langs: _*))
       .write.mode("append").partitionBy("lang").parquet(inDir)
-    // The filter syncPartitioned builds is on the partition column, so
+    // The filter syncChanged builds is on the partition column, so
     // it must become a PartitionFilter (metadata pruning), not a data
     // filter — already-processed partitions are never scanned.
     val newOnly = Seq(langs.last)

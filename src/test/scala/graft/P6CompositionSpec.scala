@@ -99,7 +99,7 @@ class P6CompositionSpec extends AnyFunSuite {
     }
     def incSet(expectProcessed: Set[String]): Set[(String, Double)] = {
       val processed =
-        Incremental.syncPartitioned(spark, inDir, incOut, "lang")(deriveCurate)
+        Incremental.syncChanged(spark, inDir, incOut, "lang")(deriveCurate)
       assert(processed === expectProcessed,
         s"incremental re-run touched $processed, expected $expectProcessed")
       invariant(spark.read.parquet(incOut))

@@ -354,6 +354,15 @@ object Clustering {
   private[graft] def effProbes(k: Int): Int =
     math.min(adaptiveProbes(k), routeCount(k))
 
+  /** Does the frame path route at this k? Only when [[effProbes]]
+    * leaves some branch unprobed (K ≥ 10). At K ≤ 9 every branch is
+    * probed, so routing is an identity on results and the frame path
+    * collects the ≤ 9-row centroid frame and scores it with the
+    * literal E-step instead: no distributed coarsening, no member
+    * table, no join. */
+  private[graft] def frameRoutes(k: Int): Boolean =
+    effProbes(k) < routeCount(k)
+
   /** Stage 1 of the routed E-step: each row of `keyed` exploded to its
     * `p` nearest coarse branches (`_rt` column, ≤ p rows per input).
     * r = ⌈√K⌉ ≤ [[LiteralMaxK]] (⇔ K ≤ 4096) runs as one narrow
@@ -514,7 +523,9 @@ object Clustering {
   // longs: ~1.6 MB at K = 10⁷, the 100 TB K∝n design point). Bit
   // parity with the driver-array routed path is PINNED, not assumed
   // (ClusteringSpec: same seeds, same coarsening, same truncating
-  // integer M-step ⇒ identical centroids at overlapping K).
+  // integer M-step ⇒ identical centroids at overlapping K). At K ≤ 9
+  // ([[frameRoutes]] false) there is no coarse level at all: the
+  // E-step scores the collected ≤ 9-row centroid frame as literals.
   // -------------------------------------------------------------------
 
   /** Largest K the driver-array training paths accept: K×dim longs ≈
@@ -615,26 +626,37 @@ object Clustering {
     (used.map(u => coarse(u.toInt)), memberOf)
   }
 
-  /** Routed assignment from FRAME centroids — same two stages as
+  /** Assignment from FRAME centroids (a (cid, cq) frame). Where K
+    * routes ([[frameRoutes]], K ≥ 10) this is the same two stages as
     * [[assignRouted]], but the member table is the K-row centroid
     * frame joined with the coarsening membership (shuffled at scale,
     * exactly the unhinted-join design the array path documents) and
-    * nothing K-sized touches the driver. Unlike assignRouted there is
-    * no literal fallback: this IS the state-path witness at any K —
-    * and at tiny K it is still EXACT, because pEff = min(P, r) probes
-    * every branch (e.g. K=8: r=3, P=3 ⇒ the argmin sees all members,
-    * reproducing the flat assignment bit-for-bit — the property the
-    * oracle-checked frame query rides). */
+    * nothing K-sized touches the driver; there is no literal fallback.
+    * At K ≤ 9 the probes would visit every branch (e.g. K=8: r=3,
+    * P=3), so routing cannot change a result: the ≤ 9 centroid rows
+    * are collected and scored with [[assignLiteral]], which is what
+    * [[assign]] does at that K, and [[coarsenDf]] never runs. Either
+    * way the result at K ≤ 9 is the flat assignment bit-for-bit — the
+    * property the oracle-checked frame query rides. */
   private[graft] def assignFrame(b: DataFrame, cents: DataFrame,
       k: Int): DataFrame = {
-    val (coarse, memberOf) = coarsenDf(cents, routeCount(k))
-    val members = cents.join(memberOf, "cid")
-      .select(col("_rt"), col("cid").as("_ccid"), col("cq").as("_cq"))
-    val keyed = guardXq(b, "assignFrame")
-      .withColumn("_rid", monotonically_increasing_id())
-    val probed = routeProbe(keyed, coarse, effProbes(k))
-    argminOverMembers(probed, members, b.columns.toIndexedSeq)
+    val guarded = guardXq(b, "assignFrame")
+    if (!frameRoutes(k)) assignLiteral(guarded, centroidRows(cents))
+    else {
+      val (coarse, memberOf) = coarsenDf(cents, routeCount(k))
+      val members = cents.join(memberOf, "cid")
+        .select(col("_rt"), col("cid").as("_ccid"), col("cq").as("_cq"))
+      val keyed = guarded.withColumn("_rid", monotonically_increasing_id())
+      argminOverMembers(routeProbe(keyed, coarse, effProbes(k)), members,
+        b.columns.toIndexedSeq)
+    }
   }
+
+  /** A few-row (cid, cq) centroid frame as the driver array the
+    * literal E-step takes, indexed by cid (seeds number 0 until k). */
+  private def centroidRows(cents: DataFrame): Array[Array[Long]] =
+    cents.select("cid", "cq").collect().sortBy(_.getLong(0))
+      .map(_.getSeq[Long](1).toArray)
 
   /** The NULL-xq entry guard shared by every routed/frame scorer (see
     * [[assignRouted]]'s rationale — the top-k routing branch would
@@ -683,22 +705,28 @@ object Clustering {
     * two-level hierarchy per call, which is right inside the training
     * loop (the centroid frame changes every iteration) but would
     * re-pay the O(K^1.5) distributed coarsening per MICRO-BATCH in a
-    * stream — and per VERB INVOCATION on a resume; this factory
-    * serves the memoized routing state ([[frameRouting]]) and returns
-    * the per-batch closure: route + exact argmin over probed members,
-    * identical arithmetic to assignFrame (pinned: stream ≡ batch
-    * row-for-row). */
+    * stream — and per VERB INVOCATION on a resume; where K routes this
+    * factory serves the memoized routing state ([[frameRouting]]) and
+    * returns the per-batch closure: route + exact argmin over probed
+    * members. At K ≤ 9 there is no routing state: the centroid frame
+    * is collected once and the closure scores it with the literal
+    * E-step. Identical arithmetic to assignFrame either way (pinned:
+    * stream ≡ batch row-for-row). */
   private[graft] def frameScorer(s: SparkSession, d: String,
-      k: Int): DataFrame => DataFrame = {
-    val (coarse, members) = frameRouting(s, d, k)
-    val p = effProbes(k)
-    (b: DataFrame) => {
-      val keyed = guardXq(b, "frameScorer")
-        .withColumn("_rid", monotonically_increasing_id())
-      argminOverMembers(routeProbe(keyed, coarse, p), members,
-        b.columns.toIndexedSeq)
+      k: Int): DataFrame => DataFrame =
+    if (!frameRoutes(k)) {
+      val cents = centroidRows(frameCentroids(s, d, k))
+      (b: DataFrame) => assignLiteral(guardXq(b, "frameScorer"), cents)
+    } else {
+      val (coarse, members) = frameRouting(s, d, k)
+      val p = effProbes(k)
+      (b: DataFrame) => {
+        val keyed = guardXq(b, "frameScorer")
+          .withColumn("_rid", monotonically_increasing_id())
+        argminOverMembers(routeProbe(keyed, coarse, p), members,
+          b.columns.toIndexedSeq)
+      }
     }
-  }
 
   /** Largest kept md5-prefix BUCKET in the LAST [[seedFrame]] call
     * this JVM — the seed-stage work-placement observable (StateBench
@@ -763,10 +791,12 @@ object Clustering {
     * centroids as a (cid, cq) DataFrame end-to-end — identical seeds
     * (k smallest (md5(vec_id), vec_id)), identical integer E/M
     * arithmetic, so the result is BIT-IDENTICAL to the driver-array
-    * routed path at the same K (pinned). Each iteration
-    * localCheckpoints the K-row centroid frame (the Graph.scala
-    * fixed-round discipline): lineage stays flat across iterations
-    * and the frame's blocks live on executors, never the driver. */
+    * routed path at the same K (pinned at K=80), and at K ≤ 9, where
+    * [[assignFrame]] does not route, to the exact [[trainHistory]]
+    * (pinned at K=8). Each iteration localCheckpoints the K-row
+    * centroid frame (the Graph.scala fixed-round discipline): lineage
+    * stays flat across iterations and the frame's blocks live on
+    * executors, never the driver. */
   private[graft] def trainFrame(b: DataFrame, k: Int,
       iters: Int): DataFrame = {
     require(k >= 1, s"kmeans k must be >= 1, got $k")
@@ -829,13 +859,13 @@ object Clustering {
     * the stage cache — the frame analogue of [[centroidHistory]]'s
     * memo (and of the persistent store: the materialization IS a
     * parquet table a 100 TB pipeline would maintain). The stage name
-    * carries [[effProbes]] because frame training routes, so its
-    * result depends on P. A loaded store artifact (the pointer memo)
-    * takes precedence — then nothing here trains at all. The build
-    * anchors the corpus fingerprint AT TRAINING TIME, like
-    * [[centroidHistory]]: a corpus swapped after an in-session frame
-    * training can never pair the stale stage with a fresh fingerprint
-    * and poison the frame store. */
+    * carries [[effProbes]] because frame training routes at K ≥ 10
+    * ([[frameRoutes]]), so its result depends on P. A loaded store
+    * artifact (the pointer memo) takes precedence — then nothing here
+    * trains at all. The build anchors the corpus fingerprint AT
+    * TRAINING TIME, like [[centroidHistory]]: a corpus swapped after
+    * an in-session frame training can never pair the stale stage with
+    * a fresh fingerprint and poison the frame store. */
   private[graft] def frameCentroids(s: SparkSession, d: String,
       k: Int): DataFrame = {
     graft.SessionMemo.peek[String](s, frameArtKey(d, k, effProbes(k))) match {
@@ -851,13 +881,13 @@ object Clustering {
 
   /** PUBLIC OPERATOR (frame state): per-vector assignment at k with
     * centroid state distributed end-to-end — the far-K twin of
-    * [[kmeansAssign]]. At tiny K the result is
-    * bit-identical to the exact paths (all branches probed — see
+    * [[kmeansAssign]]. At K ≤ 9 the result is bit-identical to the
+    * exact paths (the literal E-step over the centroid frame — see
     * [[assignFrame]]), which is what the oracle checks; past
     * [[DriverStateMaxK]] this is the ONLY path that does not grow
     * driver state with K. */
   def kmeansAssignFrame(s: SparkSession, d: String, k: Int): DataFrame =
-    frameScorer(s, d, k)(base(s, d)) // memoized routing; ≡ assignFrame
+    frameScorer(s, d, k)(base(s, d)) // memoized state; ≡ assignFrame
       .select(col("vec_id"), col("label"), col("cid"), col("dist2"))
 
   /** Memoized non-negativity verdict per (session, dir): one scan of
@@ -918,22 +948,49 @@ object Clustering {
     centroidHistory(s, d, k).last
 
   /** Force-build the kmeans-family artifacts at the session's default
-    * K: the quantized base stage, the driver-state centroid history
-    * (q_embed_kmeans / elbow / medoid / semantic ride it), and the
-    * frame-state centroid stage + its assignment shape
-    * (q_embed_kmeans_frame — measured 221 Spark jobs / ~16 s when paid
-    * lazily inside the first timed run, r21). All three are maintained
-    * tables at 100 TB, the same family as the IVF codebook warm.
-    * Since r22 the warm also covers q_embed_kelbow's fixed K-sweep
-    * (2, 4, 8, 16): its first run trained three extra
-    * memoized histories lazily — 39 Spark jobs inside the first timed
-    * run (the r21 verdict's candidate #2). Each history is the same
-    * maintained centroid table at another K. */
+    * K: the quantized base stage, the driver-state centroid histories
+    * of q_embed_kelbow's fixed K-sweep (2, 4, 8, 16) plus K
+    * (q_embed_kmeans / elbow / medoid / semantic ride them), and the
+    * frame-state scorer's state (q_embed_kmeans_frame): the centroid
+    * stage, plus the routing memo and member stage where K routes.
+    * Paid lazily, the frame state alone was 221 Spark jobs / ~16 s
+    * inside the first timed run (r21). All are maintained tables at
+    * 100 TB, the same family as the IVF codebook warm.
+    *
+    * The sweep and the frame state are independent trainings, so they
+    * run side by side on a 2-thread pool made here: its threads are
+    * created from the calling thread and inherit its Spark local
+    * properties (the job labels Bench and perfbench attribute by), and
+    * two threads keep the chain at 2 jobs in flight. Both sides share
+    * only memo entries (base stage, corpus fingerprint), each built
+    * once under its slot lock, and the arithmetic is integer and
+    * partitioning-invariant, so the overlap cannot change a result.
+    * Either side's failure fails the warm, once the other side is done
+    * ([[sideBySide]]). */
   def warmKmeansStages(s: SparkSession, d: String): Unit = {
     val k = kOf(s)
-    (Seq(2, 4, 8, 16) :+ k).distinct.foreach(kk => centroidHistory(s, d, kk))
-    kmeansAssignFrame(s, d, k).count()
-    ()
+    sideBySide(
+      () => (Seq(2, 4, 8, 16) :+ k).distinct
+        .foreach(kk => centroidHistory(s, d, kk)),
+      () => { frameScorer(s, d, k); () })
+  }
+
+  /** Run `a` and `b` on a 2-thread pool made here, so both threads
+    * inherit the caller's Spark local properties. Returns once BOTH
+    * have finished, then rethrows the first failure (`a`'s before
+    * `b`'s): a side that outlived its twin's failure would keep
+    * submitting jobs under the caller's label after the call. */
+  private[graft] def sideBySide(a: () => Unit, b: () => Unit): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val sides = Seq(a, b).map(f =>
+        pool.submit(new java.util.concurrent.Callable[Unit] { def call() = f() }))
+      val errs = sides.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+      }
+      errs.headOption.foreach(e => throw e)
+    } finally pool.shutdown()
   }
 
   /** Training invocations this JVM — the persistence spec's observable
@@ -1559,12 +1616,15 @@ object Clustering {
     // The frame-state path's oracle witness: the SAME bit-exact
     // recurrence, but trained and assigned with centroid state as a
     // DataFrame end-to-end (kmeansAssignFrame). At the default K the
-    // frame path is EXACT — pEff = min(P, r) probes every branch (see
-    // assignFrame) — so the DuckDB CTE unroll of the flat recurrence
+    // frame path is EXACT — K ≤ 9 probes every branch, so it scores
+    // the centroid frame with the literal E-step and never routes (see
+    // assignFrame) — and the DuckDB CTE unroll of the flat recurrence
     // replays it bit-for-bit; cluster sizes, integer inertia, and the
     // min member id per cluster all hash-match. A different projection
-    // than q_embed_kmeans on purpose: this row certifies the far-K
-    // STATE spelling, not the report shape.
+    // than q_embed_kmeans on purpose: at K ≤ 9 this row certifies the
+    // frame seeding, the frame M-step and the frame STATE spelling, not
+    // the report shape. Routed frame state (K ≥ 10) is pinned against
+    // the driver-array routed path at K=80 in ClusteringSpec.
     q("q_embed_kmeans_frame",
       s"""WITH ${kmeansCtes()}
         |SELECT CAST(cid AS BIGINT) AS cid,

@@ -114,19 +114,20 @@ object Incremental {
 
   /** Bring `outDir` up to date with `inDir` by the one memo rule:
     * `derive` runs once over a partition-filtered read of the stale
-    * partitions, and its result replaces just those `partCol=v` dirs
-    * (dynamic partition overwrite — unchanged partitions are never
-    * touched, byte for byte). `derive` must be partition-wise (its
-    * result for a partition depends only on that partition's rows) and
-    * must keep `partCol`. Returns the partition values recomputed or
+    * partitions, and its result replaces just those `partCol=v` dirs:
+    * each stale dir is dropped, then the result is appended. Unchanged
+    * partitions are never touched, byte for byte, and a stale partition
+    * that now derives to zero rows leaves no dir behind. `derive` must
+    * be partition-wise (its result for a partition depends only on
+    * that partition's rows) and must keep `partCol`. Returns the partition values recomputed or
     * retracted this run — empty when the output is already current.
     */
   def syncChanged(spark: SparkSession, inDir: String, outDir: String,
       partCol: String)(derive: DataFrame => DataFrame): Set[String] =
     sync(spark, inDir, outDir, partCol) { todo =>
+      todo.foreach(dropOutputPartition(spark, outDir, partCol, _))
       derive(spark.read.parquet(inDir).filter(col(partCol).isin(todo: _*)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+        .write.mode("append")
         .partitionBy(partCol).parquet(outDir)
     }
 

@@ -51,6 +51,48 @@ class BenchSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(shapes)
   }
 
+  test("the kmeans warm submits every job under the caller's label") {
+    // warmKmeansStages overlaps its two trainings on a pool of its own;
+    // the pool's jobs must still count toward the chain that called it.
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val s = spark.newSession() // cold memo: the warm builds every stage
+    val shapes = new Bench.ShapeListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val labels = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty(Bench.LabelKey)))
+          .getOrElse("<none>"))
+        ()
+      }
+    }
+    sc.addSparkListener(shapes)
+    sc.addSparkListener(labels)
+    def labelled(label: String)(body: => Unit): Unit = {
+      sc.setLocalProperty(Bench.LabelKey, label)
+      try body finally sc.setLocalProperty(Bench.LabelKey, null)
+    }
+    try {
+      labelled("kmeans")(ops.Clustering.warmKmeansStages(s, TestSpark.sf))
+      // One listener queue delivers job starts in submission order:
+      // once the sentinel's start is seen, every warm job's is too.
+      labelled("sentinel")(spark.range(0, 10, 1, 1).rdd.count())
+      eventually(timeout(30.seconds)) {
+        assert(seen.contains("sentinel"))
+        assert(shapes("sentinel").jobs == 1)
+      }
+      val warm = seen.asScala.toSeq.takeWhile(_ != "sentinel")
+      assert(warm.nonEmpty)
+      assert(warm.forall(_ == "kmeans"), warm.distinct.mkString(", "))
+      assert(shapes("kmeans").jobs == warm.size)
+    } finally {
+      sc.removeSparkListener(labels)
+      sc.removeSparkListener(shapes)
+    }
+  }
+
   private lazy val mainSources = {
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
     try files.iterator().asScala

@@ -471,6 +471,58 @@ class ClusteringSpec extends AnyFunSuite {
       rows(ops.Clustering.kmeansAssign(spark, sf, 8)))
   }
 
+  test("frame state at K=8: trainFrame == trainHistory(8).last row for row") {
+    // K ≤ 9 probes every branch, so the frame trainer does not route:
+    // its centroids must be the exact driver-array recurrence's.
+    val b = ops.Clustering.base(spark, sf)
+    val it = ops.Clustering.Iters
+    val arr = ops.Clustering.trainHistory(b, 8, it).last
+    val frame = ops.Clustering.trainFrame(b, 8, it)
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSeq))
+      .sortBy(_._1).toSeq
+    assert(frame === arr.toSeq.zipWithIndex.map { case (c, j) =>
+      (j.toLong, c.toSeq) })
+  }
+
+  test("frame state routes only when K leaves a branch unprobed") {
+    // The regime is a pure function of K: every K ≤ 9 probes all
+    // ⌈√K⌉ branches, K = 10 is the first with one left out.
+    assert((1 to 9).forall(k => !ops.Clustering.frameRoutes(k)))
+    assert(Seq(10, 16, 80, 320).forall(ops.Clustering.frameRoutes))
+    // At K=8 the frame assignment builds the centroid stage and no
+    // routing state: no coarse memo, no member stage.
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_frame_exact_corpus").toString
+    Tables.embeddings(spark, sf).write.parquet(Tables.path(dir, "embeddings"))
+    val k = 8
+    val p = ops.Clustering.effProbes(k)
+    assert(ops.Clustering.kmeansAssignFrame(spark, dir, k).count() ===
+      Tables.embeddings(spark, sf).count())
+    def memo(key: String) = SessionMemo.peek[AnyRef](spark, key)
+    assert(memo(s"stage|$dir|kmeans_frame_k${k}_p$p").isDefined,
+      "the frame centroid stage was not built under its usual key")
+    assert(memo(s"kmeans_frame_coarse|$dir|k$k|p$p").isEmpty,
+      "K=8 frame assignment coarsened the centroid frame")
+    assert(memo(s"stage|$dir|kmeans_frame_members_k${k}_p$p").isEmpty,
+      "K=8 frame assignment built a member stage")
+  }
+
+  test("the kmeans warm's side-by-side run waits for both sides before failing") {
+    // A side that outlived its twin's failure would keep submitting
+    // jobs under the caller's label after the warm returned.
+    for (failFirst <- Seq(true, false)) {
+      val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val fail = () => throw new IllegalStateException("side failed")
+      val slow = () => { Thread.sleep(500); slowDone.set(true) }
+      val ex = intercept[IllegalStateException] {
+        if (failFirst) ops.Clustering.sideBySide(fail, slow)
+        else ops.Clustering.sideBySide(slow, fail)
+      }
+      assert(ex.getMessage == "side failed")
+      assert(slowDone.get, s"returned before the slow side finished (failFirst=$failFirst)")
+    }
+  }
+
   test("driver-array training refuses past DriverStateMaxK, naming the frame path") {
     val b = ops.Clustering.base(spark, sf)
     val ex = intercept[IllegalArgumentException] {

@@ -95,6 +95,38 @@ class IncrementalSpec extends AnyFunSuite {
       === full.count(_(1) == langs.head))
   }
 
+  test("a changed partition that derives to zero rows leaves no stale output") {
+    // A write only produces the partitions that have rows, so the
+    // changed partition's old output dir has to be dropped before its
+    // (empty) recompute.
+    val docs = Tables.documents(spark, sf)
+    val langs = docs.select("lang").distinct()
+      .collect().map(_.getString(0)).sorted
+    val inDir = tmp("graft_zero_in")
+    val outDir = tmp("graft_zero_out")
+    def lowIds(df: DataFrame): DataFrame =
+      derive(df.filter(col("doc_id") < 1000000L))
+    docs.write.mode("append").partitionBy("lang").parquet(inDir)
+    assert(Incremental.syncChanged(spark, inDir, outDir, "lang")(lowIds)
+      === langs.toSet)
+    // Replace langs.head's input with rows the derivation filters out.
+    val gone = langs.head
+    Local.rmTree(new java.io.File(s"$inDir/lang=$gone"))
+    docs.filter(col("lang") === gone)
+      .withColumn("doc_id", col("doc_id") + 1000000L)
+      .write.mode("append").partitionBy("lang").parquet(inDir)
+    assert(Incremental.syncChanged(spark, inDir, outDir, "lang")(lowIds)
+      === Set(gone))
+    val incremental = spark.read.parquet(outDir)
+      .select("doc_id", "lang", "n_words", "n_chars_out")
+      .collect().map(_.toSeq).toSet
+    val full = lowIds(spark.read.parquet(inDir))
+      .collect().map(_.toSeq).toSet
+    assert(!incremental.exists(_(1) == gone),
+      s"stale rows for lang=$gone survived the re-run")
+    assert(incremental === full && incremental.nonEmpty)
+  }
+
   test("removed source partitions retract from the output tree") {
     val docs = Tables.documents(spark, sf)
     val langs = docs.select("lang").distinct()

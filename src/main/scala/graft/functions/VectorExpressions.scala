@@ -31,6 +31,13 @@ object VectorFunctions {
     * (see graftnative.LongL2Sq). */
   def longL2Sq(a: Column, b: Column): Column = VectorNative.longL2Sq(a, b)
 
+  /** struct(d, cid) of the centroid in `cents` nearest to an array<long>
+    * column by [[longL2Sq]], ties to the lower cid — one codegen kernel
+    * whose generated code does not depend on K or the centroid values
+    * (see graftnative.LongNearest). */
+  def longNearest(a: Column, cents: Array[Array[Long]]): Column =
+    VectorNative.longNearest(a, cents)
+
   /** Integer dot of two array<long> columns with both sides de-shifted
     * by `shift` — the quantized-basis cosine numerator (see
     * graftnative.LongShiftedDot). */

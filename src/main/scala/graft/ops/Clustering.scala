@@ -52,16 +52,17 @@ import org.apache.spark.sql.functions._
   * THREE E-STEP PATHS (the two exact ones bit-identical by pin,
   * ClusteringSpec):
   *   - `literal` (K ≤ [[LiteralMaxK]]): the nearest centroid is a
-  *     narrow per-row projection against the K×dim centroid LITERAL —
-  *     no join, no shuffle, no driver round-trip per row. A least()
-  *     over K struct literals stops compiling usefully somewhere in
-  *     the hundreds of K, so past the threshold:
+  *     narrow per-row projection against the K×dim centroid array held
+  *     in one kernel (graftnative.LongNearest) — no join, no shuffle,
+  *     no driver round-trip per row. The array rides in every task's
+  *     serialized plan, so past the threshold:
   *   - `join`: centroids become a broadcast frame; each vector meets
   *     all K via a broadcast cross join and argmin is the
   *     min(struct(d, cid)) AGGREGATE — struct ordering is
-  *     lexicographic, so ties break by cid exactly like least(). The
-  *     partial (map-side) min collapses the K-fold row blowup before
-  *     the shuffle, so the exchanged data is one row per vector. Exact
+  *     lexicographic, so ties break by cid exactly like the literal
+  *     path. The partial (map-side) min collapses the K-fold row
+  *     blowup before the shuffle, so the exchanged data is one row per
+  *     vector. Exact
   *     — and n×K distance work with a K×dim broadcast, which is the
   *     r14-flagged quadratic in the K∝n SemDeDup regime, so:
   *   - `routed` (the K∝n scale path, r15): a TWO-LEVEL hierarchy. The
@@ -131,9 +132,9 @@ object Clustering {
     * non-default `spark.graft.bpe.merges`. */
   private[ops] val K = 8
   private[graft] val Iters = 4
-  /** Largest K [[assign]] serves with the literal E-step: past a few
-    * hundred struct literals the least() expression tree dominates
-    * compile time, so the broadcast-join path takes over well before. */
+  /** Largest K [[assign]] serves with the literal E-step, whose
+    * centroids ship inside every task; past it the broadcast-join path
+    * ships them once per executor. */
   private[graft] val LiteralMaxK = 64
 
   /** Largest K the dispatch serves with the EXACT join E-step;
@@ -181,19 +182,19 @@ object Clustering {
   private def dist2(c: Array[Long]): Column =
     l2sq(col("xq"), typedLit(c.toSeq))
 
-  /** struct(d, cid) of the nearest centroid — least() over K struct
-    * literals orders by (distance, cid), so ties (possible only for
-    * coinciding centroids) break deterministically. */
-  private def best(cents: Array[Array[Long]]): Column =
-    least(cents.zipWithIndex.toIndexedSeq.map { case (c, j) =>
-      struct(dist2(c).as("d"), lit(j.toLong).as("cid"))
-    }: _*)
+  /** struct(d, cid) of the centroid nearest to xq, ordered by
+    * (distance, cid), so ties (possible only for coinciding centroids)
+    * break deterministically. One kernel whose generated code is the
+    * same for every K and every centroid set: a Lloyd loop or a K sweep
+    * compiles it once. */
+  private def nearest(cents: Array[Array[Long]]): Column =
+    graft.functions.VectorFunctions.longNearest(col("xq"), cents)
 
   /** Literal-path assignment: `b` plus (cid, dist2), one narrow
     * projection, no join, no shuffle. */
   private[graft] def assignLiteral(b: DataFrame,
       cents: Array[Array[Long]]): DataFrame =
-    b.withColumn("_dc", best(cents))
+    b.withColumn("_dc", nearest(cents))
       .withColumn("cid", col("_dc.cid"))
       .withColumn("dist2", col("_dc.d"))
       .drop("_dc")
@@ -201,9 +202,9 @@ object Clustering {
   /** Broadcast-join assignment — the large-K path: same (cid, dist2)
     * columns, bit-identical values (pinned against the literal path in
     * ClusteringSpec). min(struct(d, cid)) compares lexicographically,
-    * reproducing least()'s (distance, cid) tie-break; the partial
-    * aggregate collapses the K-fold cross-join blowup map-side, so the
-    * shuffle carries one row per vector. */
+    * reproducing the literal kernel's (distance, cid) tie-break; the
+    * partial aggregate collapses the K-fold cross-join blowup map-side,
+    * so the shuffle carries one row per vector. */
   private[graft] def assignJoin(b: DataFrame,
       cents: Array[Array[Long]]): DataFrame = {
     val s = b.sparkSession
@@ -525,7 +526,9 @@ object Clustering {
   // (ClusteringSpec: same seeds, same coarsening, same truncating
   // integer M-step ⇒ identical centroids at overlapping K). At K ≤ 9
   // ([[frameRoutes]] false) there is no coarse level at all: the
-  // E-step scores the collected ≤ 9-row centroid frame as literals.
+  // E-step scores the collected ≤ 9-row centroid frame with the
+  // literal kernel, and the registry's centroid stage is written from
+  // the driver-array history ([[frameCentroids]]).
   // -------------------------------------------------------------------
 
   /** Largest K the driver-array training paths accept: K×dim longs ≈
@@ -602,15 +605,8 @@ object Clustering {
             .as("sv"), count(lit(1)).as("n"))
           .collect() // bounded: ≤ r rows — the √K driver level
         driverStateRows.addAndGet(m.length.toLong)
-        val next = coarse.map(_.clone()) // empty branches carry forward
-        m.foreach { row =>
-          val br = next(row.getLong(0).toInt)
-          val sv = row.getSeq[Long](1)
-          val n = row.getLong(2)
-          var i = 0
-          while (i < br.length) { br(i) = sv(i) / n; i += 1 }
-        }
-        coarse = next
+        coarse = meanStep(coarse, // empty branches carry forward
+          m.map(r => (r.getLong(0).toInt, r.getSeq[Long](1), r.getLong(2))))
       }
       it += 1
     }
@@ -801,11 +797,7 @@ object Clustering {
       iters: Int): DataFrame = {
     require(k >= 1, s"kmeans k must be >= 1, got $k")
     trainCounter.incrementAndGet()
-    val mnRow = b.agg(min(array_min(col("xq")))).head()
-    require(!mnRow.isNullAt(0), s"need >= $k vectors to seed kmeans (got 0)")
-    require(mnRow.getLong(0) >= 0L,
-      s"kmeans quantization saw coordinate <= -$ShiftD " +
-        s"(min scaled ${mnRow.getLong(0)})")
+    requireSeedable(b, k)
     // Seeds as a DISTRIBUTED rank (r16 verdict #2: the previous
     // TakeOrdered + partition-less window funneled all k seed rows
     // through ONE task — ~5 GB at the K≈10⁷ design point), then
@@ -860,23 +852,40 @@ object Clustering {
     * memo (and of the persistent store: the materialization IS a
     * parquet table a 100 TB pipeline would maintain). The stage name
     * carries [[effProbes]] because frame training routes at K ≥ 10
-    * ([[frameRoutes]]), so its result depends on P. A loaded store
-    * artifact (the pointer memo) takes precedence — then nothing here
-    * trains at all. The build anchors the corpus fingerprint AT
-    * TRAINING TIME, like [[centroidHistory]]: a corpus swapped after
-    * an in-session frame training can never pair the stale stage with
-    * a fresh fingerprint and poison the frame store. */
+    * ([[frameRoutes]]), so its result depends on P. At K ≤ 9 the frame
+    * trainer would run the exact recurrence (pinned equal to
+    * [[trainHistory]]), so the stage is written from the memoized
+    * [[centroidHistory]]'s last centroids instead: the frame and array
+    * spellings share one training. A loaded store artifact (the
+    * pointer memo) takes precedence — then nothing here trains at all.
+    * The build anchors the corpus fingerprint AT TRAINING TIME, like
+    * [[centroidHistory]] (which anchors it itself at K ≤ 9): a corpus
+    * swapped after an in-session frame training can never pair the
+    * stale stage with a fresh fingerprint and poison the frame store. */
   private[graft] def frameCentroids(s: SparkSession, d: String,
       k: Int): DataFrame = {
     graft.SessionMemo.peek[String](s, frameArtKey(d, k, effProbes(k))) match {
       case Some(path) => s.read.parquet(path)
       case None =>
         StageCache.memoized(s, d, s"kmeans_frame_k${k}_p${effProbes(k)}") {
-          graft.SessionMemo.memo(s, s"kmeans_fp|$d")(
-            java.lang.Long.valueOf(corpusFingerprint(s, d)))
-          trainFrame(base(s, d), k, Iters)
+          if (!frameRoutes(k)) centroidFrame(s, centroids(s, d, k))
+          else {
+            graft.SessionMemo.memo(s, s"kmeans_fp|$d")(
+              java.lang.Long.valueOf(corpusFingerprint(s, d)))
+            trainFrame(base(s, d), k, Iters)
+          }
         }
     }
+  }
+
+  /** A driver centroid array as the (cid, cq) frame the frame path
+    * reads, cid = array index. */
+  private def centroidFrame(s: SparkSession,
+      cents: Array[Array[Long]]): DataFrame = {
+    import s.implicits._
+    cents.zipWithIndex.toIndexedSeq
+      .map { case (c, j) => (j.toLong, c.toIndexedSeq) }
+      .toDF("cid", "cq")
   }
 
   /** PUBLIC OPERATOR (frame state): per-vector assignment at k with
@@ -931,7 +940,7 @@ object Clustering {
     * r14 advice). */
   private[graft] def centroidHistory(s: SparkSession, d: String,
       k: Int): Seq[Array[Array[Long]]] =
-    graft.SessionMemo.memo(s, s"kmeans_cents|$d|$k|${modeKey(k)}") {
+    graft.SessionMemo.memo(s, centsKey(d, k)) {
       // Anchor the session's corpus fingerprint AT TRAINING TIME (one
       // narrow scan, once per session+dir): persistentCentroidHistory
       // compares against this anchor, so a corpus swapped AFTER an
@@ -942,6 +951,10 @@ object Clustering {
         java.lang.Long.valueOf(corpusFingerprint(s, d)))
       trainHistory(base(s, d), k, Iters)
     }
+
+  /** The [[centroidHistory]] memo key; a store load seeds it too. */
+  private def centsKey(d: String, k: Int): String =
+    s"kmeans_cents|$d|$k|${modeKey(k)}"
 
   private[graft] def centroids(s: SparkSession, d: String,
       k: Int): Array[Array[Long]] =
@@ -957,40 +970,32 @@ object Clustering {
     * inside the first timed run (r21). All are maintained tables at
     * 100 TB, the same family as the IVF codebook warm.
     *
-    * The sweep and the frame state are independent trainings, so they
-    * run side by side on a 2-thread pool made here: its threads are
-    * created from the calling thread and inherit its Spark local
-    * properties (the job labels Bench and perfbench attribute by), and
-    * two threads keep the chain at 2 jobs in flight. Both sides share
-    * only memo entries (base stage, corpus fingerprint), each built
-    * once under its slot lock, and the arithmetic is integer and
-    * partitioning-invariant, so the overlap cannot change a result.
-    * Either side's failure fails the warm, once the other side is done
-    * ([[sideBySide]]). */
+    * Two serial steps: [[centroidHistories]] trains the sweep's
+    * literal-path K's in one joint Lloyd loop, then the frame scorer
+    * builds its state — at K ≤ 9 the centroid stage is written from
+    * the sweep's history of K, so nothing trains twice. */
   def warmKmeansStages(s: SparkSession, d: String): Unit = {
     val k = kOf(s)
-    sideBySide(
-      () => (Seq(2, 4, 8, 16) :+ k).distinct
-        .foreach(kk => centroidHistory(s, d, kk)),
-      () => { frameScorer(s, d, k); () })
+    centroidHistories(s, d, Seq(2, 4, 8, 16) :+ k)
+    frameScorer(s, d, k)
   }
 
-  /** Run `a` and `b` on a 2-thread pool made here, so both threads
-    * inherit the caller's Spark local properties. Returns once BOTH
-    * have finished, then rethrows the first failure (`a`'s before
-    * `b`'s): a side that outlived its twin's failure would keep
-    * submitting jobs under the caller's label after the call. */
-  private[graft] def sideBySide(a: () => Unit, b: () => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val sides = Seq(a, b).map(f =>
-        pool.submit(new java.util.concurrent.Callable[Unit] { def call() = f() }))
-      val errs = sides.flatMap { f =>
-        try { f.get(); None }
-        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
-      }
-      errs.headOption.foreach(e => throw e)
-    } finally pool.shutdown()
+  /** [[centroidHistory]] for several K's at once: the literal-path K's
+    * (≤ [[LiteralMaxK]]) whose memo is still cold train together in
+    * [[trainSweep]], and each history seeds its K's memo; larger K's
+    * train one at a time through [[centroidHistory]]. */
+  private[graft] def centroidHistories(s: SparkSession, d: String,
+      ks: Seq[Int]): Unit = {
+    val (joint, single) = ks.distinct.partition(_ <= LiteralMaxK)
+    val cold = joint.filter(k =>
+      graft.SessionMemo.peek[AnyRef](s, centsKey(d, k)).isEmpty)
+    if (cold.nonEmpty) {
+      graft.SessionMemo.memo(s, s"kmeans_fp|$d")(
+        java.lang.Long.valueOf(corpusFingerprint(s, d)))
+      val hists = trainSweep(base(s, d), cold, Iters)
+      cold.foreach(k => graft.SessionMemo.memo(s, centsKey(d, k))(hists(k)))
+    }
+    single.foreach(k => centroidHistory(s, d, k))
   }
 
   /** Training invocations this JVM — the persistence spec's observable
@@ -1081,7 +1086,7 @@ object Clustering {
           s"artifact $file header malformed: ${other.mkString(" ")}")
       }
       // seed the session memo so registry queries reuse the load
-      graft.SessionMemo.memo(s, s"kmeans_cents|$d|$k|$mode")(hist)
+      graft.SessionMemo.memo(s, centsKey(d, k))(hist)
     } else {
       val hist = centroidHistory(s, d, k)
       val dim = if (hist.head.isEmpty) 0 else hist.head.head.length
@@ -1267,7 +1272,8 @@ object Clustering {
     trace += ((0L, chosen(0)._1, None))
     var i = 1
     while (i < k) {
-      val mind = chosen.map(c => dist2(c._2)).reduce(least(_, _))
+      // each vector's min distance to the chosen set
+      val mind = nearest(chosen.map(_._2).toArray).getField("d")
       val best = b
         .select(struct((-mind).as("nd"), col("vec_id").as("v"),
           col("xq").as("x")).as("s"))
@@ -1404,23 +1410,8 @@ object Clustering {
         "training: centroid state must not grow on the driver at this " +
         "scale — use the frame-state path (kmeansAssignFrame)")
     trainCounter.incrementAndGet()
-    // Non-negativity guard for the truncating-division contract: one
-    // scan of the materialized narrow stage, once per (session, dir).
-    // min() over zero rows is NULL — read nullable so an empty corpus
-    // reaches the clear seed-count require below instead of an NPE.
-    val mnRow = b.agg(min(array_min(col("xq")))).head()
-    require(!mnRow.isNullAt(0), s"need >= $k vectors to seed kmeans (got 0)")
-    val mn = mnRow.getLong(0)
-    require(mn >= 0L,
-      s"kmeans quantization saw coordinate <= -$ShiftD (min scaled $mn)")
-    // Seeds: k smallest (md5(vec_id), vec_id) — one TakeOrdered pass.
-    var cents: Array[Array[Long]] = b
-      .select(col("xq"), md5(col("vec_id").cast("string")).as("h"),
-        col("vec_id"))
-      .orderBy(col("h"), col("vec_id")).limit(k)
-      .select("xq").collect()
-      .map(_.getSeq[Long](0).toArray)
-    driverStateRows.addAndGet(cents.length.toLong)
+    requireSeedable(b, k)
+    var cents = seedRows(b, k)
     require(cents.length == k, s"need >= $k vectors to seed kmeans")
     val hist = Seq.newBuilder[Array[Array[Long]]]
     hist += cents
@@ -1445,19 +1436,94 @@ object Clustering {
           .as("sv"), count(lit(1)).as("n"))
         .collect() // bounded: ≤ k rows (and k ≤ DriverStateMaxK)
       driverStateRows.addAndGet(m.length.toLong)
-      val next = cents.map(_.clone()) // empty clusters carry forward
-      m.foreach { r =>
-        val row = next(r.getLong(0).toInt)
-        val sv = r.getSeq[Long](1)
-        val n = r.getLong(2)
-        var i = 0
-        while (i < row.length) { row(i) = sv(i) / n; i += 1 }
-      }
-      cents = next
+      cents = meanStep(cents,
+        m.map(r => (r.getLong(0).toInt, r.getSeq[Long](1), r.getLong(2))))
       hist += cents
       it += 1
     }
     hist.result()
+  }
+
+  /** [[trainHistory]] for several literal-path K's (each ≤
+    * [[LiteralMaxK]]) in ONE Lloyd loop — the K sweep's recurrences are
+    * independent, so they can share every scan and stay bit-identical
+    * to one [[trainHistory]] per K (pinned). One non-negativity scan;
+    * one seed collect of the largest K's rows, whose first k rows are
+    * K=k's seeds because the seed order (md5(vec_id), vec_id) does not
+    * depend on k; then per iteration one E-step that tags each row
+    * with every K's nearest centroid and one [[LongVecSum]] aggregate
+    * keyed by (K, cid). Rows without a vector are dropped before the
+    * E-step — [[trainHistory]] drops them after it, before the same
+    * aggregate. Counts one training per K in [[trainCounter]]. */
+  private[graft] def trainSweep(b: DataFrame, ks: Seq[Int],
+      iters: Int): Map[Int, Vector[Array[Array[Long]]]] = {
+    val sweep = ks.distinct.sorted
+    require(sweep.nonEmpty && sweep.forall(k => k >= 1 && k <= LiteralMaxK),
+      s"trainSweep takes K's in 1..$LiteralMaxK, got ${ks.mkString(",")}")
+    trainCounter.addAndGet(sweep.length.toLong)
+    requireSeedable(b, sweep.head)
+    val seeds = seedRows(b, sweep.last)
+    sweep.foreach(k =>
+      require(seeds.length >= k, s"need >= $k vectors to seed kmeans"))
+    var hist = sweep.map(k => k -> Vector(seeds.take(k).map(_.clone()))).toMap
+    val vecs = b.filter(size(col("xq")) > 0).select("xq")
+    var it = 0
+    while (it < iters) {
+      val tags = array(sweep.map(k => struct(lit(k).as("k"),
+        nearest(hist(k).last).getField("cid").as("cid"))): _*)
+      val m = vecs.select(explode(tags).as("_t"), col("xq"))
+        .groupBy(col("_t.k").as("k"), col("_t.cid").as("cid"))
+        .agg(graft.functions.VectorFunctions.longVecSum(col("xq"))
+          .as("sv"), count(lit(1)).as("n"))
+        .collect() // bounded: ≤ Σ k rows
+      driverStateRows.addAndGet(m.length.toLong)
+      val byK = m.groupBy(_.getInt(0))
+      hist = hist.map { case (k, h) => k -> (h :+ meanStep(h.last,
+        byK.getOrElse(k, Array.empty[org.apache.spark.sql.Row])
+          .map(r => (r.getLong(1).toInt, r.getSeq[Long](2), r.getLong(3))))) }
+      it += 1
+    }
+    hist
+  }
+
+  /** Non-negativity guard for the truncating-division contract: one
+    * scan of the materialized narrow stage. min() over zero rows is
+    * NULL — read nullable so an empty corpus gets the clear seed-count
+    * error instead of an NPE. */
+  private def requireSeedable(b: DataFrame, k: Int): Unit = {
+    val mnRow = b.agg(min(array_min(col("xq")))).head()
+    require(!mnRow.isNullAt(0), s"need >= $k vectors to seed kmeans (got 0)")
+    val mn = mnRow.getLong(0)
+    require(mn >= 0L,
+      s"kmeans quantization saw coordinate <= -$ShiftD (min scaled $mn)")
+  }
+
+  /** Seeds: the vectors of the k smallest (md5(vec_id), vec_id) rows in
+    * that order — one TakeOrdered pass; fewer rows if the corpus is
+    * smaller. */
+  private def seedRows(b: DataFrame, k: Int): Array[Array[Long]] = {
+    val seeds = b
+      .select(col("xq"), md5(col("vec_id").cast("string")).as("h"),
+        col("vec_id"))
+      .orderBy(col("h"), col("vec_id")).limit(k)
+      .select("xq").collect()
+      .map(_.getSeq[Long](0).toArray)
+    driverStateRows.addAndGet(seeds.length.toLong)
+    seeds
+  }
+
+  /** The M-step's truncating integer means: each (id, Σx, n) row
+    * replaces centroid `id` with Σx div n; a centroid with no row (an
+    * empty cluster) carries forward. */
+  private def meanStep(cents: Array[Array[Long]],
+      sums: Array[(Int, Seq[Long], Long)]): Array[Array[Long]] = {
+    val next = cents.map(_.clone())
+    sums.foreach { case (id, sv, n) =>
+      val row = next(id)
+      var i = 0
+      while (i < row.length) { row(i) = sv(i) / n; i += 1 }
+    }
+    next
   }
 
   /** PUBLIC OPERATOR: per-vector cluster assignment at an explicit k —
@@ -1668,10 +1734,10 @@ object Clustering {
     // pick's member count and local cover radius (max member d²). The
     // numbers a curation pipeline reads before trusting the picks as
     // a coverage set: which exemplars carry how much of the corpus,
-    // and how far the worst-covered member sits. One narrow pass (k
-    // struct literals, the assignLiteral shape — no join, no shuffle
-    // before the k-row aggregate); the oracle replays the same argmin
-    // from the trace CTEs' pick set.
+    // and how far the worst-covered member sits. One narrow pass (the
+    // k picks in one nearest-centroid kernel, the assignLiteral shape —
+    // no join, no shuffle before the k-row aggregate); the oracle
+    // replays the same argmin from the trace CTEs' pick set.
     q("q_embed_kcenter_report", {
       // the per-pick distances come from ONE e×pickCoords join on
       // (idx), never K correlated e×e scalar-subquery joins — the
@@ -1708,13 +1774,13 @@ object Clustering {
         .filter(col("vec_id").isInCollection(trace.map(_._2)))
         .select("vec_id", "xq").collect()
         .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
-      val nearest = least(trace.map { case (r, v, _) =>
-        struct(dist2(vecOf(v)).as("d"), lit(r).as("r"))
-      }: _*)
+      // the trace lists ranks 0 until k in order, so a pick's index in
+      // the centroid array is its rank
+      val picks = trace.map { case (_, v, _) => vecOf(v) }.toArray
       val pickDf = trace.map { case (r, v, _) => (r, v) }
         .toDF("sel_rank", "vec_id")
-      b.withColumn("_n", nearest)
-        .groupBy(col("_n.r").as("sel_rank"))
+      b.withColumn("_n", nearest(picks))
+        .groupBy(col("_n.cid").as("sel_rank"))
         .agg(count(lit(1)).as("n_members"), max(col("_n.d")).as("max_d2"))
         .join(broadcast(pickDf), "sel_rank")
         .select(col("sel_rank"), col("vec_id"), col("n_members"),

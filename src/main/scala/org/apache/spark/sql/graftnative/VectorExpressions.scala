@@ -1,11 +1,13 @@
 package org.apache.spark.sql.graftnative
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 
 /** Native Catalyst expression for the dense dot product of two
   * `array<double>` columns (CAP-EXPR-CUSTOM, SURVEY §4.3.1).
@@ -151,6 +153,88 @@ case class LongL2Sq(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): LongL2Sq =
     copy(left = newLeft, right = newRight)
+}
+
+/** The nearest of a fixed set of integer centroids to an `array<long>`
+  * row, as `struct<d: bigint, cid: bigint>` — the k-means literal
+  * E-step's argmin in one kernel. It returns exactly what
+  * `least(struct(graft_long_l2sq(x, c_0), 0L), …, struct(…, K−1))`
+  * returns: the smallest [[LongL2Sq]] distance, ties to the lower
+  * centroid id, and a NULL distance ordered below every number (so a
+  * NULL, empty or ragged row gives (NULL, 0)). Unlike that expression
+  * tree, whose generated code grows with K and differs for every set
+  * of centroid values, the centroids ride in the expression object
+  * (`addReferenceObj`): the generated code is one call, the same for
+  * every K and every centroid set, so a Lloyd loop compiles its E-step
+  * once.
+  *
+  * `cents` is an array, so equality and hashing compare it by content
+  * (the case-class default compares arrays by reference, which would
+  * break plan canonicalization).
+  */
+case class LongNearest(child: Expression, cents: Array[Array[Long]])
+    extends UnaryExpression with ExpectsInputTypes {
+
+  require(cents.nonEmpty, "graft_long_nearest needs at least one centroid")
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType))
+  override def dataType: DataType = StructType(Seq(
+    StructField("d", LongType, nullable = true),
+    StructField("cid", LongType, nullable = false)))
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_long_nearest"
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"k=${cents.length}")
+
+  def nearestOf(x: ArrayData): InternalRow = {
+    if (x == null) return new GenericInternalRow(Array[Any](null, 0L))
+    val n = x.numElements()
+    var best = 0
+    var bd = 0L
+    var j = 0
+    while (j < cents.length) {
+      val c = cents(j)
+      // a NULL distance sorts first, and earlier ids win ties
+      if (c.length != n) return new GenericInternalRow(Array[Any](null, j.toLong))
+      var acc = 0L
+      var i = 0
+      while (i < n) {
+        if (x.isNullAt(i)) return new GenericInternalRow(Array[Any](null, j.toLong))
+        val d = x.getLong(i) - c(i)
+        acc += d * d
+        i += 1
+      }
+      if (j == 0 || acc < bd) { bd = acc; best = j }
+      j += 1
+    }
+    new GenericInternalRow(Array[Any](bd, best.toLong))
+  }
+
+  override def eval(input: InternalRow): Any =
+    nearestOf(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("nearest", this, classOf[LongNearest].getName)
+    val x = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${x.code}
+      |final ${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  $ref.nearestOf(${x.isNull} ? null : ${x.value});
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override def equals(o: Any): Boolean = o match {
+    case that: LongNearest => child == that.child &&
+      java.util.Arrays.deepEquals(cents.asInstanceOf[Array[AnyRef]],
+        that.cents.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+
+  override def hashCode(): Int = 31 * child.hashCode() +
+    java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]])
+
+  override protected def withNewChildInternal(newChild: Expression): LongNearest =
+    copy(child = newChild)
 }
 
 /** Integer dot product of two `array<long>` columns with a constant
@@ -1016,6 +1100,9 @@ object VectorNative {
   def longL2Sq(a: Column, b: Column): Column =
     ExpressionUtils.column(
       LongL2Sq(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+
+  def longNearest(a: Column, cents: Array[Array[Long]]): Column =
+    ExpressionUtils.column(LongNearest(ExpressionUtils.expression(a), cents))
 
   def longShiftedDot(a: Column, b: Column, shift: Long): Column =
     ExpressionUtils.column(LongShiftedDot(

@@ -52,8 +52,8 @@ class BenchSpec extends AnyFunSuite {
   }
 
   test("the kmeans warm submits every job under the caller's label") {
-    // warmKmeansStages overlaps its two trainings on a pool of its own;
-    // the pool's jobs must still count toward the chain that called it.
+    // Every job the warm submits must count toward the chain that
+    // called it.
     val spark = TestSpark.spark
     val sc = spark.sparkContext
     val s = spark.newSession() // cold memo: the warm builds every stage
@@ -87,6 +87,10 @@ class BenchSpec extends AnyFunSuite {
       assert(warm.nonEmpty)
       assert(warm.forall(_ == "kmeans"), warm.distinct.mkString(", "))
       assert(shapes("kmeans").jobs == warm.size)
+      // Shape pin: one joint Lloyd loop for the K sweep, and the K=8
+      // frame stage written from its history. Job counts can differ by
+      // a job or two between runs, hence the slack.
+      assert(warm.size <= 30, s"the kmeans warm ran ${warm.size} jobs")
     } finally {
       sc.removeSparkListener(labels)
       sc.removeSparkListener(shapes)

@@ -296,13 +296,14 @@ class ClusteringSpec extends AnyFunSuite {
     emb.write.parquet(Tables.path(dir, "embeddings"))
     val k = 6 // unused by any other test: the session memo is cold
     val c0 = ops.Clustering.trainCounter.get()
-    ops.Clustering.persistentCentroidHistory(spark, dir, k, store)
+    val h1 = ops.Clustering.persistentCentroidHistory(spark, dir, k, store)
     assert(ops.Clustering.trainCounter.get() === c0 + 1)
-    // a frame-state consumer trains (and stage-caches) its centroids
-    // over the same corpus — the retrain must invalidate this too
+    // a frame-state consumer stage-caches its centroids over the same
+    // corpus — the retrain must invalidate this too. At K ≤ 9 the stage
+    // is written from the array history, so it trains nothing more.
     assert(ops.Clustering.kmeansAssignFrame(spark, dir, k).count() ===
       emb.count())
-    assert(ops.Clustering.trainCounter.get() === c0 + 2)
+    assert(ops.Clustering.trainCounter.get() === c0 + 1)
     // in-place refresh: append a re-identified slice (the
     // CAP-INCREMENTAL shape) — the fingerprint moves
     emb.limit(7).withColumn("vec_id", col("vec_id") + lit(900000L))
@@ -316,27 +317,31 @@ class ClusteringSpec extends AnyFunSuite {
     // ... and the explicit verb is the sanctioned recovery: it
     // retrains over the LIVE corpus (work observable moves)
     val h2 = ops.Clustering.retrainCentroids(spark, dir, k, store)
-    assert(ops.Clustering.trainCounter.get() === c0 + 3,
+    assert(ops.Clustering.trainCounter.get() === c0 + 2,
       "retrainCentroids did not retrain")
     // the retrained base really saw the appended rows
     assert(ops.Clustering.base(spark, dir).count() === emb.count() + 7)
     // the frame-state stage was invalidated too (r16 review #1): the
-    // next frame read retrains over the rebuilt base — fresh-corpus
-    // row count, counter moves — instead of silently pairing
-    // old-corpus centroids with the new base
+    // next frame read serves the retrained centroids over the rebuilt
+    // base instead of silently pairing old-corpus centroids with it
     assert(ops.Clustering.kmeansAssignFrame(spark, dir, k).count() ===
       emb.count() + 7)
-    assert(ops.Clustering.trainCounter.get() === c0 + 4,
+    assert(!h1.last.toSeq.map(_.toSeq).equals(h2.last.toSeq.map(_.toSeq)),
+      "the refresh did not move the centroids: the stale check is vacuous")
+    assert(ops.Clustering.frameCentroids(spark, dir, k).collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).sortBy(_._1).toSeq ===
+      h2.last.toSeq.zipWithIndex.map { case (c, j) => (j.toLong, c.toSeq) },
       "retrain left a stale frame-centroid stage in place")
+    assert(ops.Clustering.trainCounter.get() === c0 + 2)
     // load-after-retrain is the new history: bit-stable, no training —
     // in this session (memo seeded by the verb) ...
     val h3 = ops.Clustering.persistentCentroidHistory(spark, dir, k, store)
-    assert(ops.Clustering.trainCounter.get() === c0 + 4,
+    assert(ops.Clustering.trainCounter.get() === c0 + 2,
       "post-retrain load retrained again")
     // ... and in a fresh session (only the swapped artifact explains it)
     val s2 = spark.newSession()
     val h4 = ops.Clustering.persistentCentroidHistory(s2, dir, k, store)
-    assert(ops.Clustering.trainCounter.get() === c0 + 4,
+    assert(ops.Clustering.trainCounter.get() === c0 + 2,
       "fresh session retrained despite the swapped artifact")
     Seq(h3, h4).foreach { h =>
       assert(h.length === h2.length)
@@ -507,20 +512,82 @@ class ClusteringSpec extends AnyFunSuite {
       "K=8 frame assignment built a member stage")
   }
 
-  test("the kmeans warm's side-by-side run waits for both sides before failing") {
-    // A side that outlived its twin's failure would keep submitting
-    // jobs under the caller's label after the warm returned.
-    for (failFirst <- Seq(true, false)) {
-      val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val fail = () => throw new IllegalStateException("side failed")
-      val slow = () => { Thread.sleep(500); slowDone.set(true) }
-      val ex = intercept[IllegalStateException] {
-        if (failFirst) ops.Clustering.sideBySide(fail, slow)
-        else ops.Clustering.sideBySide(slow, fail)
-      }
-      assert(ex.getMessage == "side failed")
-      assert(slowDone.get, s"returned before the slow side finished (failFirst=$failFirst)")
+  private def hists(h: Seq[Array[Array[Long]]]) = h.map(_.map(_.toSeq).toSeq)
+
+  test("joint K sweep: every history equals its own trainHistory bit for bit") {
+    val b = ops.Clustering.base(spark, sf)
+    val it = ops.Clustering.Iters
+    val ks = Seq(2, 4, 8, 16)
+    val joint = ops.Clustering.trainSweep(b, ks, it)
+    assert(joint.keySet === ks.toSet)
+    ks.foreach { k =>
+      assert(hists(joint(k)) ===
+        hists(ops.Clustering.trainHistory(b, k, it)), s"K=$k")
     }
+  }
+
+  test("joint K sweep: NULL, empty and duplicated rows follow trainHistory's rules") {
+    // Vector-less rows are dropped from every mean; a fully duplicated
+    // row weighs twice. The 16 seed rows keep their vectors, and some
+    // of them are duplicated, so two seeds coincide and ties go to the
+    // lower cid.
+    val b = ops.Clustering.base(spark, sf)
+    val order = b.select(col("vec_id"),
+        md5(col("vec_id").cast("string")).as("h"))
+      .orderBy("h", "vec_id").collect().map(_.getLong(0))
+    val others = order.drop(16)
+    val nullIds = others.take(10).toSeq
+    val emptyIds = others.slice(10, 20).toSeq
+    val odd = b.withColumn("xq",
+      when(col("vec_id").isInCollection(nullIds), lit(null))
+        .when(col("vec_id").isInCollection(emptyIds),
+          array().cast("array<bigint>"))
+        .otherwise(col("xq")))
+    val frame = odd.unionAll(odd.filter(col("vec_id")
+      .isInCollection(order.take(3).toSeq ++ others.slice(5, 30))))
+    val it = ops.Clustering.Iters
+    val ks = Seq(2, 4, 8, 16)
+    val joint = ops.Clustering.trainSweep(frame, ks, it)
+    ks.foreach { k =>
+      assert(hists(joint(k)) ===
+        hists(ops.Clustering.trainHistory(frame, k, it)), s"K=$k")
+    }
+    // at K=2 both seeds are the duplicated first vector: every tie
+    // goes to cid 0, so cid 1 never gains a member and keeps its seed
+    val seed = joint(2).head
+    assert(seed(0).sameElements(seed(1)))
+    assert(joint(2).forall(_(1).sameElements(seed(1))))
+  }
+
+  test("the kmeans sweep trains K past LiteralMaxK on its own") {
+    val b = ops.Clustering.base(spark, sf)
+    val big = ops.Clustering.LiteralMaxK + 1
+    intercept[IllegalArgumentException] {
+      ops.Clustering.trainSweep(b, Seq(2, big), 1)
+    }
+    val s = spark.newSession()
+    val c0 = ops.Clustering.trainCounter.get()
+    ops.Clustering.centroidHistories(s, sf, Seq(2, big))
+    assert(ops.Clustering.trainCounter.get() === c0 + 2)
+    assert(hists(ops.Clustering.centroidHistory(s, sf, big)) ===
+      hists(ops.Clustering.trainHistory(b, big, ops.Clustering.Iters)))
+  }
+
+  test("a cold kmeans warm trains once per sweep K and writes the K=8 frame stage from it") {
+    val s = spark.newSession()
+    s.conf.set("spark.graft.kmeans.k", "8")
+    val c0 = ops.Clustering.trainCounter.get()
+    ops.Clustering.warmKmeansStages(s, sf)
+    assert(ops.Clustering.trainCounter.get() === c0 + 4,
+      "the warm must train {2, 4, 8, 16} once each and the frame not at all")
+    val p = ops.Clustering.effProbes(8)
+    assert(SessionMemo.peek[AnyRef](s, s"stage|$sf|kmeans_frame_k8_p$p").isDefined)
+    val frame = ops.Clustering.frameCentroids(s, sf, 8)
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSeq))
+      .sortBy(_._1).toSeq
+    assert(frame === ops.Clustering.centroidHistory(s, sf, 8).last.toSeq
+      .zipWithIndex.map { case (c, j) => (j.toLong, c.toSeq) })
+    assert(ops.Clustering.trainCounter.get() === c0 + 4)
   }
 
   test("driver-array training refuses past DriverStateMaxK, naming the frame path") {

@@ -527,4 +527,75 @@ class NativeKernelsSpec extends AnyFunSuite {
       .map(e => Option(e.getMessage).getOrElse("")).mkString("; ")
     assert(msgs.contains("mixed array lengths"), msgs)
   }
+
+  test("LongNearest == least(struct(l2sq, cid)) in codegen and interpreted plans") {
+    import spark.implicits._
+    val b = ops.Clustering.base(spark, sf).select("vec_id", "xq")
+    val vecs = b.orderBy("vec_id").limit(64).collect()
+      .map(_.getSeq[Long](1).toArray)
+    val dim = vecs.head.length
+    // a NULL, an empty and a ragged row, plus every fixture vector
+    val odd = Seq((-1L, None), (-2L, Some(Seq.empty[Long])),
+      (-3L, Some(vecs.head.toSeq.take(dim - 1)))).toDF("vec_id", "xq")
+    val path = java.nio.file.Files.createTempDirectory("graft_nearest")
+      .resolve("rows").toString
+    b.unionByName(odd).write.parquet(path)
+    // coinciding centroids: cids 2 and 5 repeat 0 and 1, so ties must
+    // go to the lower id
+    val dup = Array(vecs(0), vecs(1), vecs(0), vecs(2), vecs(3), vecs(1),
+      vecs(4), vecs(5))
+    def reference(cents: Array[Array[Long]]) = {
+      val cands = cents.toSeq.zipWithIndex.map { case (c, j) =>
+        struct(VectorFunctions.longL2Sq(col("xq"), typedLit(c.toSeq)).as("d"),
+          lit(j.toLong).as("cid"))
+      }
+      // least() takes at least two arguments; one candidate is itself
+      if (cands.size == 1) cands.head else least(cands: _*)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id"), col("_n.d"), col("_n.cid")).collect()
+        .map(r => (r.getLong(0), Option(r.getAs[java.lang.Long](1))
+          .map(_.longValue), r.getLong(2))).sorted.toSeq
+    val cases = Seq(1, 2, 8, 64).map(k => s"k=$k" -> vecs.take(k)) :+
+      ("duplicated" -> dup)
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.codegen.factoryMode", mode)
+      s.conf.set("spark.sql.codegen.wholeStage", (mode == "CODEGEN_ONLY").toString)
+      val df = s.read.parquet(path)
+      cases.foreach { case (name, cents) =>
+        val got = rows(df.withColumn("_n",
+          VectorFunctions.longNearest(col("xq"), cents)))
+        assert(got === rows(df.withColumn("_n", reference(cents))),
+          s"$name, $mode")
+        assert(got.filter(_._1 < 0) === Seq((-3L, None, 0L), (-2L, None, 0L),
+          (-1L, None, 0L)), s"$name, $mode")
+        if (name == "duplicated")
+          assert(!got.exists(r => r._3 == 2L || r._3 == 5L), mode)
+      }
+    }
+  }
+
+  test("LongNearest generates the same code for every K; equality is by content") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.graftnative.LongNearest
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val b = ops.Clustering.base(spark, sf)
+    val cents = b.orderBy("vec_id").limit(8).collect()
+      .map(_.getAs[Seq[Long]]("xq").toArray)
+    def code(cs: Array[Array[Long]]) = {
+      val plan = b.select(VectorFunctions.longNearest(col("xq"), cs).as("n"))
+        .queryExecution.executedPlan
+      org.apache.spark.sql.execution.debug.codegenStringSeq(plan).map(_._2)
+    }
+    assert(code(cents.take(2)).nonEmpty)
+    assert(code(cents.take(2)) === code(cents))
+    val x = AttributeReference("xq", ArrayType(LongType))()
+    val e1 = LongNearest(x, Array(Array(1L, 2L), Array(3L, 4L)))
+    val e2 = LongNearest(x, Array(Array(1L, 2L), Array(3L, 4L)))
+    val e3 = LongNearest(x, Array(Array(1L, 2L), Array(3L, 5L)))
+    assert(e1 == e2 && e1.hashCode == e2.hashCode)
+    assert(e1.semanticEquals(e2) && e1.semanticHash() == e2.semanticHash())
+    assert(e1 != e3 && !e1.semanticEquals(e3))
+  }
 }

@@ -72,48 +72,18 @@ object Bench {
     def apply(label: String): Shape = shapes.getOrDefault(label, Shape(0, 0, 0))
   }
 
-  // Co-residency sentinel (r8 postmortem: a same-host neighbor inflated
-  // every query ~2.4x with zero signal in the JSON). A FIXED single-
-  // threaded unit of arithmetic whose wall time on an idle core is a
-  // stable per-host constant; under CPU contention the same unit takes
-  // proportionally longer. Measured once before the Spark session comes
-  // up and once after it stops, so the driver can mechanically discount
-  // a contaminated run (spin times well above the host's idle baseline)
-  // instead of reading per-query regressions as code changes.
-  @volatile private var spinSink = 0L
-  private def spin(iters: Int): Double = {
-    val t0 = System.nanoTime()
-    var acc = 0x9E3779B97F4A7C15L
-    var i = 0
-    while (i < iters) {
-      acc = acc * 6364136223846793005L + 1442695040888963407L
-      acc ^= acc >>> 33
-      i += 1
-    }
-    spinSink = acc // defeat dead-code elimination
-    (System.nanoTime() - t0) / 1e9
-  }
-  private def spinCal(): Double = spin(1 << 26)
-  /** Cumulative stop-the-world GC milliseconds of this JVM. */
-  private def gcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
   /** Bench-window discipline (r19 What's-wrong #2): the r19 record was
     * measured at load_avg 33 under a co-resident campaign main and
     * read as a phantom 36% regression. A bench that STARTS on a busy
     * host cannot produce a comparable record, so the record carries a
     * contamination verdict the harness computes itself instead of
     * trusting whoever launched it: load_avg at start above this bar →
-    * `"contaminated":true` in both JSON lines and a loud stderr
-    * banner. Idle rounds start at ~0-3 (the JVM's own warmup); 6 is
-    * 2x the highest clean round on record. */
+    * `"contaminated":true` in the record and a loud stderr banner.
+    * Idle rounds start at ~0-3 (the JVM's own warmup); 6 is 2x the
+    * highest clean round on record. */
   private val CleanLoadBar = 6.0
 
   def main(args: Array[String]): Unit = {
-    val spinStart = spinCal()
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val contaminated = loadStart > CleanLoadBar
@@ -228,76 +198,42 @@ object Bench {
     // reports its min time, but is listed in "flaky" so a transient
     // failure is never silently laundered into a clean success; a
     // query with NO successful run stays -1 in "errors" as before.
-    // Per-query noise evidence (r10 verdict: three untouched queries
-    // drifted with zero attribution signal). Alongside the min time,
-    // each query records: the SPREAD across its runs (max-min; a large
-    // spread on identical code = scheduler/JIT noise, not a plan
-    // change), the stop-the-world GC milliseconds its min run paid
-    // (allocation-pressure drift shows up here, the r9 entropy/
-    // fingerprint mechanism), and a ~15 ms single-thread spin probe
-    // timed immediately before each run (the co-residency sentinel at
-    // query granularity — contention arriving mid-run is visible at
-    // the query it hit, not just at the end of the session).
     // Each run is labelled `query#run`, so query_shape can give the min
     // run's [jobs,stages,tasks].
-    val ProbeIters = 1 << 23
     val Runs = 2
-    final case class QRun(sec: Double, gcMs: Long, probeS: Double, label: String)
+    final case class QRun(sec: Double, label: String)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       val attempts = (1 to Runs).map { run =>
         val label = s"$name#$run"
         sc.setLocalProperty(LabelKey, label)
-        val probe = spin(ProbeIters)
-        val gc0 = gcMs()
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).count()
-          Some(QRun((System.nanoTime() - t0) / 1e9, gcMs() - gc0, probe, label))
+          Some(QRun((System.nanoTime() - t0) / 1e9, label))
         }
         catch { case e: Throwable =>
           System.err.println(s"bench: $name failed: ${e.getMessage}"); None }
       }
       val times = attempts.flatten
-      val best = if (times.nonEmpty) times.minBy(_.sec)
-        else QRun(-1.0, 0L, -1.0, "")
-      val spread =
-        if (times.size >= 2) times.map(_.sec).max - times.map(_.sec).min
-        else 0.0
-      (name, best, spread, times.nonEmpty,
+      (name, times.minByOption(_.sec),
         times.length < attempts.length && times.nonEmpty)
     }
-    // 3-dp times keep the one-line JSON short enough that a fixed-size
-    // tail capture of stdout cannot truncate the leading per-query data.
-    val qs = results.map { case (k, v, _, ok, _) =>
-      "\"" + k + "\":" + (if (ok) f"${v.sec}%.3f" else "-1") }
+    val qs = results.map { case (k, v, _) =>
+      "\"" + k + "\":" + v.fold("-1")(r => f"${r.sec}%.3f") }
       .mkString("{", ",", "}")
-    // Noise detail per query: [spread_s, gc_ms, probe_s] for the min
-    // run — lives only in the (file-persisted) full line.
-    val qnoise = results.collect { case (k, v, spread, true, _) =>
-      "\"" + k + f"""\":[$spread%.3f,${v.gcMs},${v.probeS}%.3f]""" }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, false, _) => "\"" + k + "\"" }
+    val errs = results.collect { case (k, None, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val flaky = results.collect { case (k, _, _, _, true) => "\"" + k + "\"" }
+    val flaky = results.collect { case (k, _, true) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val total = results.collect { case (_, v, _, true, _) => v.sec }.sum
-    val gcTotal = results.collect { case (_, v, _, true, _) => v.gcMs }.sum
-    val probeMax = (0.0 +: results.collect {
-      case (_, v, _, true, _) => v.probeS }).max
+    val total = results.flatMap(_._2).map(_.sec).sum
     val stageJson = {
       import scala.jdk.CollectionConverters._
       stageDetail.asScala.toSeq.sortBy(-_._2)
         .map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
         .mkString("{", ",", "}")
     }
-    // End-of-run sentinel: measured while the (now idle) session still
-    // holds its JVM, then the system load average for context. A
-    // spin_end well above spin_start means contention ARRIVED mid-run.
-    val spinEnd = spinCal()
-    val loadAvg = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
     // cpus = the session's resolved core count (local[$SPARK_GRAFT_CPUS])
     // so a c8 record is self-identifying without the caller's wrapper.
     val cpus = sc.defaultParallelism
@@ -306,69 +242,22 @@ object Bench {
     val stageShape = Chains.collect {
       case (k, _) if stageDetail.containsKey(k) => "\"" + k + "\":" + shapes(k).json }
       .mkString("{", ",", "}")
-    // [jobs, stages, tasks] of the min run — file copies only, like
-    // query_noise.
-    val qshape = results.collect { case (k, v, _, true, _) =>
+    // [jobs, stages, tasks] of the min run — file copy only.
+    val qshape = results.collect { case (k, Some(v), _) =>
       "\"" + k + "\":" + shapes(v.label).json }
       .mkString("{", ",", "}")
-    val sentinel =
-      f""""spin_cal":{"start_s":$spinStart%.3f,"end_s":$spinEnd%.3f},""" +
-        f""""load_avg":$loadAvg%.2f,"load_avg_start":$loadStart%.2f,""" +
-        s""""contaminated":$contaminatedJson"""
-    val nErr = results.count(!_._4)
-    // Record layout (r21 verdict #1 — the driver parsed NEITHER round's
-    // bench record; BENCH_r01..r21 all show parsed:null):
-    //  * headline fields FIRST, per-query map LAST, so a fixed-size tail
-    //    capture that cuts the line keeps per-query times (recoverable
-    //    by regex) instead of the noise triples;
-    //  * the per-run noise and shape maps live ONLY in the file copies —
-    //    bench/bench_full.json is the canonical full artifact, named by
-    //    the "bench_full" pointer field in every record;
-    //  * the SAME full record prints as both the FIRST and the LAST
-    //    stdout line, so a line-oriented parser keeping either the first
-    //    or the last parseable JSON line gets the complete record. The
-    //    lines themselves are parseable at all only because build.sbt
-    //    now forks the run with OutputStrategy.StdoutOutput (no sbt
-    //    "[info] " prefix) and showSuccess:=false (no trailing
-    //    "[success] Total time" line after the record).
-    val head = f""""metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus,"stage_build":$stageBuild%.3f,"stage_build_detail":$stageJson,"stage_build_shape":$stageShape,"warm":$warm,"runs":$Runs,$sentinel,"gc_total_ms":$gcTotal,"probe_max_s":$probeMax%.3f,"n_queries":${results.length},"n_errors":$nErr,"errors":$errs,"flaky":$flaky,"sf":"$sfDir","bench_full":"bench/bench_full.json""""
-    val jsonStdout = s"""{$head,"queries":$qs}"""
-    val json = s"""{$head,"query_noise":$qnoise,"query_shape":$qshape,"queries":$qs}"""
-    println(jsonStdout)
-    // Also persist to files: a fixed-size tail capture of stdout
-    // truncated BENCH_r05 mid-line and lost the headline totals — the
-    // file copy makes the stdout capture redundant. Two copies: the
-    // scratch one under target/, and a TRACKED one under bench/ so the
-    // end-of-round snapshot commit carries every per-query time (the
-    // driver's BENCH_rN.json keeps only a 2,000-char stdout tail, which
-    // left ~2/3 of per-query times unauditable round-over-round).
-    // (partial SPARK_GRAFT_ONLY profiling runs and full runs at a
-    // NON-DEFAULT tier — e.g. an sf0.001 smoke — must not clobber the
-    // tracked sf0.1 full-registry record). The tier compare normalizes
-    // both sides (r14 advice): a trailing slash / relative spelling /
-    // symlink of the default tier still refreshes the tracked record.
-    def realOrNorm(p: String): String = {
-      val path = java.nio.file.Paths.get(p)
-      try path.toRealPath().toString
-      catch { case _: java.io.IOException =>
-        path.toAbsolutePath.normalize.toString }
-    }
-    val outs =
-      if (only.isEmpty && realOrNorm(sfDir) == realOrNorm("/root/testdata/sf0.1"))
-        Seq("target/bench.json", "bench/bench_full.json")
-      else Seq("target/bench.json")
-    System.err.println(s"bench: writing ${outs.mkString(", ")}")
-    outs.foreach { p =>
-      try {
-        val out = java.nio.file.Paths.get(p)
-        java.nio.file.Files.createDirectories(out.getParent)
-        java.nio.file.Files.writeString(out, json + "\n")
-      } catch { case e: Throwable =>
-        System.err.println(s"bench: could not write $p: ${e.getMessage}") }
-    }
-    // Final stdout line == the full record (see layout comment above).
-    // Both lines print after spark.stop(), so no late Spark/log4j stdout
-    // chatter can land between them and process exit.
-    println(jsonStdout)
+    val nErr = results.count(_._2.isEmpty)
+    // One record line on stdout, printed after spark.stop() so no late
+    // Spark chatter follows it; build.sbt forks the run with raw stdout.
+    // target/bench.json holds the same record plus query_shape.
+    val head = f""""metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus,"stage_build":$stageBuild%.3f,"stage_build_detail":$stageJson,"stage_build_shape":$stageShape,"warm":$warm,"runs":$Runs,"load_avg_start":$loadStart%.2f,"contaminated":$contaminatedJson,"n_queries":${results.length},"n_errors":$nErr,"errors":$errs,"flaky":$flaky,"sf":"$sfDir""""
+    val out = java.nio.file.Paths.get("target/bench.json")
+    try {
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.writeString(out,
+        s"""{$head,"query_shape":$qshape,"queries":$qs}""" + "\n")
+    } catch { case e: Throwable =>
+      System.err.println(s"bench: could not write $out: ${e.getMessage}") }
+    println(s"""{$head,"queries":$qs}""")
   }
 }

@@ -15,15 +15,8 @@ object Local {
     * SPARK_GRAFT_CPUS default `defaultCpus`, shuffle partitions =
     * cpus, UTC, ns-timestamp parquet reads, UI off). `fair` enables
     * FAIR job scheduling — Bench's stage-build pre-pass only (see the
-    * comment there). `periodicGcMin` > 0 sets
-    * spark.cleaner.periodicGC.interval (default 30min) down for
-    * long campaign mains: shuffle files of dereferenced RDDs are only
-    * reclaimed when a GC actually runs, and an inline System.gc() is
-    * best-effort — the periodic driver GC is the BOUNDED guarantee
-    * that a big-tier sweep cannot accumulate a full disk (the r19
-    * AnnCurve failure; r19 advice #3). */
-  def session(defaultCpus: String = "4", fair: Boolean = false,
-      periodicGcMin: Int = 0): SparkSession = {
+    * comment there). */
+  def session(defaultCpus: String = "4", fair: Boolean = false): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     var b = SparkSession.builder()
       .withExtensions(new org.apache.spark.sql.graftnative.GraftExtensions)
@@ -33,8 +26,6 @@ object Local {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
     if (fair) b = b.config("spark.scheduler.mode", "FAIR")
-    if (periodicGcMin > 0)
-      b = b.config("spark.cleaner.periodicGC.interval", s"${periodicGcMin}min")
     // Ad-hoc config overrides for A/B profiling (r21):
     // SPARK_GRAFT_CONF="spark.k=v;spark.k2=v2". Overrides apply LAST so
     // an experiment can flip any of the defaults above without a

@@ -32,6 +32,26 @@ object Events {
   /** 15-minute slide, in microseconds. */
   private val SlideUs = 15L * 60 * 1000 * 1000
 
+  /** The resample queries' (user_id, us, value, src, event_id) input:
+    * every event as an observation (src 0) unioned with a row per user
+    * per hour of the data's own span (src 1, NULL value and event_id). */
+  private def obsAndGrid(s: SparkSession, d: String): DataFrame = {
+    val ev = Tables.events(s, d)
+    val b = ev.agg(
+      unix_micros(date_trunc("hour", min(col("ts")))).as("lo"),
+      unix_micros(date_trunc("hour", max(col("ts")))).as("hi"))
+    val grid = ev.select("user_id").distinct()
+      .crossJoin(broadcast(b))
+      .select(col("user_id"),
+        explode(sequence(col("lo"), col("hi"), lit(3_600_000_000L))).as("us"))
+    val obs = ev.select(col("user_id"), unix_micros(col("ts")).as("us"),
+      col("value"), lit(0).as("src"), col("event_id"))
+    val gr = grid.select(col("user_id"), col("us"),
+      lit(null).cast("double").as("value"), lit(1).as("src"),
+      lit(null).cast("bigint").as("event_id"))
+    obs.unionByName(gr)
+  }
+
   val specs: Seq[QuerySpec] = Seq(
 
     // Tumbling 1-hour windows (Q-EV-TUMBLE, rehearsed SURVEY §8.3-QB).
@@ -141,23 +161,10 @@ object Events {
         |  round(coalesce(lv, -1.0), 6) AS value_ffill
         |FROM f WHERE src = 1
         |ORDER BY user_id, grid_us""") { (s, d) =>
-      val ev = Tables.events(s, d)
-      val b = ev.agg(
-        unix_micros(date_trunc("hour", min(col("ts")))).as("lo"),
-        unix_micros(date_trunc("hour", max(col("ts")))).as("hi"))
-      val grid = ev.select("user_id").distinct()
-        .crossJoin(broadcast(b))
-        .select(col("user_id"),
-          explode(sequence(col("lo"), col("hi"), lit(3_600_000_000L))).as("us"))
-      val obs = ev.select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("value"), lit(0).as("src"), col("event_id"))
-      val gr = grid.select(col("user_id"), col("us"),
-        lit(null).cast("double").as("value"), lit(1).as("src"),
-        lit(null).cast("bigint").as("event_id"))
       val w = Window.partitionBy("user_id")
         .orderBy(col("us"), col("src"), col("event_id").asc_nulls_last)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      obs.unionByName(gr)
+      obsAndGrid(s, d)
         .withColumn("lv", last(col("value"), ignoreNulls = true).over(w))
         .filter(col("src") === 1)
         .select(col("user_id"), col("us").as("grid_us"),
@@ -487,30 +494,23 @@ object Events {
         |        END, 6) AS value_interp
         |FROM f WHERE src = 1
         |ORDER BY user_id, grid_us""") { (s, d) =>
-      val ev = Tables.events(s, d)
-      val b = ev.agg(
-        unix_micros(date_trunc("hour", min(col("ts")))).as("lo"),
-        unix_micros(date_trunc("hour", max(col("ts")))).as("hi"))
-      val grid = ev.select("user_id").distinct()
-        .crossJoin(broadcast(b))
-        .select(col("user_id"),
-          explode(sequence(col("lo"), col("hi"), lit(3_600_000_000L))).as("us"))
-      val obs = ev.select(col("user_id"), unix_micros(col("ts")).as("us"),
-        col("value"), lit(0).as("src"), col("event_id"))
-      val gr = grid.select(col("user_id"), col("us"),
-        lit(null).cast("double").as("value"), lit(1).as("src"),
-        lit(null).cast("bigint").as("event_id"))
-      val ord = Seq(col("us"), col("src"), col("event_id").asc_nulls_last)
-      val wp = Window.partitionBy("user_id").orderBy(ord: _*)
+      val wp = Window.partitionBy("user_id")
+        .orderBy(col("us"), col("src"), col("event_id").asc_nulls_last)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wf = Window.partitionBy("user_id").orderBy(ord: _*)
-        .rowsBetween(1, Window.unboundedFollowing)
+      // The next observation is the last one before the row in reversed
+      // order: a running frame, where first() over (1 FOLLOWING,
+      // UNBOUNDED FOLLOWING) re-aggregates the partition's rest per row.
+      // event_id is the events key, so the reversal is exact.
+      val wn = Window.partitionBy("user_id")
+        .orderBy(col("us").desc, col("src").desc,
+          col("event_id").desc_nulls_first)
+        .rowsBetween(Window.unboundedPreceding, -1)
       val usIfObs = when(col("value").isNotNull, col("us"))
-      obs.unionByName(gr)
+      obsAndGrid(s, d)
         .withColumn("pv", last(col("value"), ignoreNulls = true).over(wp))
         .withColumn("pu", last(usIfObs, ignoreNulls = true).over(wp))
-        .withColumn("nv", first(col("value"), ignoreNulls = true).over(wf))
-        .withColumn("nu", first(usIfObs, ignoreNulls = true).over(wf))
+        .withColumn("nv", last(col("value"), ignoreNulls = true).over(wn))
+        .withColumn("nu", last(usIfObs, ignoreNulls = true).over(wn))
         .filter(col("src") === 1)
         .select(col("user_id"), col("us").as("grid_us"),
           round(when(col("pv").isNull && col("nv").isNull, lit(-1.0))

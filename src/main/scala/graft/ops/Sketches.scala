@@ -563,7 +563,7 @@ object Sketches {
     * corpus cell assignment, which chains through it). See
     * [[TextSim.warmStages]] for why Bench calls this up front. */
   def warmIvfStage(s: SparkSession, d: String): Unit = {
-    ivfAssignments(s, d).count()
+    ivfAssignments(s, d)
     ()
   }
 
@@ -571,7 +571,7 @@ object Sketches {
     * compressed code table). Independent of the IVF chain — Bench runs
     * the two on separate threads. */
   def warmPqStage(s: SparkSession, d: String): Unit = {
-    pqCodes(s, d).count()
+    pqCodes(s, d)
     ()
   }
 
@@ -883,20 +883,20 @@ object Sketches {
   /** Force-build the hyperplane-LSH signature index. Independent of
     * every other stage — its own Bench thread. */
   def warmLshSigStage(s: SparkSession, d: String): Unit = {
-    sigTable(s, d).count()
+    sigTable(s, d)
     ()
   }
 
   /** Force-build the dedup-point signature index ([[dedupSigTable]]). */
   def warmDedupLshStage(s: SparkSession, d: String): Unit = {
-    dedupSigTable(s, d).count()
+    dedupSigTable(s, d)
     ()
   }
 
   /** Force-build the SimHash signature table. Independent of every
     * other stage — its own Bench thread. */
   def warmSimhashStage(s: SparkSession, d: String): Unit = {
-    simhashSigs(s, d).count()
+    simhashSigs(s, d)
     ()
   }
 
@@ -981,7 +981,7 @@ object Sketches {
   /** Force-build the MinHash band index — independent of every other
     * stage, its own Bench thread. */
   def warmMinhashStage(s: SparkSession, d: String): Unit = {
-    minhashBandTable(s, d).count()
+    minhashBandTable(s, d)
     ()
   }
 
@@ -1742,7 +1742,7 @@ object Sketches {
     * #2: a 2.57 s first-run spread), while every sibling family had its
     * stages pre-built; now it is one more pre-timed chain. */
   def warmMinhashCappedStage(s: SparkSession, d: String): Unit = {
-    minhashBandTableCapped(s, d).count()
+    minhashBandTableCapped(s, d)
     ()
   }
 

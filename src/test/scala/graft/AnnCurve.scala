@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * (probed cells' population / N) — the realized candidate share, not
   * the nominal nprobe/C (cells are unequal).
   *
-  *   sbt "runMain graft.AnnCurve [mult] [srcDir] [outBase] [clusters]"
+  *   sbt "Test/runMain graft.AnnCurve [mult] [srcDir] [outBase] [clusters]"
   *
   * One JSON line per tier on stdout and in
   * outBase/ann_curve_<tag>.json; SCALE.md holds the analyzed curve.
@@ -111,7 +111,7 @@ object AnnCurve {
     val srcDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val outBase = args.lift(2).getOrElse("target/scale")
     val clusters = args.lift(3).map(_.toInt).getOrElse(32)
-    val s = Local.session(defaultCpus = "32", periodicGcMin = 2)
+    val s = ScaleGen.campaignSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outBase))
     // embed-only tiers since r18: the curve reads vectors alone, and
     // full fact replication is prohibitive at the x1000 decade

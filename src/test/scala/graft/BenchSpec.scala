@@ -124,6 +124,31 @@ class BenchSpec extends AnyFunSuite {
       Set("CONF", "CPUS", "ONLY", "SF_DIR", "STAGE_THREADS"))
   }
 
+  test("src/main defines no main besides Cli, Verify and Bench, and names " +
+      "none of the campaign mains or ScaleGen in code") {
+    // Read from the compiled main classes, where comments are gone.
+    val root = java.nio.file.Paths.get(
+      classOf[Bench.Shape].getProtectionDomain.getCodeSource.getLocation.toURI)
+    val classes = {
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".class")).toVector finally files.close()
+    }
+    assert(classes.size > 100)
+    val names = classes.map(f => root.relativize(f).toString
+      .stripSuffix(".class").replace(java.io.File.separatorChar, '.'))
+    val mains = names.filter { n =>
+      Class.forName(n, false, getClass.getClassLoader).getDeclaredMethods
+        .exists(m => m.getName == "main" && Modifier.isStatic(m.getModifiers) &&
+          m.getParameterTypes.sameElements(Seq(classOf[Array[String]])))
+    }
+    assert(mains.toSet === Set("graft.Cli", "graft.Verify", "graft.Bench"))
+    val moved = "graft/(AnnCurve|RouteCurve|ScaleBench|StateBench|ScaleGen)(?![A-Za-z0-9_])".r
+    val naming = classes.filter(f => moved.findFirstIn(new String(
+      java.nio.file.Files.readAllBytes(f), "ISO-8859-1")).isDefined)
+    assert(naming.isEmpty, naming.mkString(", "))
+  }
+
   test("Bench warms the stages for every query that reads a chain-built stage") {
     // perfbench/expected/sf0.01.tsv: `#chain <name> <dirs>` lines list
     // what each chain builds; query rows carry (name, class, rows,

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * every branch boundary is contested); clustered real corpora sit
   * above this curve.
   *
-  *   sbt "runMain graft.RouteCurve [dir] [k] [trainMode] [probes...]"
+  *   sbt "Test/runMain graft.RouteCurve [dir] [k] [trainMode] [probes...]"
   *
   * One JSON line per probe point on stdout. `trainMode` (join|routed,
   * default join) picks how the centroids are TRAINED before the curve
@@ -38,7 +38,7 @@ object RouteCurve {
       case "auto" => ops.Clustering.adaptiveProbes(k)
       case i => i.toInt
     }.distinct.sorted
-    val s = Local.session(defaultCpus = "32", periodicGcMin = 2)
+    val s = ScaleGen.campaignSession()
     // "clustered:<mult>:<nclusters>" generates a ScaleGen clustered
     // tier from sf0.1 on the fly — the contrast point for the
     // isotropic-is-worst-case claim (the AnnCurve clustered-tier

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * `target/scale/scale_<tag>.json`; SCALE.md holds the analyzed
   * curve.
   *
-  *   sbt "runMain graft.ScaleBench [mult] [srcDir] [outBase]"
+  *   sbt "Test/runMain graft.ScaleBench [mult] [srcDir] [outBase]"
   *
   * The two brute-force oracle witnesses (q_sim_cosine_knn,
   * q_sim_threshold) are EXCLUDED by contract: they are O(n²) on
@@ -224,10 +224,7 @@ object ScaleBench {
     require(!countsOnly || openVocab > 0,
       "mode=counts requires openVocab > 0 (the three-tier campaign " +
         "is defined on the open-vocabulary regime)")
-    // NOTE: heap must come from the launcher (SPARK_DRIVER_MEM env ->
-    // build.sbt's forked -Xmx): spark.driver.memory set in the builder
-    // is a silent no-op in local mode (the JVM is already running).
-    val s = Local.session(defaultCpus = "32", periodicGcMin = 2)
+    val s = ScaleGen.campaignSession()
     val tiers: Seq[(String, String)] =
       if (countsOnly && openVocab > 0) {
         Seq(1, 10, mult).distinct.map { m =>

@@ -31,6 +31,24 @@ import org.apache.spark.sql.functions._
   */
 object ScaleGen {
 
+  /** The session of the campaign mains that generate and measure
+    * tiers (AnnCurve, RouteCurve, ScaleBench, StateBench): the
+    * [[Local.session]] config at 32 default cpus, with Spark's periodic
+    * driver GC every 2 minutes instead of 30. Shuffle files of
+    * dereferenced RDDs are reclaimed only when a GC runs, so a long
+    * big-tier sweep could otherwise fill the disk (the r19 AnnCurve
+    * failure). The interval is a `spark.*` system property, which
+    * SparkConf reads when the session starts; a `-D` given at launch
+    * wins. The heap comes from the launcher (`SPARK_DRIVER_MEM`, the
+    * forked `-Xmx`), reported on stderr: `spark.driver.memory` set in
+    * the builder is a no-op in local mode. */
+  def campaignSession(): SparkSession = {
+    sys.props.getOrElseUpdate("spark.cleaner.periodicGC.interval", "2min")
+    System.err.println(
+      s"campaign: max heap ${Runtime.getRuntime.maxMemory >> 20} MB")
+    Local.session(defaultCpus = "32")
+  }
+
   /** SplitMix64 — the standard public 64-bit mixer; gives every id its
     * own well-scrambled stream regardless of partition order. */
   private def mix(z0: Long): Long = {

@@ -331,7 +331,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("three-point campaign artifacts: exponents bounded on BOTH decade pairs") {
     // The committed x1/x10/x100 counts-only artifacts (bench/
     // scale_ov64_*_counts_r15.json — regenerate ALL THREE with
-    // `runMain graft.ScaleBench 100 /root/testdata/sf0.1
+    // `Test/runMain graft.ScaleBench 100 <sf0.1 dir>
     // target/scale_r15 64 counts` (counts mode generates and measures
     // the 1/10/100 tiers in one run), then copy target/scale_r15/
     // scale_ov64_x{1,10,100}_counts.json over the bench/ copies; the
@@ -431,8 +431,8 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("fourth decade (x1000) text-family artifacts: the laws hold, drift recorded") {
     // The r20 campaign (bench/scale_ov64_x{1,10,1000}_counts_r20.json;
-    // regenerate with `runMain graft.ScaleBench 1000 /root/testdata/
-    // sf0.1 target/scale_r20 64 counts` — ~90 min, build_ivf dominates)
+    // regenerate with `Test/runMain graft.ScaleBench 1000 <sf0.1 dir>
+    // target/scale_r20 64 counts` — ~90 min, build_ivf dominates)
     // extends the TEXT chains to n_docs = 5M / 270M tokens / 2M
     // vectors. The x100 point is spliced from the r16 artifact: the
     // generator is a pure function of (seed, id), which the first
@@ -528,7 +528,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("route-curve artifacts: agreement/work monotone in probes, clustered above isotropic") {
     // The committed agreement-vs-probes operating curves
-    // (bench/route_curve_*_r15.jsonl; regenerate with `runMain
+    // (bench/route_curve_*_r15.jsonl; regenerate with `Test/runMain
     // graft.RouteCurve <dir|clustered:mult:c> <k> <join|routed>
     // <probes...>`) are the CAP-ESTEP-SCALE evidence — this pin
     // re-derives their structural claims so an artifact refresh that
@@ -604,7 +604,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("frame-state artifacts: driver rows grow ~√K, decisively below the array path") {
     // The committed K=10⁴/10⁵ frame-training chain (bench/
-    // state_frame_r17.jsonl; regenerate with `runMain graft.StateBench
+    // state_frame_r17.jsonl; regenerate with `Test/runMain graft.StateBench
     // target/scale_r15/ov64_x100 10000,100000 1`) — the r15-verdict #2
     // evidence that no driver-side collection scales with K: the
     // measured frame_driver_rows must grow ~√10 across the decade
@@ -651,7 +651,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"k=${m("k")} produced only ${m("cells")} cells")
     }
     // r18 (verdict #5), the n-decade: the x1000 artifact (bench/
-    // state_frame_x1000_r18.jsonl; regenerate with `runMain
+    // state_frame_x1000_r18.jsonl; regenerate with `Test/runMain
     // graft.StateBench target/scale_r18/iso_x1000 10000 1`) measures
     // the SAME K=10⁴ at n=2,000,000 — driver-held frame rows must be
     // INDEPENDENT of n (the K-side law above is the other axis), the
@@ -708,7 +708,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ANN x1000 artifacts: recall monotone, saturated at sub-1% scan") {
     // The committed x1000-decade curves (bench/ann_curve_*_x1000_r18
-    // .json; regenerate with `runMain graft.AnnCurve 1000 <src>
+    // .json; regenerate with `Test/runMain graft.AnnCurve 1000 <src>
     // <outBase> 32`): at n=2,000,000 / 1415 cells BOTH regimes
     // saturate by nprobe 8 while scanning < 1% of the corpus — the
     // clustered tier by structure, and the ISOTROPIC tier by a real

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * refused outright). The claim under measure: frame driver rows grow
   * ~√K (only the coarse level is driver-held), array rows grow ~K.
   *
-  *   sbt "runMain graft.StateBench [tierDir] [k1,k2,...] [iters]"
+  *   sbt "Test/runMain graft.StateBench [tierDir] [k1,k2,...] [iters]"
   *
   * One JSON line per K on stdout; ScaleSpec re-derives the exponent
   * from the committed copy (bench/state_frame_*.json). Structural
@@ -29,7 +29,7 @@ object StateBench {
     val ks = args.lift(1).getOrElse("10000,100000")
       .split(",").map(_.trim.toInt).toSeq
     val iters = args.lift(2).map(_.toInt).getOrElse(1)
-    val s = Local.session(defaultCpus = "32", periodicGcMin = 2)
+    val s = ScaleGen.campaignSession()
     // Self-bootstrapping: the default tier is a DETERMINISTIC ScaleGen
     // corpus (byte-identical across regenerations), so a cleaned
     // target/ never orphans the artifact recipe. Call generate

@@ -2,45 +2,12 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 object Bench {
-  /** The stage-cache chains, longest first so the pool's tail is short
-    * ones. Every public `warm*` entry point of `graft.ops` is here once
-    * (BenchSpec pins that). */
-  private[graft] val Chains: Seq[(String, (SparkSession, String) => Unit)] = {
-    import ops._
-    Seq(
-      "kmeans" -> Clustering.warmKmeansStages _,
-      "ivf" -> Sketches.warmIvfStage _,
-      "pq" -> Sketches.warmPqStage _,
-      "minhash_sigs" -> Sketches.warmMinhashStage _,
-      "text_postings" -> TextSim.warmStages _,
-      "simhash_sigs" -> Sketches.warmSimhashStage _,
-      "minhash_capped" -> Sketches.warmMinhashCappedStage _,
-      "dedup_lsh_sigs" -> Sketches.warmDedupLshStage _,
-      "lsh_sigs" -> Sketches.warmLshSigStage _,
-      "bigrams" -> TextSim.warmBigramStage _,
-      "docgrams" -> TextSim.warmDocGramStage _,
-      "graph" -> Graph.warmGraphStages _,
-      "text_stats" -> TextSim.warmTextStatStages _,
-      "learn" -> Learn.warmLearnStages _,
-      "mask" -> TextSim.warmMaskStage _)
+  /** The chains the pre-pass warms: every one of [[Registry.chains]]
+    * for the full registry, else those the allowlisted queries read. */
+  private[graft] def chainsFor(only: Option[Set[String]]) = {
+    val reads = only.map(_.flatMap(Registry.byName(_).reads))
+    Registry.chains.filter { case (c, _) => reads.forall(_(c)) }
   }
-
-  /** Does query `n` read a stage some chain of [[Chains]] builds?
-    * Conservative: a prefix family warms for every member, even one
-    * that needs none of the stages. BenchSpec pins it against the
-    * stage-dir column of perfbench/expected/sf0.01.tsv. */
-  private[graft] def readsStages(n: String): Boolean =
-    Seq("q_dedup_", "q_sim_ann_", "q_graph_", "q_embed_", "q_quality_")
-      .exists(n.startsWith) || StageReaders(n)
-
-  private val StageReaders = Set(
-    "q_curate", "q_source_overlap",
-    "q_text_tfidf", "q_text_bm25", "q_sim_hybrid_rrf", "q_text_unigram_nll",
-    "q_text_ppl_bucket", "q_text_topterms_sketch", "q_text_bigram_nll",
-    "q_text_pmi", "q_text_keyphrase", "q_text_boilerplate",
-    "q_text_decontaminate", "q_text_decontam_bloom",
-    "q_mix_split_dedup", "q_mix_split_neardup", "q_mix_decontam_split",
-    "q_mix_weights", "q_mix_temperature", "q_mix_epochs")
 
   /** Spark local property naming the work a thread submits: the chain
     * name during the stage build, `query#run` in the timed loop. */
@@ -125,17 +92,16 @@ object Bench {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.mkString(", ")}")
     }
-    // An allowlist touching no stage reader skips the warm-up entirely
-    // so profiling one scan query doesn't pay the whole index build.
-    val needsStages = only.forall(_.exists(readsStages))
+    // An allowlist warms only the chains its queries read, so
+    // profiling one scan query doesn't pay the whole index build.
+    val chains = chainsFor(only)
     // Shared stage-cache builds (gram postings -> pair stats -> edge
     // list; IVF codebook -> assignments -> PQ codebook/codes) run ONCE
     // here, timed as their own line: they are one-time per-session
     // costs amortized over the whole dedup/ANN family (at 100 TB:
     // maintained tables), and charging them to whichever query ran
-    // first made per-query times order-dependent. The six artifact
-    // chains (text postings, charset attrs, IVF, PQ, LSH sigs, SimHash
-    // sigs) are INDEPENDENT DAGs, so each builds on its own thread —
+    // first made per-query times order-dependent. The chains are
+    // INDEPENDENT DAGs, so each builds on a pool thread —
     // Spark schedules concurrent jobs from separate threads fine, and
     // StageCache is race-safe (ConcurrencySpec) — wall-clock is
     // max over the chains, not the sum.
@@ -160,7 +126,7 @@ object Bench {
     // serial, for isolated per-chain walls).
     val stageThreads = sys.env.get("SPARK_GRAFT_STAGE_THREADS")
       .map(_.toInt).getOrElse(4)
-    val stageBuild = if (!needsStages) 0.0 else {
+    val stageBuild = if (chains.isEmpty) 0.0 else {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.DurationInt
       // Non-daemon pool: shutdown MUST be on the finally path — a failed
@@ -171,7 +137,7 @@ object Bench {
         .newFixedThreadPool(math.max(1, stageThreads))
       try {
         implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(Future.traverse(Chains) { case (name, warm) => Future {
+        Await.result(Future.traverse(chains) { case (name, warm) => Future {
           sc.setLocalProperty(LabelKey, name)
           val t0 = System.nanoTime()
           warm(spark, sfDir)
@@ -239,7 +205,7 @@ object Bench {
     val cpus = sc.defaultParallelism
     // Stopping drains the listener bus, so every shape below is final.
     spark.stop()
-    val stageShape = Chains.collect {
+    val stageShape = chains.collect {
       case (k, _) if stageDetail.containsKey(k) => "\"" + k + "\":" + shapes(k).json }
       .mkString("{", ",", "}")
     // [jobs, stages, tasks] of the min run — file copy only.

@@ -12,11 +12,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the DuckDB text; never output timestamp/decimal/array/map columns;
   * events/embeddings only via [[Tables]]; identical output column names
   * on both sides (the driver sorts columns by name before hashing).
+  *
+  * `reads` names the [[Registry.chains]] whose stages the query reads:
+  * run warm, it builds no stage of its own (BenchSpec pins this against
+  * perfbench's stage-dir column). A stage-free query reads none.
   */
 final case class QuerySpec(
     name: String,
     oracle: Option[String],
-    df: (SparkSession, String) => DataFrame
+    df: (SparkSession, String) => DataFrame,
+    reads: Seq[String] = Nil
 )
 
 object QuerySpec {
@@ -41,13 +46,13 @@ object QuerySpec {
     try body(v) finally s.catalog.dropTempView(v)
   }
 
-  def sql(name: String, oracle: String)(
+  def sql(name: String, oracle: String, reads: String*)(
       df: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec(name, Some(oracle.stripMargin.trim), df)
+    QuerySpec(name, Some(oracle.stripMargin.trim), df, reads)
 
   /** Implemented + benchmarked, but no DuckDB-expressible oracle
     * (approx sketches, LSH candidate generation, ...). */
-  def noOracle(name: String)(
+  def noOracle(name: String, reads: String*)(
       df: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec(name, None, df)
+    QuerySpec(name, None, df, reads)
 }

@@ -131,12 +131,6 @@ object StageCache {
       stagePrefix: String): Unit =
     SessionMemo.dropByPrefix(s, s"stage|$d|$stagePrefix")
 
-  /** Number of parquet data files currently materialized for `stage` —
-    * the compaction spec's observable (inputFiles of a fresh read). */
-  def fileCount(s: SparkSession, d: String, stage: String)(
-      build: => DataFrame): Int =
-    s.read.parquet(pathFor(s, d, stage)(build)).inputFiles.length
-
   /** On-disk bytes of a stage's materialization (building it if this
     * is the first touch) — the cheap size oracle for pin-vs-read
     * decisions (Graph's anchor pin guard): the parquet footprint is

@@ -109,9 +109,9 @@ import org.apache.spark.sql.functions._
   */
 object Clustering {
 
-  private def q(name: String, oracle: String)(
+  private def q(name: String, oracle: String, reads: String*)(
       df: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec.sql(name, oracle)(df)
+    QuerySpec.sql(name, oracle, reads: _*)(df)
 
   /** Fixed-point scale: 1 coordinate unit == 1e6 integer units. */
   private val ScaleD = 1000000.0
@@ -159,10 +159,14 @@ object Clustering {
     ((x + lit(ShiftD)) * lit(ScaleD)).cast("long")
 
   /** The quantized-frame BUILD pipeline — factored out of [[base]] so
-    * [[retrainCentroids]] can rebuild the stage from the live corpus. */
+    * [[retrainCentroids]] can rebuild the stage from the live corpus.
+    * Rows without a vector (NULL or empty embedding) are not part of
+    * the corpus, as the oracles' `unnest` drops them: no path assigns
+    * them a cluster and no seed is one. */
   private def baseFrame(s: SparkSession, d: String): DataFrame =
-    Tables.embeddings(s, d).select(col("vec_id"), col("label"),
-      transform(col("embedding"), quantize _).as("xq"))
+    Tables.embeddings(s, d).filter(size(col("embedding")) > 0)
+      .select(col("vec_id"), col("label"),
+        transform(col("embedding"), quantize _).as("xq"))
 
   /** Quantized training frame (vec_id, label, xq: array<long>),
     * materialized once per (session, dir) via the stage cache — shared
@@ -1384,14 +1388,6 @@ object Clustering {
     graft.SessionMemo.memo(s, s"kcenter|$d|$k")(
       kcenterTrace(base(s, d), k))
 
-  /** Spec-compat overload: default contract constants. */
-  private[graft] def train(b: DataFrame): Array[Array[Long]] =
-    train(b, K, Iters)
-
-  private[graft] def train(b: DataFrame, k: Int,
-      iters: Int): Array[Array[Long]] =
-    trainHistory(b, k, iters).last
-
   /** Driver-array Lloyd training. `estep` is the E-step, [[assign]]'s
     * dispatch by K unless a caller pins one path (the tests and the
     * operating-curve mains reach the scale-only paths on small
@@ -1656,7 +1652,7 @@ object Clustering {
         |  CAST(tp.label AS BIGINT) AS top_label,
         |  round(CAST(tp.c AS DOUBLE) / g.n, 6) AS top_share
         |FROM g JOIN tp USING (cid)
-        |ORDER BY cid""") { (s, d) =>
+        |ORDER BY cid""", "kmeans") { (s, d) =>
       val a = assign(base(s, d), centroids(s, d, kOf(s)))
         .select(col("vec_id"), col("label"), col("cid"), col("dist2"))
       val g = a.groupBy("cid")
@@ -1697,7 +1693,7 @@ object Clustering {
         |  CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(d) AS BIGINT) AS sum_d2,
         |  CAST(min(vec_id) AS BIGINT) AS min_vec
-        |FROM af GROUP BY 1 ORDER BY 1""") { (s, d) =>
+        |FROM af GROUP BY 1 ORDER BY 1""", "kmeans") { (s, d) =>
       kmeansAssignFrame(s, d, kOf(s))
         .groupBy("cid")
         .agg(count(lit(1)).as("n"), sum("dist2").as("sum_d2"),
@@ -1720,7 +1716,7 @@ object Clustering {
         |${(1 until K).map(i =>
              s"  UNION ALL SELECT CAST($i AS BIGINT), vec_id, md FROM c$i")
             .mkString("\n")})
-        |ORDER BY sel_rank""") { (s, d) =>
+        |ORDER BY sel_rank""", "kmeans") { (s, d) =>
       import s.implicits._
       kcenterOf(s, d, kOf(s))
         .toDF("sel_rank", "vec_id", "d2sel")
@@ -1764,7 +1760,7 @@ object Clustering {
         |  CAST(max(nr.md) AS BIGINT) AS max_d2
         |FROM nr JOIN pk ON pk.sel_rank = nr.r
         |GROUP BY 1, 2 ORDER BY 1"""
-    }) { (s, d) =>
+    }, "kmeans") { (s, d) =>
       import s.implicits._
       val b = base(s, d)
       val trace = kcenterOf(s, d, kOf(s))
@@ -1820,7 +1816,7 @@ object Clustering {
              s"  UNION ALL SELECT CAST($i AS BIGINT), vec_id, md FROM c$i")
             .mkString("\n")})
         |ORDER BY sel_rank"""
-    }) { (s, d) =>
+    }, "kmeans") { (s, d) =>
       import s.implicits._
       kcenterSampled(s, d, kOf(s), kOf(s), SampleCap)
         .toDF("sel_rank", "vec_id", "d2sel")
@@ -1860,7 +1856,7 @@ object Clustering {
         |  count(pr.ia) AS n_nbrs
         |FROM af v LEFT JOIN pr ON pr.ib = v.vec_id
         |GROUP BY v.vec_id, v.cid
-        |ORDER BY v.vec_id""") { (s, d) =>
+        |ORDER BY v.vec_id""", "kmeans") { (s, d) =>
       semanticDedup(s, d, kOf(s))
     },
 
@@ -1890,7 +1886,7 @@ object Clustering {
         |  round(sqrt(CAST(m.sd AS DOUBLE) / g.n) / 1000000.0, 6)
         |    AS rms_medoid
         |FROM m JOIN g USING (cid) WHERE rn = 1
-        |ORDER BY cid""") { (s, d) =>
+        |ORDER BY cid""", "kmeans") { (s, d) =>
       val v = assign(base(s, d), centroids(s, d, kOf(s)))
         .select(col("vec_id"), col("xq"), col("cid"))
       val pd2 = l2sq(col("a.xq"), col("b.xq"))
@@ -1942,7 +1938,7 @@ object Clustering {
         |  round(sqrt(CAST(inertia AS DOUBLE) / (SELECT n FROM nv))
         |    / 1000000.0, 6) AS rms
         |FROM tr ORDER BY iter"""
-    }) { (s, d) =>
+    }, "kmeans") { (s, d) =>
       val b = base(s, d)
       centroidHistory(s, d, kOf(s)).zipWithIndex.map { case (c, j) =>
         assign(b, c)
@@ -1984,7 +1980,7 @@ object Clustering {
         |  round(hl.h, 6) AS h_label,
         |  CASE WHEN hc.h > 0 AND hl.h > 0
         |    THEN round(mi.mi / sqrt(hc.h * hl.h), 6) END AS nmi
-        |FROM mi CROSS JOIN hc CROSS JOIN hl""") { (s, d) =>
+        |FROM mi CROSS JOIN hc CROSS JOIN hl""", "kmeans") { (s, d) =>
       // The K×|labels| contingency table is referenced by FIVE
       // downstream terms (tot/mc/ml/mi and the entropies) with no
       // cross-plan subtree sharing — un-anchored, the whole
@@ -2050,7 +2046,7 @@ object Clustering {
         |  round(sqrt(CAST(inertia AS DOUBLE) / (SELECT n FROM nv))
         |    / 1000000.0, 6) AS rms
         |FROM tr ORDER BY k"""
-    }) { (s, d) =>
+    }, "kmeans") { (s, d) =>
       val b = base(s, d)
       Seq(2, 4, 8, 16).map { k =>
         assign(b, centroids(s, d, k))
@@ -2098,7 +2094,7 @@ object Clustering {
         |SELECT n.n_a, n.n_b,
         |  round(sqrt(CAST(d.ss AS DOUBLE)) / 1000000.0, 6) AS shift_l2,
         |  round(CAST(d.mx AS DOUBLE) / 1000000.0, 6) AS shift_max
-        |FROM n CROSS JOIN d""") { (s, d) =>
+        |FROM n CROSS JOIN d""", "kmeans") { (s, d) =>
       // Same non-negativity precondition as training (the truncating-
       // division contract): drift is the one base() consumer that can
       // run without ever training, so it must carry the guard itself —
@@ -2114,13 +2110,11 @@ object Clustering {
         .otherwise("b")
       // Fused per-half mean (r22, LongVecSum — same argument as the
       // Lloyd M-steps): ONE hash aggregate over unexploded vectors,
-      // then the 2-row result explodes to (half, idx, mu). The
-      // size(xq) > 0 filter reproduces the exploded spelling's
-      // semantics exactly — an empty embedding contributed no rows to
-      // any (half, idx) group there, and per-idx counts equal the
-      // group count on the fixed-dimension basis (mixed dimensions
-      // fail loudly in the kernel rather than skewing the alarm).
-      val m = base(s, d).filter(size(col("xq")) > 0)
+      // then the 2-row result explodes to (half, idx, mu). `base`
+      // holds no empty vector, so per-idx counts equal the group count
+      // on the fixed-dimension basis (mixed dimensions fail loudly in
+      // the kernel rather than skewing the alarm).
+      val m = base(s, d)
         .select(col("xq"), half.as("half"))
         .groupBy("half")
         .agg(graft.functions.VectorFunctions.longVecSum(col("xq"))
@@ -2128,10 +2122,10 @@ object Clustering {
         .select(col("half"),
           posexplode(expr("transform(sv, x -> x div n)"))
             .as(Seq("idx", "mu")))
-      // half counts from the unexploded frame — one row per STORED
-      // vector (duplicates count twice, empty-embedding rows count, in
-      // BOTH engines); count() so an empty corpus reads 0, not NULL
-      val n = base(s, d).agg(
+      // half counts from the table — one per STORED row (duplicates
+      // count twice, rows without a vector count, in BOTH engines);
+      // count() so an empty corpus reads 0, not NULL
+      val n = Tables.embeddings(s, d).agg(
         count(when(half === "a", 1)).as("n_a"),
         count(when(half === "b", 1)).as("n_b"))
       val diff = m.filter(col("half") === "a").as("a")
@@ -2170,7 +2164,7 @@ object Clustering {
         |  FROM p)
         |SELECT vec_id, CAST(cid AS BIGINT) AS cid, rn <= $m AS kept
         |FROM r ORDER BY vec_id"""
-    }) { (s, d) =>
+    }, "kmeans") { (s, d) =>
       TextSim.cappedKeepByHashPriority(
           assign(base(s, d), centroids(s, d, kOf(s)))
             .select("vec_id", "cid"),

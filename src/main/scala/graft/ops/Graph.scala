@@ -713,6 +713,11 @@ object Graph {
       |ORDER BY rank DESC, doc_id"""
   }
 
+  /** Every graph query reads the `graph` chain's stages. */
+  private def q(name: String, oracle: String)(
+      df: (SparkSession, String) => DataFrame): QuerySpec =
+    QuerySpec.sql(name, oracle, "graph")(df)
+
   val specs: Seq[QuerySpec] = Seq(
 
     // Document centrality on the shared-gram graph: 10 deterministic
@@ -723,7 +728,7 @@ object Graph {
     // needed. GraphSpec additionally pins exact equality to the
     // single-threaded integer reference and bit-stability across
     // partitionings; goldens pin the fixture output.
-    QuerySpec.sql("q_graph_pagerank", pagerankOracleSql(weighted = false)) {
+    q("q_graph_pagerank", pagerankOracleSql(weighted = false)) {
       (s, d) =>
         pagerank(Tables.documents(s, d).select("doc_id"),
             graft.ops.TextSim.similarityEdges(s, d), iters = 10,
@@ -741,7 +746,7 @@ object Graph {
     // GraphSpec pins weighted ≡ the single-threaded weighted
     // reference and that uniform weights leave ranks bit-unchanged;
     // goldens pin the fixture output.
-    QuerySpec.sql("q_graph_pagerank_w", pagerankOracleSql(weighted = true)) {
+    q("q_graph_pagerank_w", pagerankOracleSql(weighted = true)) {
       (s, d) =>
         pagerank(Tables.documents(s, d).select("doc_id"),
             graft.ops.TextSim.similarityEdgesWeighted(s, d), iters = 10,
@@ -758,7 +763,7 @@ object Graph {
     // precondition pinned in GraphSpec); besides that, GraphSpec pins
     // K4-with-tail peeling at k=2/3/4 and equality to sequential
     // peeling; goldens pin the fixture output.
-    QuerySpec.sql("q_graph_kcore", kcoreOracleSql(k = 2)) { (s, d) =>
+    q("q_graph_kcore", kcoreOracleSql(k = 2)) { (s, d) =>
       kCore(graft.ops.TextSim.similarityEdges(s, d, minJac = 0.1), k = 2,
         stage = Some((s, d)))
     },
@@ -769,7 +774,7 @@ object Graph {
     // the oracle's two unrolled rounds are exact on graphs whose
     // components converge within 2 hops of the min — the fixtures, per
     // SketchesSpec; GraphSpec pins CC ≡ the general fixpoint besides).
-    QuerySpec.sql("q_graph_cc", graft.ops.TextSim.ClusterOracleSql) {
+    q("q_graph_cc", graft.ops.TextSim.ClusterOracleSql) {
       (s, d) =>
         connectedComponents(Tables.documents(s, d).select("doc_id"),
             graft.ops.TextSim.similarityEdges(s, d, minJac = 0.5),
@@ -783,7 +788,7 @@ object Graph {
     // tight). Zero-degree docs included so the histogram sums to
     // |documents| at any scale. One degree aggregation + one
     // |degrees|-sized histogram aggregation.
-    QuerySpec.sql("q_graph_degree", graft.ops.TextSim.DegreeOracleSql) {
+    q("q_graph_degree", graft.ops.TextSim.DegreeOracleSql) {
       (s, d) =>
         val e = graft.ops.TextSim.similarityEdges(s, d, minJac = 0.5)
         val sym = e.select(col("ida").as("doc_id"))
@@ -805,7 +810,7 @@ object Graph {
     // joins only the newly-settled rim against the edge list, so total
     // work is O(edges x diameter-capped rounds), never
     // rounds x |nodes| — the textbook distributed BFS shape.
-    QuerySpec.sql("q_graph_bfs", graft.ops.TextSim.BfsOracleSql) { (s, d) =>
+    q("q_graph_bfs", graft.ops.TextSim.BfsOracleSql) { (s, d) =>
       val docs = Tables.documents(s, d)
       bfsDistances(docs.select("doc_id"),
           graft.ops.TextSim.similarityEdges(s, d, minJac = 0.5),
@@ -823,7 +828,7 @@ object Graph {
     // to join. 4 fixed rounds, ties to the smallest label — the whole
     // recurrence is integer argmax with a total tie-break, so the
     // unrolled oracle matches bit-exact with no validity precondition.
-    QuerySpec.sql("q_graph_lpa", lpaOracleSql()) { (s, d) =>
+    q("q_graph_lpa", lpaOracleSql()) { (s, d) =>
       labelPropagation(Tables.documents(s, d).select("doc_id"),
         graft.ops.TextSim.similarityEdges(s, d, minJac = 0.1),
         iters = LpaRounds, stage = Some((s, d)))
@@ -833,7 +838,7 @@ object Graph {
     // graph — the clustering-coefficient numerator; near-dup cliques
     // surface as high counts. Oracle spells the identical ordered-wedge
     // + closing-join computation over the same gram-built edge set.
-    QuerySpec.sql("q_graph_triangles",
+    q("q_graph_triangles",
       s"""WITH w AS (SELECT doc_id, list_filter(regexp_split_to_array(regexp_replace(lower(nfc_normalize(text)), '([\\p{Han}\\p{Hiragana}\\p{Katakana}])', ' \\1 ', 'g'), '[^\\p{L}\\p{N}]+'), x -> len(x) > 0) AS ws
         |           FROM documents),
         |g0 AS (SELECT DISTINCT doc_id,

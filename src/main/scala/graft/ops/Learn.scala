@@ -209,7 +209,7 @@ object Learn {
     // is-English label — the readout that shows the in-engine GD loop
     // actually learned the separation (and exactly matches the oracle's
     // unrolled replay of the same integer recurrence).
-    QuerySpec.sql("q_quality_logreg", lrOracleSql()) { (s, d) =>
+    QuerySpec.sql("q_quality_logreg", lrOracleSql(), "learn") { (s, d) =>
       scored(s, d)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
@@ -228,7 +228,8 @@ object Learn {
     // chance; a learned surface-statistics separation holds accuracy
     // on documents the gradient never saw. Same bit-exact oracle
     // discipline — the CTEs replay the identical split + recurrence.
-    QuerySpec.sql("q_quality_holdout", lrOracleSql(holdout = true)) { (s, d) =>
+    QuerySpec.sql("q_quality_holdout", lrOracleSql(holdout = true),
+        "learn") { (s, d) =>
       val w = holdoutWeights(s, d)
       features(s, d)
         .withColumn("split", splitCol)

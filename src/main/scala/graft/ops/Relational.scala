@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
-  private def q(name: String, oracle: String)(
-      df: (SparkSession, String) => DataFrame) = QuerySpec.sql(name, oracle)(df)
+  private def q(name: String, oracle: String, reads: String*)(
+      df: (SparkSession, String) => DataFrame) =
+    QuerySpec.sql(name, oracle, reads: _*)(df)
 
   /** Flagship: TPC-H-Q1-shaped pricing summary (Q-AGG-GROUP, rehearsed
     * SURVEY §8.3-QA). One scan, map-side partial HashAggregate, 6-group
@@ -166,15 +167,15 @@ object Relational {
       }: _*)
   }
 
-  /** q_scan_csv's fixture tree, built ONCE per (session, dir) as the
-    * `csv_stage` stage dir: the documents scalar columns as a header'd
-    * CSV tree under `clean/` (Spark's own CSV sink — the write half of
-    * CAP-SRC-CSV) plus one hand-written `dirty/` part carrying, per
-    * lang, one good probe row and two rows whose n_chars is not a
-    * BIGINT. Deterministic by construction (langs sorted, fixed
-    * literals); the distinct-lang collect is bounded by the tiny
-    * language set. */
-  private def csvStage(s: SparkSession, d: String): String =
+  /** q_scan_csv's fixture tree (the `csv` chain), built ONCE per
+    * (session, dir) as the `csv_stage` stage dir: the documents scalar
+    * columns as a header'd CSV tree under `clean/` (Spark's own CSV
+    * sink — the write half of CAP-SRC-CSV) plus one hand-written
+    * `dirty/` part carrying, per lang, one good probe row and two rows
+    * whose n_chars is not a BIGINT. Deterministic by construction
+    * (langs sorted, fixed literals); the distinct-lang collect is
+    * bounded by the tiny language set. */
+  private[graft] def csvStage(s: SparkSession, d: String): String =
     graft.StageCache.stageDir(s, d, "csv_stage") { root =>
       Tables.documents(s, d)
         .select("doc_id", "lang", "source", "n_chars")
@@ -244,7 +245,7 @@ object Relational {
         |  CAST(max(doc_id) AS BIGINT) AS max_doc,
         |  CAST(1 AS BIGINT) AS n_good_dirty,
         |  CAST(2 AS BIGINT) AS n_quarantined
-        |FROM documents GROUP BY lang ORDER BY lang""") { (s, d) =>
+        |FROM documents GROUP BY lang ORDER BY lang""", "csv") { (s, d) =>
       val root = csvStage(s, d)
       val clean = graft.sources.Ingest.csv(s, s"$root/clean")
         .groupBy("lang").agg(

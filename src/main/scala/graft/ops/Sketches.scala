@@ -2016,7 +2016,7 @@ object Sketches {
         |  count(n.ida) AS n_nbrs
         |FROM (SELECT vec_id FROM embeddings) e
         |LEFT JOIN nbrs n ON n.idb = e.vec_id
-        |GROUP BY e.vec_id ORDER BY vec_id""") { (s, d) =>
+        |GROUP BY e.vec_id ORDER BY vec_id""", "dedup_lsh_sigs") { (s, d) =>
       val eq = storeQ(s, d, "")
       val nbrs = dedupPairCandidates(s, d)
         .join(eq.toDF("ida", "xa"), "ida")
@@ -2052,23 +2052,8 @@ object Sketches {
     // integer-dot verify (>= 0.9e12), integer-division ppb — the whole
     // report is DuckDB-hash-checked; boundedness stays pinned in
     // ScaleSpec (sample size constant across tiers).
-    QuerySpec.sql("q_sim_lsh_points", lshPointsOracle) { (s, d) =>
-      // The pinned sample is memoized as a stage: it appears on ~16
-      // plan leaves across the three points (both candidate sides +
-      // both verify sides + the count singleton), and re-running the
-      // TakeOrdered scan per leaf cost more wall than all the sampled
-      // candidate work combined. A parquet leaf also gives the
-      // optimizer real size stats, so every verify join broadcasts.
-      val sample = graft.StageCache.memoized(s, d,
-        s"lsh_sample_md5_$LshSampleN") {
-        Tables.embeddings(s, d)
-          .select(col("vec_id"), col("embedding"))
-          .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-          .limit(LshSampleN)
-          // limit() lands on ONE partition; spread the sample so the
-          // signature fan-out parallelizes instead of running one task
-          .repartition(8)
-      }
+    QuerySpec.sql("q_sim_lsh_points", lshPointsOracle, "lsh_sample") { (s, d) =>
+      val sample = lshSample(s, d)
       val sq = quantized(sample, "vec_id", "embedding")
       val tot = sample.agg(count(lit(1)).as("n_vec"))
       // All three points run through ONE join → distinct → verify →
@@ -2138,7 +2123,7 @@ object Sketches {
         |  FROM qs q JOIN hppr p ON p.vec_id = q.qid
         |  JOIN hps c ON c.t = p.t AND c.sig = p.sig
         |    AND c.vec_id <> q.qid),
-        |${annRerankSql("lcand")}""") { (s, d) =>
+        |${annRerankSql("lcand")}""", "lsh_sigs") { (s, d) =>
       val eq = storeQ(s, d, "")
       val wq = org.apache.spark.sql.expressions.Window
         .partitionBy("qid").orderBy(col("d2"), col("vec_id"))
@@ -2166,7 +2151,8 @@ object Sketches {
     // family the stage had already paid), and the maintained
     // incremental index rides the SAME md5 kernel (uncapped), which is
     // what flipped q_dedup_incremental to oracle-checked.
-    QuerySpec.sql("q_dedup_minhash", minhashOracle) { (s, d) =>
+    QuerySpec.sql("q_dedup_minhash", minhashOracle,
+        "minhash_capped") { (s, d) =>
       val bands = minhashBandTableCapped(s, d)
       bands.toDF("ida", "band_a", "bh_a")
         .join(bands.toDF("idb", "band_b", "bh_b"),
@@ -2187,7 +2173,8 @@ object Sketches {
     // the genuinely stateful part (day-2 probes seeing day-1
     // admissions) stays pinned by SketchesSpec's incremental ≡
     // full-recompute equality.
-    QuerySpec.sql("q_dedup_incremental", incrementalOracle) { (s, d) =>
+    QuerySpec.sql("q_dedup_incremental", incrementalOracle,
+        "minhash_sigs") { (s, d) =>
       dedupAgainstIndex(s, d, defaultBatch(s, d))
     },
 
@@ -2197,7 +2184,7 @@ object Sketches {
     // is stage-cached ([[simhashSigs]]); the warm query is just the
     // band join + Hamming verify. Since r19 the bit family is
     // md5-derived, so the whole pipeline is DuckDB-hash-checked.
-    QuerySpec.sql("q_dedup_simhash", simhashOracle) { (s, d) =>
+    QuerySpec.sql("q_dedup_simhash", simhashOracle, "simhash_sigs") { (s, d) =>
       val sig = simhashSigs(s, d)
       val bands = sig.select(col("doc_id"), col("simhash"), posexplode(
         array((0 until 4).map(b =>
@@ -2230,7 +2217,7 @@ object Sketches {
       s"""WITH $annEqCte,
         |$ivfCtes,
         |${ivfProbeCtes(0.7)},
-        |${annRerankSql("cand")}""") { (s, d) =>
+        |${annRerankSql("cand")}""", "ivf") { (s, d) =>
       ivfSearch(s, d, defaultQueries(s, d),
         nprobe = c => math.ceil(0.7 * c).toInt.max(2))
     },
@@ -2247,7 +2234,7 @@ object Sketches {
       s"""WITH $annEqCte,
         |$pqCtes,
         |${pqAdcCtes(candRestrict = false, "greatest(32, nt.n // 6)")},
-        |${annRerankSql("pool")}""") { (s, d) =>
+        |${annRerankSql("pool")}""", "ivf", "pq") { (s, d) =>
       pqSearch(s, d, defaultQueries(s, d),
         rerank = n => math.max(32, (n / 6).toInt))
     },
@@ -2267,7 +2254,7 @@ object Sketches {
         |${ivfProbeCtes(0.8)},
         |$pqCtes,
         |${pqAdcCtes(candRestrict = true, "greatest(32, nt.n // 3)")},
-        |${annRerankSql("pool")}""") { (s, d) =>
+        |${annRerankSql("pool")}""", "ivf", "pq") { (s, d) =>
       ivfpqSearch(s, d, defaultQueries(s, d),
         nprobe = c => math.ceil(0.8 * c).toInt.max(2),
         rerank = n => math.max(32, (n / 3).toInt))
@@ -2306,24 +2293,8 @@ object Sketches {
     // overcount <= eps * tokens, and the absent word's estimate within
     // the same envelope, for THIS query; the binary table keeps its
     // merge == rebuild bit-for-bit pins.
-    QuerySpec.sql("q_sketch_cms", cmsOracle) { (s, d) =>
-      // The counter matrix is the maintained sketch artifact (at
-      // 100 TB: sketch new partitions, add counters) — STAGE-CACHED,
-      // so the probe query pays a 42-row join, not 7x the corpus
-      // tokens of md5 (the first r20 spelling re-counted per run:
-      // 0.26 -> 1.57 s; cached it probes in ~0.2 s).
-      val counters = graft.StageCache.memoized(s, d, "cmsrows_md5") {
-        val toks = Tables.documents(s, d)
-          .select(col("lang"),
-            explode(graft.ops.TextSim.normTokens(col("text"))).as("word"))
-        val perLang = toks.select(col("lang"), col("word"),
-            explode(sequence(lit(0), lit(CmsDepth - 1))).as("r"))
-          .withColumn("j", cmsBucket(col("r"), col("word")))
-          .groupBy("lang", "r", "j").agg(count(lit(1)).as("c"))
-        val all = perLang.groupBy("r", "j").agg(sum("c").as("c"))
-          .select(lit("*all*").as("lang"), col("r"), col("j"), col("c"))
-        perLang.unionByName(all)
-      }
+    QuerySpec.sql("q_sketch_cms", cmsOracle, "cms") { (s, d) =>
+      val counters = cmsRows(s, d)
       val langs = counters.select("lang").distinct()
       val probes = s.range(1)
         .select(explode(array(CmsProbes.map(lit): _*)).as("word"))
@@ -2341,6 +2312,45 @@ object Sketches {
         .orderBy("lang", "word")
     }
   )
+
+  /** q_sim_lsh_points' pinned sample (the `lsh_sample` chain): the
+    * [[LshSampleN]] vectors first in (md5(vec_id), vec_id) order. A
+    * stage, because it appears on ~16 plan leaves across the three
+    * points (both candidate sides + both verify sides + the count
+    * singleton), and re-running the TakeOrdered scan per leaf cost more
+    * wall than all the sampled candidate work combined. A parquet leaf
+    * also gives the optimizer real size stats, so every verify join
+    * broadcasts. */
+  private[graft] def lshSample(s: SparkSession, d: String): DataFrame =
+    graft.StageCache.memoized(s, d, s"lsh_sample_md5_$LshSampleN") {
+      Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"))
+        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+        .limit(LshSampleN)
+        // limit() lands on ONE partition; spread the sample so the
+        // signature fan-out parallelizes instead of running one task
+        .repartition(8)
+    }
+
+  /** q_sketch_cms' counter matrix (the `cms` chain), per lang plus the
+    * `*all*` rollup: the maintained sketch artifact (at 100 TB: sketch
+    * new partitions, add counters) — a stage, so the probe query pays
+    * a 42-row join, not 7x the corpus tokens of md5 (the first r20
+    * spelling re-counted per run: 0.26 -> 1.57 s; cached it probes in
+    * ~0.2 s). */
+  private[graft] def cmsRows(s: SparkSession, d: String): DataFrame =
+    graft.StageCache.memoized(s, d, "cmsrows_md5") {
+      val toks = Tables.documents(s, d)
+        .select(col("lang"),
+          explode(graft.ops.TextSim.normTokens(col("text"))).as("word"))
+      val perLang = toks.select(col("lang"), col("word"),
+          explode(sequence(lit(0), lit(CmsDepth - 1))).as("r"))
+        .withColumn("j", cmsBucket(col("r"), col("word")))
+        .groupBy("lang", "r", "j").agg(count(lit(1)).as("c"))
+      val all = perLang.groupBy("r", "j").agg(sum("c").as("c"))
+        .select(lit("*all*").as("lang"), col("r"), col("j"), col("c"))
+      perLang.unionByName(all)
+    }
 
   /** md5-family CMS bucket: hexval8(md5('r|word')) mod width — the
     * Spark spelling of the oracle's strpos polynomial. */

@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object TextSim {
 
-  private def q(name: String, oracle: String)(
-      df: (SparkSession, String) => DataFrame) = QuerySpec.sql(name, oracle)(df)
+  private def q(name: String, oracle: String, reads: String*)(
+      df: (SparkSession, String) => DataFrame) =
+    QuerySpec.sql(name, oracle, reads: _*)(df)
 
   /** Power-iteration round count for q_embed_pca's fixed-point
     * recurrence — large enough that the golden tier converges to the
@@ -1176,7 +1177,7 @@ object TextSim {
         |  round(tf.tf * ln(n.n_docs / df.df), 6) AS tfidf
         |FROM tf JOIN df ON tf.word = df.word CROSS JOIN n
         |ORDER BY tfidf DESC, tf.doc_id, tf.word
-        |LIMIT 1000""") { (s, d) =>
+        |LIMIT 1000""", "text_stats") { (s, d) =>
       val docs = Tables.documents(s, d)
       // The TF table is per-corpus derived data referenced TWICE in
       // this plan (the df aggregate + the score join) with no subtree
@@ -1221,7 +1222,7 @@ object TextSim {
         |SELECT doc_id, round(score, 6) AS bm25
         |FROM sc
         |ORDER BY bm25 DESC, doc_id
-        |LIMIT 50""") { (s, d) =>
+        |LIMIT 50""", "text_stats") { (s, d) =>
       bm25Scores(s, d, Seq("window", "filter", "hash"))
         .orderBy(col("bm25").desc, col("doc_id"))
         .limit(50)
@@ -1276,7 +1277,7 @@ object TextSim {
         |      + coalesce(1.0 / (60 + rv), 0), 6) AS rrf
         |FROM lr FULL OUTER JOIN vr ON lr.doc_id = vr.vec_id
         |ORDER BY rrf DESC, doc_id
-        |LIMIT 20""") { (s, d) =>
+        |LIMIT 20""", "text_stats") { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val lr = bm25Scores(s, d, Seq("window", "filter", "hash"))
         .withColumn("rl", row_number().over(
@@ -1829,7 +1830,7 @@ object TextSim {
         |  round(avg(-log2(CAST(n AS DOUBLE) / total)), 6) AS avg_nll
         |FROM tok JOIN f USING (word) CROSS JOIN t
         |GROUP BY doc_id
-        |ORDER BY doc_id""") { (s, d) =>
+        |ORDER BY doc_id""", "text_stats") { (s, d) =>
       val tok = Tables.documents(s, d)
         .select(col("doc_id"), explode(words).as("word"))
       // The vocabulary table reads the stage-cached TF stat (r22):
@@ -1879,7 +1880,7 @@ object TextSim {
         |SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
         |  min(nll) AS min_nll, max(nll) AS max_nll
         |FROM b GROUP BY lang, bucket
-        |ORDER BY lang, bucket""") { (s, d) =>
+        |ORDER BY lang, bucket""", "text_stats") { (s, d) =>
       val tok = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), explode(words).as("word"))
       // Same TF-stat vocabulary read as q_text_unigram_nll (r22):
@@ -1925,7 +1926,7 @@ object TextSim {
         |  round(avg(-log2(CAST(n12 AS DOUBLE) / n1)), 6) AS avg_nll
         |FROM p JOIN c12 USING (bg) JOIN c1 USING (w1)
         |GROUP BY doc_id
-        |ORDER BY doc_id""") { (s, d) =>
+        |ORDER BY doc_id""", "bigrams") { (s, d) =>
       // Reads the SHARED stage-cached corpus bigram table (see
       // bigramTable) — one materialized narrow transform serving this
       // query's three references AND q_text_pmi's; the parquet memo
@@ -1967,7 +1968,7 @@ object TextSim {
         |  CAST(CASE WHEN n_shared >= 3 THEN 1 ELSE 0 END AS INT)
         |    AS contaminated
         |FROM c
-        |ORDER BY doc_id""") { (s, d) =>
+        |ORDER BY doc_id""", "docgrams") { (s, d) =>
       // both subtrees read the materialized [[docGrams]] stage — the
       // full-corpus tokenize pass runs once per session, not once per
       // consuming subtree (r15 verdict #3)
@@ -2018,7 +2019,7 @@ object TextSim {
         |  CAST(CASE WHEN n_shared >= 3 THEN 1 ELSE 0 END AS INT)
         |    AS contaminated
         |FROM c
-        |ORDER BY doc_id""") { (s, d) =>
+        |ORDER BY doc_id""", "docgrams") { (s, d) =>
       // reads the materialized [[docGrams]] stage like its exact twin
       val g0 = docGrams(s, d)
       // ev is referenced twice (Bloom build + exact verify) and there
@@ -2148,7 +2149,7 @@ object TextSim {
         |         THEN 'val'
         |       ELSE 'test' END AS split
         |FROM k JOIN g ON g.h = k.h
-        |ORDER BY k.doc_id""") { (s, d) =>
+        |ORDER BY k.doc_id""", "text_stats") { (s, d) =>
       dedupKeyedSplit(s, d).orderBy("doc_id")
     },
 
@@ -2204,7 +2205,7 @@ object TextSim {
         |  round(count(x.doc_id) / CAST(count(*) AS DOUBLE), 6) AS leak_frac
         |FROM sp LEFT JOIN x ON x.doc_id = sp.doc_id
         |GROUP BY sp.split
-        |ORDER BY sp.split""") { (s, d) =>
+        |ORDER BY sp.split""", "text_postings", "text_stats") { (s, d) =>
       val sp = dedupKeyedSplit(s, d).select("doc_id", "split")
       val ej = nearDupEdges(s, d)
         .join(sp.toDF("ida", "sa"), "ida")
@@ -2269,7 +2270,7 @@ object TextSim {
         |    AS contaminated
         |FROM tr JOIN ev ON tr.gram = ev.gram
         |GROUP BY tr.doc_id, tr.split
-        |ORDER BY tr.doc_id""") { (s, d) =>
+        |ORDER BY tr.doc_id""", "docgrams", "text_stats") { (s, d) =>
       // Both subtrees (the ev build and the non-test branch) read the
       // MATERIALIZED [[docGrams]] stage (r15 verdict #3; an eager
       // localCheckpoint here had measured strictly worse — the stage
@@ -2363,7 +2364,7 @@ object TextSim {
         |SELECT source, n_docs, n_tokens,
         |  round(n_tokens / CAST(total AS DOUBLE), 6) AS weight
         |FROM t CROSS JOIN tot
-        |ORDER BY source""") { (s, d) =>
+        |ORDER BY source""", "text_stats") { (s, d) =>
       val t = sourceTokenStats(s, d)
       t.crossJoin(broadcast(t.agg(sum("n_tokens").as("total"))))
         .select(col("source"), col("n_docs"), col("n_tokens"),
@@ -2391,7 +2392,7 @@ object TextSim {
         |SELECT lang, n_tokens, round(p, 6) AS p,
         |  round(pow(p, 0.3) / z, 6) AS w
         |FROM p CROSS JOIN z
-        |ORDER BY lang""") { (s, d) =>
+        |ORDER BY lang""", "text_stats") { (s, d) =>
       val t = langTokenStats(s, d)
       val p = t.crossJoin(broadcast(t.agg(
           sum("n_tokens").cast("double").as("total"))))
@@ -2432,7 +2433,7 @@ object TextSim {
         |  round(epochs, 6) AS epochs, eff_tokens,
         |  round(eff_tokens / et, 6) AS realized
         |FROM eff CROSS JOIN efft
-        |ORDER BY source""") { (s, d) =>
+        |ORDER BY source""", "text_stats") { (s, d) =>
       val t = sourceTokenStats(s, d).select("source", "n_tokens")
       val p = t.crossJoin(broadcast(
           t.agg(sum("n_tokens").cast("double").as("total"))))
@@ -2479,7 +2480,7 @@ object TextSim {
         |  round(COALESCE(h.n_hot, 0) / CAST(n.n_grams AS DOUBLE), 6)
         |    AS boilerplate_frac
         |FROM n LEFT JOIN h ON n.doc_id = h.doc_id
-        |ORDER BY n.doc_id""") { (s, d) =>
+        |ORDER BY n.doc_id""", "text_stats") { (s, d) =>
       // Hashed 8-grams via the codegen kernel (r21): `gram` is an
       // internal grouping/distinct key only — n_grams/n_hot count
       // equal-classes, which match the oracle's string grams up to the
@@ -3027,7 +3028,7 @@ object TextSim {
         |JOIN documents da ON cand.ida = da.doc_id
         |JOIN documents db ON cand.idb = db.doc_id
         |WHERE levenshtein(da.text, db.text) <= 20
-        |ORDER BY ida, idb""") { (s, d) =>
+        |ORDER BY ida, idb""", "text_postings") { (s, d) =>
       val cand = sharedGramPairStats(s, d).filter(col("c") >= 3)
         .select("ida", "idb")
       val texts = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -3077,7 +3078,7 @@ object TextSim {
         |FROM p
         |WHERE jaro_winkler_similarity(ta, tb) >= 0.85
         |  AND damerau_levenshtein(ta, tb) <= 60
-        |ORDER BY ida, idb""") { (s, d) =>
+        |ORDER BY ida, idb""", "text_postings") { (s, d) =>
       import graft.functions.VectorFunctions
       val cand = sharedGramPairStats(s, d).filter(col("c") >= 3)
         .select("ida", "idb")
@@ -3128,7 +3129,7 @@ object TextSim {
         |  ON a.lang = b.lang AND (a.n_chars // 100) = (b.n_chars // 100)
         |  AND a.doc_id < b.doc_id
         |WHERE round(jaccard(a.text, b.text), 6) >= 0.9
-        |ORDER BY ida, idb""") { (s, d) =>
+        |ORDER BY ida, idb""", "mask") { (s, d) =>
       val docs = charMaskDocs(s, d)
       val keys = docs.select("lang", "blk", "cs", "cm", "clean").distinct()
       val maskJac =
@@ -3182,7 +3183,7 @@ object TextSim {
         |FROM p JOIN sz sa ON p.ida = sa.doc_id
         |       JOIN sz sb ON p.idb = sb.doc_id
         |WHERE round(c / (sa.n + sb.n - c), 6) >= 0.1
-        |ORDER BY ida, idb""") { (s, d) =>
+        |ORDER BY ida, idb""", "text_postings") { (s, d) =>
       ngramJaccardPairs(s, d, 0.1).orderBy("ida", "idb")
     },
 
@@ -3214,7 +3215,7 @@ object TextSim {
         |FROM p JOIN sz sa ON p.ida = sa.doc_id
         |       JOIN sz sb ON p.idb = sb.doc_id
         |WHERE round(greatest(c / sa.n, c / sb.n), 6) >= 0.9
-        |ORDER BY ida, idb""") { (s, d) =>
+        |ORDER BY ida, idb""", "text_postings") { (s, d) =>
       val sz = gramIndex(s, d, DfCap)
         .groupBy("doc_id").agg(count(lit(1)).as("n"))
       sharedGramPairStats(s, d)
@@ -3263,7 +3264,7 @@ object TextSim {
         |    AS jaccard
         |FROM pr JOIN ns na ON na.source = pr.source_a
         |        JOIN ns nb ON nb.source = pr.source_b
-        |ORDER BY source_a, source_b""") { (s, d) =>
+        |ORDER BY source_a, source_b""", "text_stats") { (s, d) =>
       // The distinct (source, gram) projection is per-corpus derived
       // data referenced THREE times in this plan (both self-join sides
       // + the size table) with no subtree sharing — stage-cached (r21)
@@ -3318,7 +3319,7 @@ object TextSim {
         |CROSS JOIN tot
         |WHERE n12 >= 5
         |ORDER BY pmi DESC, bg
-        |LIMIT 100""") { (s, d) =>
+        |LIMIT 100""", "bigrams") { (s, d) =>
       // Same shared bigram stage as q_text_bigram_nll (see
       // bigramTable) — closes VERDICT r7 "what's wrong" #2: the
       // localCheckpoint spelling was executor-ephemeral storage and a
@@ -3360,7 +3361,7 @@ object TextSim {
         |        PARTITION BY doc_id ORDER BY n DESC, bg) AS BIGINT) AS rnk
         |      FROM c)
         |SELECT doc_id, bg, n, rnk FROM r WHERE rnk <= 3
-        |ORDER BY doc_id, rnk, bg, n""") { (s, d) =>
+        |ORDER BY doc_id, rnk, bg, n""", "bigrams") { (s, d) =>
       val wKey = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy(col("n").desc, col("bg"))
       bigramTable(s, d)
@@ -3379,7 +3380,7 @@ object TextSim {
     // a fixpoint check in SketchesSpec); deeper components need more
     // rounds, so at scale the same round is iterated to a fixpoint with
     // a driver loop over cached frames (log-diameter rounds).
-    q("q_dedup_cluster", TextSim.ClusterOracleSql) { (s, d) =>
+    q("q_dedup_cluster", TextSim.ClusterOracleSql, "text_postings") { (s, d) =>
       clusterLabels(s, d).orderBy("doc_id")
     },
 
@@ -3428,7 +3429,7 @@ object TextSim {
         |JOIN l2 ON q.doc_id = l2.doc_id AND l2.cluster = q.doc_id
         |JOIN embeddings emb ON q.doc_id = emb.vec_id
         |WHERE q.quality >= 0.62
-        |ORDER BY q.doc_id""") { (s, d) =>
+        |ORDER BY q.doc_id""", "text_postings") { (s, d) =>
       val reps = clusterLabels(s, d)
         .filter(col("cluster") === col("doc_id")).select("doc_id")
       Tables.documents(s, d)

@@ -154,7 +154,7 @@ object Udx {
         |SELECT hh.w AS word, hh.n
         |FROM hh CROSS JOIN t
         |WHERE hh.n > t.total / ${HeavyHitterK + 1}.0
-        |ORDER BY n DESC, word""") { (s, d) =>
+        |ORDER BY n DESC, word""", "text_stats") { (s, d) =>
       val cand = heavyHitterCandidates(s, d)
       // Pass 2 (exact verify) also reads the TF table: the exact count
       // of a candidate word is Σ its per-doc tf — identical to counting

@@ -8,11 +8,33 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench's chain list and shape listener, and a scan of the main
-  * sources, without building any stage. */
+/** The registry's chain list against what each query reads, Bench's
+  * chain choice and shape listener, and a scan of the main sources. */
 class BenchSpec extends AnyFunSuite {
 
-  test("Bench.Chains lists every public ops warm entry point once") {
+  /** perfbench/expected/sf0.01.tsv: `#chain <name> <dirs>` lines list
+    * the stage dirs each chain builds in a fresh session; query rows
+    * carry (name, class, rows, hash, dirs), the dirs a query builds
+    * alone in one. Dir names drop the JVM's random digit suffix. */
+  private lazy val fixture = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("perfbench/expected/sf0.01.tsv")).asScala.toSeq
+    .map(_.split("\t", -1).toSeq)
+  private lazy val tabled: Map[String, Set[String]] =
+    fixture.filter(_.head == "#chain").map(l => l(1) -> l(2).split(",").toSet)
+      .toMap
+  /** The chains the frozen fixture predates. */
+  private lazy val untabled = Registry.chains.map(_._1).toSet -- tabled.keySet
+  /** Those chains warmed, then their readers run, in a child JVM at
+    * sf0.001: each step's new dirs by name. */
+  private lazy val live: Map[String, Set[String]] = StageDirsChild.child(
+      "reads", Registry.all.filter(_.reads.exists(untabled)).map(_.name)
+        .mkString(","))
+    .map(_.split("\t", -1)).map { l =>
+      l(0) -> l(1).split(",").filter(_.nonEmpty)
+        .map(_.replaceAll("[0-9]+$", "")).toSet
+    }.toMap
+
+  test("Registry.chains lists every public ops warm entry point once") {
     // Every top-level object compiled into graft/ops.
     val dir = new java.io.File(getClass.getResource("/graft/ops").toURI)
     val warms = dir.listFiles.map(_.getName)
@@ -25,8 +47,47 @@ class BenchSpec extends AnyFunSuite {
             m.getName.startsWith("warm") && !m.getName.contains("$"))
           .map(m => s"${c.getSimpleName}.${m.getName}")
       }
-    assert(warms.size == Bench.Chains.size, warms.sorted.mkString(", "))
-    assert(Bench.Chains.map(_._1).distinct.size == Bench.Chains.size)
+    val names = Registry.chains.map(_._1)
+    assert(names.distinct.size == names.size)
+    // The chains past the fixture's name a query's own stage builder.
+    assert(untabled === Set("csv", "lsh_sample", "cms"))
+    assert(warms.size == names.size - untabled.size,
+      warms.sorted.mkString(", "))
+  }
+
+  test("every index query's stage dirs come from the chains it reads") {
+    val queries = fixture.filterNot(_.head.startsWith("#"))
+    assert(queries.size === Registry.all.size)
+    val (index, adhoc) = queries.partition(_(1) == "index")
+    assert(index.nonEmpty)
+    val adhocReads =
+      adhoc.map(_.head).filter(Registry.byName(_).reads.nonEmpty)
+    assert(adhocReads.isEmpty, adhocReads.mkString(", "))
+    val dirsOf = tabled ++ untabled.map(c => c -> live(c))
+    val unread = index.flatMap { l =>
+      val have = Registry.byName(l.head).reads.flatMap(dirsOf).toSet
+      l(4).split(",").filterNot(have).map(l.head + ": " + _)
+    }
+    assert(unread.isEmpty, unread.mkString(", "))
+  }
+
+  test("warm, the chains the fixture lacks leave their readers nothing to build") {
+    // In a fresh session: each chain's warm builds a stage, and a
+    // query reading it then runs into `noop` building none.
+    val readers = Registry.all.filter(_.reads.exists(untabled)).map(_.name)
+    assert(readers.toSet ===
+      Set("q_scan_csv", "q_sim_lsh_points", "q_sketch_cms"))
+    readers.foreach(q => assert(live(q).isEmpty, s"$q built ${live(q)}"))
+    untabled.foreach(c => assert(live(c).nonEmpty, s"chain $c built nothing"))
+  }
+
+  test("an allowlist warms exactly the chains its queries read") {
+    assert(Bench.chainsFor(None) === Registry.chains)
+    assert(Bench.chainsFor(Some(Set("q_dedup_exact"))).isEmpty)
+    val pq = Registry.byName("q_sim_ann_pq").reads
+    assert(pq.nonEmpty)
+    assert(Bench.chainsFor(Some(Set("q_sim_ann_pq"))).map(_._1).toSet ===
+      pq.toSet)
   }
 
   test("the shape listener attributes concurrent jobs to their own label") {
@@ -147,22 +208,5 @@ class BenchSpec extends AnyFunSuite {
     val naming = classes.filter(f => moved.findFirstIn(new String(
       java.nio.file.Files.readAllBytes(f), "ISO-8859-1")).isDefined)
     assert(naming.isEmpty, naming.mkString(", "))
-  }
-
-  test("Bench warms the stages for every query that reads a chain-built stage") {
-    // perfbench/expected/sf0.01.tsv: `#chain <name> <dirs>` lines list
-    // what each chain builds; query rows carry (name, class, rows,
-    // hash, dirs). These three build their own stage lazily.
-    val lazyBuilders = Set("q_scan_csv", "q_sim_lsh_points", "q_sketch_cms")
-    val lines = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get("perfbench/expected/sf0.01.tsv")).asScala
-      .map(_.split("\t", -1).toSeq)
-    val built = lines.filter(_.head == "#chain").flatMap(_(2).split(",")).toSet
-    val readers = lines.filter(l => !l.head.startsWith("#") && l(1) == "index")
-    assert(readers.nonEmpty)
-    val (chained, unchained) = readers.partition(_(4).split(",").exists(built))
-    assert(unchained.map(_.head).toSet === lazyBuilders)
-    val missed = chained.map(_.head).filterNot(Bench.readsStages)
-    assert(missed.isEmpty, missed.mkString(", "))
   }
 }

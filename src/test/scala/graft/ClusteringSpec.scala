@@ -19,8 +19,10 @@ class ClusteringSpec extends AnyFunSuite {
 
   test("training is partitioning-invariant (bit-exact, not approximate)") {
     val b = ops.Clustering.base(spark, sf)
-    val c7 = ops.Clustering.train(b.repartition(7))
-    val c3 = ops.Clustering.train(b.repartition(3))
+    val c7 = ops.Clustering.trainHistory(b.repartition(7), 8,
+      ops.Clustering.Iters).last
+    val c3 = ops.Clustering.trainHistory(b.repartition(3), 8,
+      ops.Clustering.Iters).last
     assert(c7.length === c3.length)
     c7.indices.foreach { j =>
       assert(java.util.Arrays.equals(c7(j), c3(j)),
@@ -34,7 +36,7 @@ class ClusteringSpec extends AnyFunSuite {
     val bad = Seq((1L, 0, Seq(5L, -1L)), (2L, 0, Seq(3L, 4L)))
       .toDF("vec_id", "label", "xq")
     val ex = intercept[IllegalArgumentException] {
-      ops.Clustering.train(bad)
+      ops.Clustering.trainHistory(bad, 8, ops.Clustering.Iters).last
     }
     assert(ex.getMessage.contains("kmeans quantization"))
   }
@@ -92,7 +94,7 @@ class ClusteringSpec extends AnyFunSuite {
 
   test("join E-step assignment is bit-identical to the literal path") {
     val b = ops.Clustering.base(spark, sf)
-    val cents = ops.Clustering.train(b)
+    val cents = ops.Clustering.trainHistory(b, 8, ops.Clustering.Iters).last
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cid", "dist2").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
@@ -105,7 +107,7 @@ class ClusteringSpec extends AnyFunSuite {
     // the oracle's e CTE) — the argmin group-by must not collapse it
     val b = ops.Clustering.base(spark, sf)
     val dup = b.unionAll(b.limit(25))
-    val cents = ops.Clustering.train(b)
+    val cents = ops.Clustering.trainHistory(b, 8, ops.Clustering.Iters).last
     val nLit = ops.Clustering.assignLiteral(dup, cents).count()
     val nJoin = ops.Clustering.assignJoin(dup, cents).count()
     assert(nLit === b.count() + 25)
@@ -114,7 +116,7 @@ class ClusteringSpec extends AnyFunSuite {
 
   test("training through the join E-step reproduces the literal path bit-exact") {
     val b = ops.Clustering.base(spark, sf)
-    val litC = ops.Clustering.train(b)
+    val litC = ops.Clustering.trainHistory(b, 8, ops.Clustering.Iters).last
     val jn = ops.Clustering.trainHistory(b, litC.length,
       ops.Clustering.Iters, ops.Clustering.assignJoin).last
     assert(jn.length === litC.length)
@@ -140,7 +142,7 @@ class ClusteringSpec extends AnyFunSuite {
   // the routed hierarchy is exercised for real (r = ⌈√80⌉ = 9 coarse).
   private lazy val routedFixture = {
     val b = ops.Clustering.base(spark, sf)
-    (b, ops.Clustering.train(b, k = 80, iters = 2))
+    (b, ops.Clustering.trainHistory(b, 80, 2).last)
   }
 
   test("routed E-step is partitioning-invariant and loses no rows") {
@@ -388,7 +390,7 @@ class ClusteringSpec extends AnyFunSuite {
       df.select("vec_id", "cid", "dist2").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     // exact join path: bit-identical to the literal path on the SAME frame
-    val cents8 = ops.Clustering.train(b)
+    val cents8 = ops.Clustering.trainHistory(b, 8, ops.Clustering.Iters).last
     val j = ops.Clustering.assignJoin(withMap, cents8)
     assert(j.columns.toSeq ===
       (withMap.columns.toSeq ++ Seq("cid", "dist2")),
@@ -733,7 +735,7 @@ class ClusteringSpec extends AnyFunSuite {
     val empty = Seq.empty[(Long, Int, Seq[Long])]
       .toDF("vec_id", "label", "xq")
     val ex = intercept[IllegalArgumentException] {
-      ops.Clustering.train(empty)
+      ops.Clustering.trainHistory(empty, 8, ops.Clustering.Iters).last
     }
     assert(ex.getMessage.contains("need >="))
   }
@@ -846,6 +848,40 @@ class ClusteringSpec extends AnyFunSuite {
     def hist(b: org.apache.spark.sql.DataFrame) =
       ops.Clustering.trainHistory(b, 2, 3).map(_.map(_.toSeq).toSeq)
     assert(hist(withNulls) === hist(clean))
+  }
+
+  test("rows without a vector are not in the corpus: no path assigns or seeds one") {
+    // The four ids first in md5 order would seed cids 0-3; in the dirty
+    // copy two carry a NULL and two an empty embedding, and the clean
+    // copy drops them. The oracles' unnest drops such rows, so every
+    // path must agree with the clean copy.
+    val emb = Tables.embeddings(spark, sf)
+    val vecless = emb.select("vec_id")
+      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+      .limit(4).collect().map(_.getLong(0)).toSeq
+    val empty = typedLit(Seq.empty[Double])
+    def copyOf(df: org.apache.spark.sql.DataFrame): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_kmvecless")
+        .toString
+      df.write.parquet(Tables.path(dir, "embeddings"))
+      dir
+    }
+    val dirty = copyOf(emb.withColumn("embedding",
+      when(col("vec_id").isin(vecless.take(2): _*),
+        lit(null).cast("array<double>"))
+        .when(col("vec_id").isin(vecless.drop(2): _*), empty)
+        .otherwise(col("embedding"))))
+    val clean = copyOf(emb.filter(!col("vec_id").isin(vecless: _*)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "cid", "dist2").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    val lit8 = rows(ops.Clustering.kmeansAssign(spark, dirty, 8))
+    assert(lit8 === rows(ops.Clustering.kmeansAssignFrame(spark, dirty, 8)))
+    assert(lit8 === rows(ops.Clustering.kmeansAssign(spark, clean, 8)))
+    assert(lit8.map(_._1).intersect(vecless).isEmpty)
+    def cents(d: String) =
+      ops.Clustering.centroids(spark, d, 8).map(_.toSeq).toSeq
+    assert(cents(dirty) === cents(clean))
   }
 
   test("kcenter refuses k past the distinct-vector count instead of re-picking (r16 advice)") {

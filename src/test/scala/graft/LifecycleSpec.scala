@@ -53,9 +53,11 @@ class LifecycleSpec extends AnyFunSuite {
     val dummy = spark.range(0).toDF // by-name build, never evaluated: stage exists
     val live = ops.Sketches.minhashBandTable(spark, d, name)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val filesBefore = StageCache.fileCount(spark, d, stage)(dummy)
+    val filesBefore =
+      StageCache.memoized(spark, d, stage)(dummy).inputFiles.length
     ops.Sketches.compactBandIndex(spark, d, name, targetFiles = 2)
-    val filesAfter = StageCache.fileCount(spark, d, stage)(dummy)
+    val filesAfter =
+      StageCache.memoized(spark, d, stage)(dummy).inputFiles.length
     val liveAfter = ops.Sketches.minhashBandTable(spark, d, name)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     assert(liveAfter === live, "compaction changed read results")
@@ -114,9 +116,11 @@ class LifecycleSpec extends AnyFunSuite {
 
     val dummy = spark.range(0).toDF
     val stages = Seq(s"embstore@$name", s"ivfassign@$name", s"pqcodes@$name")
-    val filesBefore = stages.map(st => StageCache.fileCount(spark, d, st)(dummy))
+    val filesBefore = stages.map(st =>
+      StageCache.memoized(spark, d, st)(dummy).inputFiles.length)
     ops.Sketches.compactAnnIndex(spark, d, name, targetFiles = 2)
-    val filesAfter = stages.map(st => StageCache.fileCount(spark, d, st)(dummy))
+    val filesAfter = stages.map(st =>
+      StageCache.memoized(spark, d, st)(dummy).inputFiles.length)
     stages.lazyZip(filesBefore).lazyZip(filesAfter).foreach { (st, b, a) =>
       assert(a < b && a <= 2, s"$st not compacted: $b -> $a")
     }

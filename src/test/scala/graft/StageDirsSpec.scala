@@ -9,9 +9,43 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[StageDirsChild]] in its own JVM with a fresh `java.io.tmpdir`, so
   * the `graft_*` dirs it lists are its own and no other suite's. */
 class StageDirsSpec extends AnyFunSuite {
+  import StageDirsChild.child
 
-  /** Runs the child in `mode`; returns its stdout lines. */
-  private def child(mode: String): Seq[String] = {
+  test("after the graph warm pass, no q_graph_* query builds a stage dir") {
+    val lines = child("reads",
+      Registry.all.map(_.name).filter(_.startsWith("q_graph_")).mkString(","))
+    assert(lines.count(_.startsWith("q_graph_")) === 8, lines)
+    assert(lines.filter(_.startsWith("q_graph_")).forall(_.endsWith("\t")),
+      lines.mkString("\n"))
+  }
+
+  test("stopping the context deletes every stage dir, rewritten ones too") {
+    assert(child("stop") === Seq("left\t"))
+  }
+}
+
+/** `graft.StageDirsChild reads|stop <sfDir> [q_a,q_b,…]`: prints, per
+  * step, the `graft_*` dirs under `java.io.tmpdir` that the step left
+  * behind (name, tab, then a comma list). `reads` warms, one line each,
+  * the chains Bench warms for the listed queries, then runs each query
+  * into the `noop` sink; `stop` prints what the context's stop left. */
+object StageDirsChild {
+  private def stageDirs(): Set[Path] = {
+    val ls = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+    try ls.iterator().asScala
+      .filter(_.getFileName.toString.startsWith("graft_")).toSet
+    finally ls.close()
+  }
+  private def names(ps: Set[Path]): String =
+    ps.map(_.getFileName.toString).toSeq.sorted.mkString(",")
+  private def made(step: => Unit): String = {
+    val before = stageDirs()
+    step
+    names(stageDirs() -- before)
+  }
+
+  /** Runs the child on the test fixtures; returns its stdout lines. */
+  def child(mode: String, args: String*): Seq[String] = {
     val tmp = Files.createTempDirectory("stagedirs_spec")
     try {
       val jvmOpts = java.lang.management.ManagementFactory.getRuntimeMXBean
@@ -19,7 +53,7 @@ class StageDirsSpec extends AnyFunSuite {
       val cmd = Seq(Paths.get(System.getProperty("java.home"), "bin", "java").toString) ++
         jvmOpts ++ Seq("-Xmx1g", s"-Djava.io.tmpdir=$tmp",
           "-cp", System.getProperty("java.class.path"),
-          "graft.StageDirsChild", mode, TestSpark.sf)
+          "graft.StageDirsChild", mode, TestSpark.sf) ++ args
       val stdout = tmp.resolve("stdout.txt")
       val pb = new ProcessBuilder(cmd: _*)
         .redirectOutput(stdout.toFile)
@@ -34,44 +68,20 @@ class StageDirsSpec extends AnyFunSuite {
     } finally Local.rmTree(tmp.toFile)
   }
 
-  test("after the graph warm pass, no q_graph_* query builds a stage dir") {
-    val lines = child("graph")
-    assert(lines.count(_.startsWith("q_graph_")) === 8, lines)
-    assert(lines.filter(_.startsWith("q_graph_")).forall(_.endsWith("\t")),
-      lines.mkString("\n"))
-  }
-
-  test("stopping the context deletes every stage dir, rewritten ones too") {
-    assert(child("stop") === Seq("left\t"))
-  }
-}
-
-/** `graft.StageDirsChild graph|stop <sfDir>`: prints, per query or
-  * at the end, the `graft_*` dirs under `java.io.tmpdir` that a step
-  * left behind (tab, then a comma list). */
-object StageDirsChild {
-  private def stageDirs(): Set[Path] = {
-    val ls = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
-    try ls.iterator().asScala
-      .filter(_.getFileName.toString.startsWith("graft_")).toSet
-    finally ls.close()
-  }
-  private def names(ps: Set[Path]): String =
-    ps.map(_.getFileName.toString).toSeq.sorted.mkString(",")
-
   def main(args: Array[String]): Unit = {
-    val Array(mode, sf) = args
     val spark = Local.session()
-    mode match {
-      case "graph" =>
-        ops.Graph.warmGraphStages(spark, sf)
-        Registry.all.filter(_.name.startsWith("q_graph_")).foreach { q =>
-          val before = stageDirs()
-          q.df(spark, sf).write.format("noop").mode("overwrite").save()
-          println(s"${q.name}\t${names(stageDirs() -- before)}")
+    args match {
+      case Array("reads", sf, queries) =>
+        val qs = queries.split(",").toSeq
+        Bench.chainsFor(Some(qs.toSet)).foreach { case (c, warm) =>
+          println(s"$c\t${made(warm(spark, sf))}")
+        }
+        qs.foreach { q =>
+          println(s"$q\t${made(Registry.byName(q).df(spark, sf)
+            .write.format("noop").mode("overwrite").save())}")
         }
         spark.stop()
-      case "stop" =>
+      case Array("stop", sf) =>
         val d = "stagedirs-child"
         StageCache.memoized(spark, d, "probe")(spark.range(10).toDF("id"))
           .count()

@@ -49,22 +49,16 @@ import org.apache.spark.sql.functions._
   * ScaleSpec grows K with n across two generated tiers and pins the
   * pair-work exponent and the planted-near-dup recall.
   *
-  * THREE E-STEP PATHS (the two exact ones bit-identical by pin,
-  * ClusteringSpec):
-  *   - `literal` (K ≤ [[LiteralMaxK]]): the nearest centroid is a
-  *     narrow per-row projection against the K×dim centroid array held
-  *     in one kernel (graftnative.LongNearest) — no join, no shuffle,
-  *     no driver round-trip per row. The array rides in every task's
-  *     serialized plan, so past the threshold:
-  *   - `join`: centroids become a broadcast frame; each vector meets
-  *     all K via a broadcast cross join and argmin is the
-  *     min(struct(d, cid)) AGGREGATE — struct ordering is
-  *     lexicographic, so ties break by cid exactly like the literal
-  *     path. The partial (map-side) min collapses the K-fold row
-  *     blowup before the shuffle, so the exchanged data is one row per
-  *     vector. Exact
-  *     — and n×K distance work with a K×dim broadcast, which is the
-  *     r14-flagged quadratic in the K∝n SemDeDup regime, so:
+  * TWO E-STEP PATHS:
+  *   - `literal` (K ≤ [[RoutedMinK]], exact): the nearest centroid is
+  *     a narrow per-row projection against the K×dim centroid array
+  *     held in one kernel (graftnative.LongNearest) — no join, no
+  *     shuffle, no driver round-trip per row. The kernel's generated
+  *     code is one call, the same for every K and every centroid set,
+  *     so neither K nor a Lloyd loop recompiles it. It is the module's
+  *     (and the ANN family's) ONE exact argmin; its cost is n×K
+  *     distance work, which is the r14-flagged quadratic in the K∝n
+  *     SemDeDup regime, so:
   *   - `routed` (the K∝n scale path, r15): a TWO-LEVEL hierarchy. The
   *     K centroids are themselves clustered (driver-side, same integer
   *     arithmetic) into ⌈√K⌉ coarse ROUTING centroids; each vector
@@ -76,19 +70,18 @@ import org.apache.spark.sql.functions._
   *     WHERE ROUTING ERRS (the true nearest centroid lives in a
   *     different branch) — still fully deterministic and partitioning-
   *     invariant, with per-row dist2 ≥ the exact argmin by
-  *     construction. Agreement vs the flat paths is MEASURED like LSH
-  *     recall (ClusteringSpec / ScaleSpec pins), not assumed.
-  *   K alone picks the path: literal ≤ [[LiteralMaxK]] < join ≤
-  *   [[RoutedMinK]] < routed — exact through mid K, routed in the
-  *   regime where exact flat assignment is the scale defect. Likewise
-  *   the centroid state ([[frameState]]) and the routing probe count
-  *   ([[effProbes]]) are pure functions of K; there is no session
-  *   knob for any of the three.
+  *     construction. Agreement vs the literal path is MEASURED like
+  *     LSH recall (ClusteringSpec / ScaleSpec pins), not assumed.
+  *   K alone picks the path: literal ≤ [[RoutedMinK]] < routed — exact
+  *   through mid K, routed in the regime where exact flat assignment
+  *   is the scale defect. Likewise the centroid state ([[frameState]])
+  *   and the routing probe count ([[effProbes]]) are pure functions of
+  *   K; there is no session knob for any of the three.
   *
-  * 100 TB shape: per iteration the M-step is one posexplode +
-  * groupBy(cid, idx) — map-side combinable, shuffle output bounded by
-  * K×dim regardless of corpus size — and the driver collects exactly
-  * K×dim (cid, idx, sum, count) rows — the same documented
+  * 100 TB shape: per iteration the M-step is one LongVecSum hash
+  * aggregate keyed by cid — map-side combinable, shuffle output
+  * bounded by K vector sums regardless of corpus size — and the driver
+  * collects at most K (cid, sums, count) rows — the same documented
   * bounded-collect class as the BPE vocabulary table. Long-sum bounds:
   * xi ≤ ~5e6, so Σxi per (cid, idx) stays exact up to ~1.8e12 members
   * per cluster; the readout's Σdist² (≤ ~1e14 per vector at dim 64) is
@@ -96,16 +89,18 @@ import org.apache.spark.sql.functions._
   * readout sum to a two-level aggregate. Both bounds are far past any
   * tested tier and documented here rather than silently assumed.
   *
-  * RELATION TO [[Sketches]]' IVF/PQ Lloyd loops: since r19 the ANN
-  * index builds run the SAME oracle discipline as this module —
-  * integer L2 on the identical (x+4)·1e6 quantization, truncating
-  * integer means, md5-order seeds (the r18 verdict's flagship ask,
-  * which flipped q_sim_ann_ivf/pq/ivfpq from no-oracle to
-  * DuckDB-hash-checked). The loops still do not share code because
-  * their SHAPES differ — C = ⌈√N⌉ cells with carry-forward and a
-  * per-subspace (m) grouping there, K-knob + literal/join/routed
-  * E-step dispatch + driver-collected centroid state here — but the
-  * arithmetic contract is now one and the same.
+  * ONE LLOYD LOOP FOR THE K SWEEP AND THE ANN CODEBOOKS: since r19
+  * [[Sketches]]' IVF and PQ codebooks follow this module's arithmetic
+  * contract — integer L2 on the (x+4)·1e6 quantization, ties to the
+  * lower cid, truncating integer means with carry-forward, md5-order
+  * seeds — and they train in the same driver-state loop,
+  * [[trainSweep]]: a list of GROUPS, each with its own vector column
+  * (all of `xq`, or a PQ subspace `slice` of it), seed rows and
+  * per-centroid step after the mean (IVF re-projects onto the sphere).
+  * Per round one E-step tags every row with each group's
+  * LongNearest cid and one LongVecSum aggregate keyed by (group, cid)
+  * carries the means to the driver. The K sweep is one group per K;
+  * IVF is one group of ⌈√N⌉ cells; PQ is one group per subspace.
   */
 object Clustering {
 
@@ -132,19 +127,16 @@ object Clustering {
     * non-default `spark.graft.bpe.merges`. */
   private[ops] val K = 8
   private[graft] val Iters = 4
-  /** Largest K [[assign]] serves with the literal E-step, whose
-    * centroids ship inside every task; past it the broadcast-join path
-    * ships them once per executor. */
-  private[graft] val LiteralMaxK = 64
-
-  /** Largest K the dispatch serves with the EXACT join E-step;
-    * above it the two-level routed path takes over. 1024 keeps every
-    * oracle/golden K (8–16) and any plausible hand-picked K exact,
-    * while the K∝n SemDeDup regime (K ~ n/125 — thousands to millions
-    * of clusters) lands on the path whose work is ~n√K instead of the
-    * n×K ≈ n²/125 the r14 verdict flagged. Callers needing exact
-    * assignment at larger K call [[assignJoin]] directly and accept
-    * the quadratic. */
+  /** Largest K the dispatch serves with the EXACT literal E-step
+    * (and trains in the joint [[trainSweep]]); above it the two-level
+    * routed path takes over. 1024 keeps every oracle/golden K (8–16)
+    * and any plausible hand-picked K exact, while the K∝n SemDeDup
+    * regime (K ~ n/125 — thousands to millions of clusters) lands on
+    * the path whose work is ~n√K instead of the n×K ≈ n²/125 the r14
+    * verdict flagged. The literal kernel's centroids ride in every
+    * task's plan (1024×64 longs ≈ 0.5 MB here). Callers needing exact
+    * assignment at larger K call [[assignLiteral]] directly and accept
+    * both the quadratic and that per-task payload. */
   private[graft] val RoutedMinK = 1024
 
   private[graft] def kOf(s: SparkSession): Int = {
@@ -186,13 +178,22 @@ object Clustering {
   private def dist2(c: Array[Long]): Column =
     l2sq(col("xq"), typedLit(c.toSeq))
 
-  /** struct(d, cid) of the centroid nearest to xq, ordered by
-    * (distance, cid), so ties (possible only for coinciding centroids)
-    * break deterministically. One kernel whose generated code is the
-    * same for every K and every centroid set: a Lloyd loop or a K sweep
-    * compiles it once. */
-  private def nearest(cents: Array[Array[Long]]): Column =
-    graft.functions.VectorFunctions.longNearest(col("xq"), cents)
+  /** struct(d, cid) of the centroid nearest to the array<long> column
+    * `v`, ordered by (distance, cid), so ties (possible only for
+    * coinciding centroids) break deterministically. One kernel whose
+    * generated code is the same for every K and every centroid set: a
+    * Lloyd loop or a K sweep compiles it once. A NULL, empty or ragged
+    * `v` reads (NULL, 0), and so does every row against no centroids
+    * (an ANN codebook of a corpus without vectors). */
+  private[graft] def nearest(cents: Array[Array[Long]], v: Column = col("xq")): Column =
+    if (cents.isEmpty) struct(lit(null).cast("long").as("d"), lit(0L).as("cid"))
+    else graft.functions.VectorFunctions.longNearest(v, cents)
+
+  /** The cid of a [[nearest]] struct, NULL where the distance is NULL
+    * (a NULL, empty or ragged vector) — the ANN family's cell and code
+    * over a collected codebook. */
+  private[graft] def cidOrNull(n: Column): Column =
+    when(n.getField("d").isNotNull, n.getField("cid"))
 
   /** Literal-path assignment: `b` plus (cid, dist2), one narrow
     * projection, no join, no shuffle. */
@@ -203,33 +204,8 @@ object Clustering {
       .withColumn("dist2", col("_dc.d"))
       .drop("_dc")
 
-  /** Broadcast-join assignment — the large-K path: same (cid, dist2)
-    * columns, bit-identical values (pinned against the literal path in
-    * ClusteringSpec). min(struct(d, cid)) compares lexicographically,
-    * reproducing the literal kernel's (distance, cid) tie-break; the
-    * partial aggregate collapses the K-fold cross-join blowup map-side,
-    * so the shuffle carries one row per vector. */
-  private[graft] def assignJoin(b: DataFrame,
-      cents: Array[Array[Long]]): DataFrame = {
-    val s = b.sparkSession
-    import s.implicits._
-    val cdf = cents.zipWithIndex.toIndexedSeq
-      .map { case (c, j) => (j.toLong, c.toIndexedSeq) }
-      .toDF("_ccid", "_cq")
-    // A per-row id keeps FULLY-DUPLICATE input rows distinct through
-    // the argmin group-by: the literal path (and the oracle's e CTE)
-    // weights a double-ingested vector twice, so this path must too —
-    // the id is only a grouping key, dropped before output, so its
-    // (partitioning-dependent) values never reach a result.
-    val keyed = b.withColumn("_rid", monotonically_increasing_id())
-    argminByRid(keyed.crossJoin(broadcast(cdf))
-      .withColumn("_dc",
-        struct(l2sq(col("xq"), col("_cq")).as("d"), col("_ccid").as("cid"))),
-      b.columns.toIndexedSeq)
-  }
-
-  /** The grouped-argmin tail shared by every blown-up assignment path
-    * (join, routed, frame): `joined` carries one `_dc` = struct(d,
+  /** The grouped-argmin tail shared by the routed and frame paths:
+    * `joined` carries one `_dc` = struct(d,
     * cid) candidate per (input row × candidate centroid), keyed by
     * `_rid`. Group ONLY on the _rid row key — never on payload
     * columns: a caller frame carrying a map-typed column would make a
@@ -368,9 +344,15 @@ object Clustering {
   private[graft] def frameRoutes(k: Int): Boolean =
     effProbes(k) < routeCount(k)
 
+  /** Largest coarse-branch count r that [[routeProbe]] ranks with an
+    * array of r (d, branch) struct literals in one projection; a larger
+    * r takes the broadcast top-k aggregate. That choice is all this
+    * bounds: the struct array's expression tree grows with r. */
+  private[graft] val LiteralProbeMaxR = 64
+
   /** Stage 1 of the routed E-step: each row of `keyed` exploded to its
     * `p` nearest coarse branches (`_rt` column, ≤ p rows per input).
-    * r = ⌈√K⌉ ≤ [[LiteralMaxK]] (⇔ K ≤ 4096) runs as one narrow
+    * r = ⌈√K⌉ ≤ [[LiteralProbeMaxR]] (⇔ K ≤ 4096) runs as one narrow
     * projection (array of r (d, rid) struct literals, sorted, sliced);
     * larger r goes through a broadcast cross join with the √K-row
     * coarse frame and the bounded-heap [[VectorFunctions.topKByScore]]
@@ -388,7 +370,7 @@ object Clustering {
       coarse: Array[Array[Long]], p: Int): DataFrame = {
     val r = coarse.length
     val pEff = math.min(p, r)
-    if (r <= LiteralMaxK) {
+    if (r <= LiteralProbeMaxR) {
       val arr = array(coarse.zipWithIndex.toIndexedSeq.map { case (c, j) =>
         struct(dist2(c).as("d"), lit(j.toLong).as("rt"))
       }: _*)
@@ -436,9 +418,9 @@ object Clustering {
     * centroid's true integer L2), and ≥ the flat argmin by
     * construction — the assignment differs from exact only where all
     * P probed branches miss the true nearest (measured:
-    * ClusteringSpec agreement pin, ScaleSpec recall pin). K ≤
-    * [[LiteralMaxK]] falls back to the literal path: a hierarchy under
-    * 64 centroids costs more in routing than it saves. */
+    * ClusteringSpec agreement pin, ScaleSpec recall pin). Where the
+    * probes would visit every branch (K ≤ 9, [[frameRoutes]] false)
+    * routing cannot change a result, so the literal path serves. */
   private[graft] def assignRouted(b: DataFrame,
       cents: Array[Array[Long]]): DataFrame =
     assignRouted(b, cents, effProbes(cents.length))
@@ -448,7 +430,7 @@ object Clustering {
     * through. */
   private[graft] def assignRouted(b: DataFrame,
       cents: Array[Array[Long]], p: Int): DataFrame = {
-    if (cents.length <= LiteralMaxK) return assignLiteral(b, cents)
+    if (!frameRoutes(cents.length)) return assignLiteral(b, cents)
     val s = b.sparkSession
     val (coarse, memberOf) = coarsen(cents, routeCount(cents.length))
     // A NULL xq row would be dropped SILENTLY by the top-k routing
@@ -459,8 +441,9 @@ object Clustering {
     // input. (The stream-guard trick: assert_true is NULL when the
     // row is fine, and wiring it through the kept column keeps it
     // un-prunable.)
-    // same per-row grouping-key discipline as assignJoin: duplicates
-    // stay distinct through the argmin, the id never reaches output
+    // a per-row grouping key: duplicates stay distinct through the
+    // argmin, like the literal path (and the oracle's e CTE) weighs a
+    // double-ingested vector twice; the id never reaches output
     val keyed = guardXq(b, "assignRouted")
       .withColumn("_rid", monotonically_increasing_id())
     val probed = routeProbe(keyed, coarse, p)
@@ -500,7 +483,7 @@ object Clustering {
       cents: Array[Array[Long]], p: Int): Long = {
     val n = b.count()
     val k = cents.length
-    if (k <= LiteralMaxK) return n * k
+    if (!frameRoutes(k)) return n * k
     val s = b.sparkSession
     import s.implicits._
     val (coarse, memberOf) = coarsen(cents, routeCount(k))
@@ -559,10 +542,10 @@ object Clustering {
     * the smaller branch id, same truncating integer mean with empty
     * branches carried forward, same used-branch compaction. The
     * driver holds only the r×dim coarse level (r = ⌈√K⌉); membership
-    * stays a frame. The E-step here is the join spelling (cross join
-    * against the broadcast r-row coarse frame, map-side argmin) — an
-    * O(K·r·iters) = O(K^1.5) DISTRIBUTED job, vs the same arithmetic
-    * as driver loops in [[coarsen]].
+    * stays a frame. The E-step here is the literal kernel over the
+    * driver-held coarse level (one narrow projection of the centroid
+    * frame) — O(K·r·iters) = O(K^1.5) DISTRIBUTED work, vs the same
+    * arithmetic as driver loops in [[coarsen]].
     *
     * @return (coarse centroids — √K driver state by design, and the
     *         (cid, _rt) membership frame, localCheckpointed) */
@@ -585,16 +568,9 @@ object Clustering {
           s"${picked.size} of ${seedPos.distinct.length} stride seeds)")
       seedPos.map(p => picked(p).clone())
     }
-    def coarseDf = coarse.zipWithIndex.toIndexedSeq
-      .map { case (c, j) => (j.toLong, c.toIndexedSeq) }
-      .toDF("_rt", "_rq")
     def estep: DataFrame = // argmin over r branches; ties to smaller _rt
-      cents.crossJoin(broadcast(coarseDf))
-        .groupBy(col("cid"))
-        .agg(first(col("cq")).as("cq"),
-          min(struct(l2sq(col("cq"), col("_rq")).as("d"),
-            col("_rt").as("rt"))).as("_dr"))
-        .select(col("cid"), col("cq"), col("_dr.rt").as("_rt"))
+      cents.select(col("cid"), col("cq"),
+        nearest(coarse, col("cq")).getField("cid").as("_rt"))
     var member: DataFrame = null
     var it = 0
     while (it <= iters) {
@@ -654,7 +630,7 @@ object Clustering {
 
   /** A few-row (cid, cq) centroid frame as the driver array the
     * literal E-step takes, indexed by cid (seeds number 0 until k). */
-  private def centroidRows(cents: DataFrame): Array[Array[Long]] =
+  private[graft] def centroidRows(cents: DataFrame): Array[Array[Long]] =
     cents.select("cid", "cq").collect().sortBy(_.getLong(0))
       .map(_.getSeq[Long](1).toArray)
 
@@ -920,17 +896,17 @@ object Clustering {
     ()
   }
 
-  /** E-step dispatch by K — exact paths through [[RoutedMinK]], the
-    * two-level routed path in the K∝n regime. */
+  /** E-step dispatch by K — the exact literal path through
+    * [[RoutedMinK]], the two-level routed path in the K∝n regime. */
   private[graft] def assign(b: DataFrame,
       cents: Array[Array[Long]]): DataFrame =
-    if (cents.length <= LiteralMaxK) assignLiteral(b, cents)
-    else if (cents.length <= RoutedMinK) assignJoin(b, cents)
+    if (cents.length <= RoutedMinK) assignLiteral(b, cents)
     else assignRouted(b, cents)
 
   /** The training-result class at this k — the memo/store key
-    * component. "exact" covers literal and join (bit-identical by
-    * pin). The routed class carries the probe count, because
+    * component. "exact" is the literal path; store artifacts written
+    * under it by the removed join E-step (bit-identical by pin) still
+    * load. The routed class carries the probe count, because
     * routed-trained centroids depend on P. */
   private[graft] def modeKey(k: Int): String =
     if (k > RoutedMinK) s"routed_p${effProbes(k)}" else "exact"
@@ -975,7 +951,7 @@ object Clustering {
     * 100 TB, the same family as the IVF codebook warm.
     *
     * Two serial steps: [[centroidHistories]] trains the sweep's
-    * literal-path K's in one joint Lloyd loop, then the frame scorer
+    * exact K's in one joint Lloyd loop, then the frame scorer
     * builds its state — at K ≤ 9 the centroid stage is written from
     * the sweep's history of K, so nothing trains twice. */
   def warmKmeansStages(s: SparkSession, d: String): Unit = {
@@ -984,19 +960,19 @@ object Clustering {
     frameScorer(s, d, k)
   }
 
-  /** [[centroidHistory]] for several K's at once: the literal-path K's
-    * (≤ [[LiteralMaxK]]) whose memo is still cold train together in
-    * [[trainSweep]], and each history seeds its K's memo; larger K's
+  /** [[centroidHistory]] for several K's at once: the exact K's
+    * (≤ [[RoutedMinK]]) whose memo is still cold train together in
+    * [[trainKs]], and each history seeds its K's memo; routed K's
     * train one at a time through [[centroidHistory]]. */
   private[graft] def centroidHistories(s: SparkSession, d: String,
       ks: Seq[Int]): Unit = {
-    val (joint, single) = ks.distinct.partition(_ <= LiteralMaxK)
+    val (joint, single) = ks.distinct.partition(_ <= RoutedMinK)
     val cold = joint.filter(k =>
       graft.SessionMemo.peek[AnyRef](s, centsKey(d, k)).isEmpty)
     if (cold.nonEmpty) {
       graft.SessionMemo.memo(s, s"kmeans_fp|$d")(
         java.lang.Long.valueOf(corpusFingerprint(s, d)))
-      val hists = trainSweep(base(s, d), cold, Iters)
+      val hists = trainKs(base(s, d), cold, Iters)
       cold.foreach(k => graft.SessionMemo.memo(s, centsKey(d, k))(hists(k)))
     }
     single.foreach(k => centroidHistory(s, d, k))
@@ -1312,7 +1288,7 @@ object Clustering {
     val eN = sharedE.getOrElse("e")
     val seedSrc =
       if (sharedE.isDefined) s"(SELECT DISTINCT vec_id FROM $eN)"
-      else "embeddings"
+      else "embeddings WHERE len(embedding) > 0"
     // the pick side is PRE-FILTERED to its dim rows via an explicit
     // join with the 1-row pick CTE, never a correlated scalar in the
     // idx-join predicate: the correlated spelling let the planner
@@ -1388,98 +1364,131 @@ object Clustering {
     graft.SessionMemo.memo(s, s"kcenter|$d|$k")(
       kcenterTrace(base(s, d), k))
 
-  /** Driver-array Lloyd training. `estep` is the E-step, [[assign]]'s
-    * dispatch by K unless a caller pins one path (the tests and the
-    * operating-curve mains reach the scale-only paths on small
-    * corpora this way). */
+  /** Driver-array Lloyd training at one K. `estep` is the E-step,
+    * [[assign]]'s dispatch by K unless a caller pins one path (the
+    * tests and the operating-curve mains reach the routed path on
+    * small corpora this way); the loop is [[trainSweep]]'s, with this
+    * E-step in place of its nearest-centroid tags. */
   private[graft] def trainHistory(b: DataFrame, k: Int, iters: Int,
       estep: (DataFrame, Array[Array[Long]]) => DataFrame = assign)
-      : Seq[Array[Array[Long]]] = {
-    require(k >= 1, s"kmeans k must be >= 1, got $k")
+      : Seq[Array[Array[Long]]] =
+    sweepKs(b, Seq(k), iters) { _ => cur =>
+      estep(b, cur(k)).select(lit(k).as("g"), col("cid"),
+        col("xq").as("v"), col("dist2").as("d"))
+    }(k)
+
+  /** One group of a [[trainSweep]]: its `key`, the array<long> column
+    * `vec` its centroids live in (all of `xq`, or a `slice` of it), its
+    * seed centroids, and the `step` every centroid takes after the
+    * truncating mean (empty clusters carry forward, then step too). */
+  private[graft] final case class SweepGroup(key: Int, vec: Column,
+      seeds: Array[Array[Long]],
+      step: Array[Long] => Array[Long] = identity)
+
+  /** The one driver-state Lloyd loop, for any set of independent
+    * recurrences at once: the k-means K sweep ([[trainKs]]), the IVF
+    * codebook and the PQ subspace codebooks (Sketches), and the routed
+    * single-K training ([[trainHistory]]). `estep` maps each group's
+    * current centroids to (g, cid, v, d) rows — the group key, the
+    * chosen cid, the vector it adds to that cid's mean and its
+    * distance: [[nearestTags]] everywhere but the routed trainer. Rows
+    * with a NULL distance (a NULL, empty or ragged vector) add nothing
+    * to a mean. Per round: that E-step, one [[LongVecSum]] aggregate keyed by
+    * (g, cid), one bounded collect (≤ Σ centroids rows). Element-wise
+    * long sums are partitioning-invariant and every member carries
+    * every position, so sv(i) / n is the per-(cid, idx) truncating
+    * mean bit for bit; recurrences sharing a round share its scans and
+    * stay bit-identical to training each alone (pinned).
+    *
+    * @return each group's history (seeds .. round `iters`) and the
+    *         M-step rows the driver collected */
+  private[graft] def trainSweep(groups: Seq[SweepGroup], iters: Int)(
+      estep: Map[Int, Array[Array[Long]]] => DataFrame)
+      : (Map[Int, Vector[Array[Array[Long]]]], Long) = {
+    require(groups.map(_.key).distinct.size == groups.size,
+      s"trainSweep group keys repeat: ${groups.map(_.key).mkString(",")}")
+    var hist = groups.map(g => g.key -> Vector(g.seeds)).toMap
+    var collected = 0L
+    var it = 0
+    while (it < iters) {
+      val m = estep(hist.map { case (g, h) => g -> h.last })
+        .filter(col("d").isNotNull)
+        .groupBy(col("g"), col("cid"))
+        .agg(graft.functions.VectorFunctions.longVecSum(col("v"))
+          .as("sv"), count(lit(1)).as("n"))
+        .collect()
+      collected += m.length
+      val byG = m.groupBy(_.getInt(0))
+      hist = groups.map { g =>
+        val h = hist(g.key)
+        g.key -> (h :+ meanStep(h.last,
+          byG.getOrElse(g.key, Array.empty[org.apache.spark.sql.Row])
+            .map(r => (r.getLong(1).toInt, r.getSeq[Long](2), r.getLong(3))))
+          .map(g.step))
+      }.toMap
+      it += 1
+    }
+    (hist, collected)
+  }
+
+  /** [[trainSweep]]'s E-step over `rows`: one projection tagging every
+    * row with each group's nearest centroid (LongNearest over the
+    * group's `vec`), exploded to one (g, cid, v, d) row per group. The
+    * kernel's struct rides whole through the explode, so each group's
+    * argmin runs once per row. */
+  private[graft] def nearestTags(rows: DataFrame, groups: Seq[SweepGroup])(
+      cur: Map[Int, Array[Array[Long]]]): DataFrame = {
+    val tags = array(groups.map(g => struct(lit(g.key).as("g"),
+      nearest(cur(g.key), g.vec).as("n"), g.vec.as("v"))): _*)
+    rows.select(explode(tags).as("_t"))
+      .select(col("_t.g").as("g"), col("_t.n.cid").as("cid"),
+        col("_t.v").as("v"), col("_t.n.d").as("d"))
+  }
+
+  /** [[trainHistory]] for several exact K's (each ≤ [[RoutedMinK]]) in
+    * ONE [[trainSweep]], one group per K over the whole `xq` — the
+    * sweep's recurrences are independent, so they share every scan and
+    * stay bit-identical to one [[trainHistory]] per K (pinned). */
+  private[graft] def trainKs(b: DataFrame, ks: Seq[Int],
+      iters: Int): Map[Int, Vector[Array[Array[Long]]]] = {
+    require(ks.forall(_ <= RoutedMinK),
+      s"trainKs takes K's in 1..$RoutedMinK, got ${ks.mkString(",")}")
+    sweepKs(b, ks, iters)(groups => nearestTags(b, groups))
+  }
+
+  /** The k-means side of [[trainSweep]], one group per K over the whole
+    * `xq`: one non-negativity scan; one seed collect of the largest
+    * K's rows, whose first k rows are K=k's seeds because the seed
+    * order (md5(vec_id), vec_id) does not depend on k; then the loop
+    * with the E-step `estep` builds for the groups. Counts one training
+    * per K in [[trainCounter]] and the collected rows in
+    * [[driverStateRows]]. */
+  private def sweepKs(b: DataFrame, ks: Seq[Int], iters: Int)(
+      estep: Seq[SweepGroup] => Map[Int, Array[Array[Long]]] => DataFrame)
+      : Map[Int, Vector[Array[Array[Long]]]] = {
+    val sweep = ks.distinct.sorted
+    require(sweep.nonEmpty && sweep.head >= 1,
+      s"kmeans k must be >= 1, got ${ks.mkString(",")}")
     // Hard bound (r15 verdict #2): past this K the driver-array
     // spelling IS the scale defect — K×dim seeds/M-step collects and
     // O(K^1.5) driver coarsening. Refuse loudly; the frame-state path
     // ([[trainFrame]] / [[kmeansAssignFrame]], dispatched by
     // [[frameState]]) is the supported spelling there.
-    require(k <= DriverStateMaxK,
-      s"k=$k exceeds DriverStateMaxK=$DriverStateMaxK for driver-array " +
-        "training: centroid state must not grow on the driver at this " +
-        "scale — use the frame-state path (kmeansAssignFrame)")
-    trainCounter.incrementAndGet()
-    requireSeedable(b, k)
-    var cents = seedRows(b, k)
-    require(cents.length == k, s"need >= $k vectors to seed kmeans")
-    val hist = Seq.newBuilder[Array[Array[Long]]]
-    hist += cents
-    var it = 0
-    while (it < iters) {
-      // One job: E-step via the path fitting k, bounded k-row M-step.
-      // The M-step is ONE hash aggregate over unexploded vectors (r22,
-      // guide §2.3 — graftnative.LongVecSum): the old posexplode →
-      // groupBy(cid, idx) shape exploded every member 64× into the
-      // exchange and collected k×dim rows; element-wise long sums are
-      // partitioning-invariant and the per-position count equals the
-      // group count, so sv(i) / n reproduces the old per-(cid, idx)
-      // truncating mean bit-for-bit. Rows without a vector (NULL or
-      // empty xq) still get a cid but add nothing to a mean, like the
-      // drift path's filter: LongVecSum skips them, so counting them
-      // would shrink the mean, and a cluster of only such rows would
-      // read a NULL sum.
-      val m = estep(b, cents)
-        .filter(size(col("xq")) > 0)
-        .groupBy("cid")
-        .agg(graft.functions.VectorFunctions.longVecSum(col("xq"))
-          .as("sv"), count(lit(1)).as("n"))
-        .collect() // bounded: ≤ k rows (and k ≤ DriverStateMaxK)
-      driverStateRows.addAndGet(m.length.toLong)
-      cents = meanStep(cents,
-        m.map(r => (r.getLong(0).toInt, r.getSeq[Long](1), r.getLong(2))))
-      hist += cents
-      it += 1
-    }
-    hist.result()
-  }
-
-  /** [[trainHistory]] for several literal-path K's (each ≤
-    * [[LiteralMaxK]]) in ONE Lloyd loop — the K sweep's recurrences are
-    * independent, so they can share every scan and stay bit-identical
-    * to one [[trainHistory]] per K (pinned). One non-negativity scan;
-    * one seed collect of the largest K's rows, whose first k rows are
-    * K=k's seeds because the seed order (md5(vec_id), vec_id) does not
-    * depend on k; then per iteration one E-step that tags each row
-    * with every K's nearest centroid and one [[LongVecSum]] aggregate
-    * keyed by (K, cid). Rows without a vector are dropped before the
-    * E-step — [[trainHistory]] drops them after it, before the same
-    * aggregate. Counts one training per K in [[trainCounter]]. */
-  private[graft] def trainSweep(b: DataFrame, ks: Seq[Int],
-      iters: Int): Map[Int, Vector[Array[Array[Long]]]] = {
-    val sweep = ks.distinct.sorted
-    require(sweep.nonEmpty && sweep.forall(k => k >= 1 && k <= LiteralMaxK),
-      s"trainSweep takes K's in 1..$LiteralMaxK, got ${ks.mkString(",")}")
+    require(sweep.last <= DriverStateMaxK,
+      s"k=${sweep.last} exceeds DriverStateMaxK=$DriverStateMaxK for " +
+        "driver-array training: centroid state must not grow on the " +
+        "driver at this scale — use the frame-state path (kmeansAssignFrame)")
     trainCounter.addAndGet(sweep.length.toLong)
     requireSeedable(b, sweep.head)
-    val seeds = seedRows(b, sweep.last)
+    val seeds = seedVectors(b, sweep.last)
+    driverStateRows.addAndGet(seeds.length.toLong)
     sweep.foreach(k =>
       require(seeds.length >= k, s"need >= $k vectors to seed kmeans"))
-    var hist = sweep.map(k => k -> Vector(seeds.take(k).map(_.clone()))).toMap
-    val vecs = b.filter(size(col("xq")) > 0).select("xq")
-    var it = 0
-    while (it < iters) {
-      val tags = array(sweep.map(k => struct(lit(k).as("k"),
-        nearest(hist(k).last).getField("cid").as("cid"))): _*)
-      val m = vecs.select(explode(tags).as("_t"), col("xq"))
-        .groupBy(col("_t.k").as("k"), col("_t.cid").as("cid"))
-        .agg(graft.functions.VectorFunctions.longVecSum(col("xq"))
-          .as("sv"), count(lit(1)).as("n"))
-        .collect() // bounded: ≤ Σ k rows
-      driverStateRows.addAndGet(m.length.toLong)
-      val byK = m.groupBy(_.getInt(0))
-      hist = hist.map { case (k, h) => k -> (h :+ meanStep(h.last,
-        byK.getOrElse(k, Array.empty[org.apache.spark.sql.Row])
-          .map(r => (r.getLong(1).toInt, r.getSeq[Long](2), r.getLong(3))))) }
-      it += 1
-    }
-    hist
+    val groups = sweep.map(k =>
+      SweepGroup(k, col("xq"), seeds.take(k).map(_.clone())))
+    val (hists, collected) = trainSweep(groups, iters)(estep(groups))
+    driverStateRows.addAndGet(collected)
+    hists
   }
 
   /** Non-negativity guard for the truncating-division contract: one
@@ -1494,19 +1503,17 @@ object Clustering {
       s"kmeans quantization saw coordinate <= -$ShiftD (min scaled $mn)")
   }
 
-  /** Seeds: the vectors of the k smallest (md5(vec_id), vec_id) rows in
-    * that order — one TakeOrdered pass; fewer rows if the corpus is
-    * smaller. */
-  private def seedRows(b: DataFrame, k: Int): Array[Array[Long]] = {
-    val seeds = b
+  /** Seeds: the vectors of the k smallest (md5(vec_id), vec_id) rows
+    * of a (vec_id, xq) frame that have a vector, in that order — one
+    * TakeOrdered pass; fewer rows if the frame is smaller. Shared by
+    * the k-means sweep and the ANN codebooks. */
+  private[graft] def seedVectors(b: DataFrame, k: Int): Array[Array[Long]] =
+    b.filter(size(col("xq")) > 0)
       .select(col("xq"), md5(col("vec_id").cast("string")).as("h"),
         col("vec_id"))
       .orderBy(col("h"), col("vec_id")).limit(k)
       .select("xq").collect()
       .map(_.getSeq[Long](0).toArray)
-    driverStateRows.addAndGet(seeds.length.toLong)
-    seeds
-  }
 
   /** The M-step's truncating integer means: each (id, Σx, n) row
     * replaces centroid `id` with Σx div n; a centroid with no row (an
@@ -1575,7 +1582,7 @@ object Clustering {
     s"""$eCte${p}sd0 AS MATERIALIZED (SELECT vec_id, cid FROM (
       |    SELECT vec_id, row_number() OVER (
       |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cid
-      |    FROM embeddings) WHERE cid < $k),
+      |    FROM embeddings WHERE len(embedding) > 0) WHERE cid < $k),
       |${p}c0 AS MATERIALIZED (
       |  SELECT sd0.cid, e.idx, e.xi AS c
       |  FROM ${p}sd0 sd0 JOIN $eN e USING (vec_id)),
@@ -1927,7 +1934,8 @@ object Clustering {
           |  SELECT vec_id, min(d) AS md FROM d$i GROUP BY 1)""")
         .mkString("", "\n  UNION ALL\n  ", "")
       s"""WITH ${kmeansCtes()},
-        |nv AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
+        |nv AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings
+        |  WHERE len(embedding) > 0),
         |tr AS (
         |  $steps
         |  UNION ALL
@@ -2039,7 +2047,8 @@ object Clustering {
           |  SELECT vec_id, min(d) AS md FROM k${k}_dF GROUP BY 1)"""
       }.mkString("", "\n  UNION ALL\n  ", "")
       s"""WITH $ctes,
-        |nv AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
+        |nv AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings
+        |  WHERE len(embedding) > 0),
         |tr AS (
         |  $rows)
         |SELECT k, inertia,

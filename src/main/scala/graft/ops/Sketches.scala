@@ -334,10 +334,10 @@ object Sketches {
   /** Quantized squared L2 between two array<long> columns — the same
     * one-expression exactness contract as the kmeans module's l2sq.
     * private[graft] so AnnCurve and the specs grade with the SAME
-    * expression instead of hand-copied spellings (r19 review). Since
-    * r20 the native codegen kernel (bit-identical long arithmetic —
-    * see graftnative.LongL2Sq): the interpreted HOF sat on every
-    * N x C assignment product and dominated stage build. */
+    * expression instead of hand-copied spellings (r19 review). The
+    * native codegen kernel graftnative.LongL2Sq (bit-identical long
+    * arithmetic); cell assignment and PQ encoding use its argmin twin,
+    * graftnative.LongNearest ([[cellsOf]], [[pqEncode]]). */
   private[graft] def l2sq(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.longL2Sq(a, b)
 
@@ -353,132 +353,70 @@ object Sketches {
         quantized(embBase(s, d), "vec_id", "embedding"))
     else quantized(embStore(s, d, name), "vec_id", "embedding")
 
-  /** Codebook seeds: the `c` vectors with the smallest
-    * (md5(vec_id), vec_id) — the cross-engine-byte-identical hash
-    * order the kmeans family pins — as (cid, cv), cid = seed rank. */
-  private def hashSeeds(base: DataFrame, c: Int): DataFrame = {
-    requireCidFits(c) // every codebook is seeded here — the one chokepoint
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("h"), col("vec_id"))
-    base.select(col("vec_id"), col("xq"),
-        md5(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(c)
-      .select((row_number().over(w) - 1).cast("long").as("cid"),
-        col("xq").as("cv"))
-  }
-
-  /** Packed argmin key — (d << 20) | cid as ONE long — so the
-    * nearest-centroid aggregate is a PRIMITIVE min: hash-aggregable
-    * with map-side partials inside whole-stage codegen.
-    * min(struct(d, cid)) fell back to SortAggregate (struct buffers
-    * are not hash-mutable), and at the x1000 tier the partial SORT of
-    * the N x C product spilled ~100 GB and filled the disk (the r19
-    * recall campaign's failure). Bit budget: [[quantized]] normalizes
-    * every vector into the 1e6-ball, so d = |a−b|² ≤ ~4.0e12 < 2^43,
-    * and 20 cid bits cover codebooks to a MILLION cells (corpora to
-    * ~10^12 vectors at C = √N) — 63 bits total, and the packing
-    * preserves lexicographic (d, cid) order EXACTLY, which is the
-    * oracle's ORDER BY d, cid tie-break. */
-  private val ArgminCidBits = 20
-  private def argminPacked(d: Column, cid: Column): Column =
-    min(d * lit(1L << ArgminCidBits) + cid)
-  private def packedCid(p: Column): Column =
-    p.bitwiseAND(lit((1L << ArgminCidBits) - 1))
-
-  /** The documented cid bit budget as a LOUD train-time failure (r19
-    * advice): a codebook at or past 2^20 rows would silently corrupt
-    * the packed (d, cid) tie-break, so every codebook-sizing site
-    * refuses first. C = ceil(sqrt(N)) crosses this at N ~ 1.1e12
-    * vectors — raise ArgminCidBits (d fits 43 bits; 63 total) before
-    * any such corpus. */
-  private def requireCidFits(c: Long): Unit =
-    require(c < (1L << ArgminCidBits),
-      s"codebook size $c >= 2^$ArgminCidBits corrupts the packed argmin " +
-        "tie-break; raise ArgminCidBits")
-
-  /** Nearest-centroid assignment in the integer basis as an
-    * AGGREGATION — a hash aggregate over the N x C broadcast product,
-    * no per-vector sort, carrying ONLY (vec_id, cell): shuffling the
-    * 64-long array through every Lloyd round was ~20x the bytes for
-    * data the (tiny) base scan can re-supply with a narrow join. */
-  private def assignQ(src: DataFrame, cents: DataFrame): DataFrame =
-    src.crossJoin(broadcast(cents))
-      .groupBy("vec_id")
-      .agg(argminPacked(l2sq(col("xq"), col("cv")), col("cid")).as("_p"))
-      .select(col("vec_id"), packedCid(col("_p")).as("cell"))
-
   /** Re-project a (shifted) integer centroid onto the unit sphere —
-    * the SPHERICAL k-means M-step tail, in the same
-    * one-correctly-rounded-sqrt exactness discipline as [[quantized]].
-    * WHY this exists (measured, the r19 x1000 campaign): a plain MEAN
-    * centroid has norm < 1e6 that VARIES with cell tightness, and
-    * ranking cells by L2 against varying-norm centroids diverges from
-    * directional (cosine) ranking — on the clustered 2M-vector tier
-    * the probe-top-1 recall collapsed 0.965 → 0.130. With every
-    * centroid re-projected to the sphere, L2 ranking IS cosine
-    * ranking for centroids exactly as it is for vectors. A zero mean
-    * (perfect cancellation) keeps its unnormalized value rather than
-    * dividing by zero — spelled identically in the oracle. */
-  private def sphered(cv: Column): Column = {
-    val S = lit(Clustering.ShiftQ)
-    val n2 = aggregate(transform(cv, x => (x - S) * (x - S)),
-      lit(0L), (a, v) => a + v)
-    when(n2 === 0L, cv).otherwise(transform(cv, x =>
-      (((x - S) * lit(1000000L)).cast("double") /
-        sqrt(n2.cast("double"))).cast("long") + S))
+    * the SPHERICAL k-means step after each IVF mean, on the driver, in
+    * the same one-correctly-rounded-sqrt exactness discipline as
+    * [[quantized]] (n2 is an exact long; one IEEE sqrt and one divide
+    * per coordinate, identical in the JVM and DuckDB). WHY this exists
+    * (measured, the r19 x1000 campaign): a plain MEAN centroid has
+    * norm < 1e6 that VARIES with cell tightness, and ranking cells by
+    * L2 against varying-norm centroids diverges from directional
+    * (cosine) ranking — on the clustered 2M-vector tier the
+    * probe-top-1 recall collapsed 0.965 → 0.130. With every centroid
+    * re-projected to the sphere, L2 ranking IS cosine ranking for
+    * centroids exactly as it is for vectors. A zero mean (perfect
+    * cancellation) keeps its unnormalized value rather than dividing
+    * by zero — spelled identically in the oracle. */
+  private def sphered(cv: Array[Long]): Array[Long] = {
+    val S = Clustering.ShiftQ
+    var n2 = 0L
+    cv.foreach(x => n2 += (x - S) * (x - S))
+    if (n2 == 0L) cv
+    else {
+      val norm = math.sqrt(n2.toDouble)
+      cv.map(x => (((x - S) * 1000000L).toDouble / norm).toLong + S)
+    }
   }
 
-  /** One spherical-Lloyd M-step in the integer basis: per-cell
-    * truncating integer mean (Σxi div n — operands non-negative after
-    * the +4 shift, so Scala `div` == DuckDB `//`), then re-projected
-    * onto the sphere ([[sphered]]). Cells that lost every member CARRY
-    * FORWARD their previous centroid (kmeansCtes' coalesce), so the
-    * codebook keeps exactly its seeded row count and the oracle's cell
-    * set matches by construction; the carried value re-projects too
-    * (not a no-op at integer precision — the oracle applies the
-    * identical step).
-    *
-    * Spelled as ONE hash aggregate over unexploded vectors (r22, guide
-    * §2.3): the old posexplode → groupBy(cid, pos) → regroup shape
-    * exploded every member 64× into the exchange and paid a second
-    * (sort-buffered collect_list) aggregation. `graft_long_vec_sum`
-    * sums positions element-wise in the aggregation buffer —
-    * bit-identical longs under any partitioning — and every member
-    * carries every position, so the per-position count equals the
-    * group count and the truncating div reproduces the old
-    * per-(cid, pos) `sum div count` exactly. */
-  private def lloydStep(base: DataFrame, cents: DataFrame): DataFrame = {
-    val m = assignQ(base, cents).join(base, "vec_id")
-      .groupBy(col("cell").as("cid"))
-      .agg(graft.functions.VectorFunctions.longVecSum(col("xq")).as("sv"),
-        count(lit(1)).as("n"))
-      .select(col("cid"), expr("transform(sv, x -> x div n)").as("mv"))
-    cents.join(m, Seq("cid"), "left")
-      .select(col("cid"), sphered(coalesce(col("mv"), col("cv"))).as("cv"))
+  /** The IVF codebook (cid, cv) of a quantized (vec_id, xq) corpus —
+    * factored out of the stage closure so [[retrainAnnIndex]] can run
+    * it over a drifted live store. Codebook size C = max(2, ⌈√N⌉) —
+    * one count() sizes it (the same two-pass shape AQE uses: a cheap
+    * stats pass, then the plan) — seeded by the C md5-first vectors,
+    * then THREE spherical Lloyd rounds in [[Clustering.trainSweep]]:
+    * one group over the whole `xq`, each round's truncating integer
+    * mean re-projected onto the sphere ([[sphered]]). Cells that lose
+    * every member CARRY FORWARD their previous centroid (re-projected
+    * too — not a no-op at integer precision; the oracle applies the
+    * identical step), so the codebook keeps its seeded row count and
+    * the oracle's cell set matches by construction. The result is a
+    * maintained table at 100 TB, exactly like the gram postings;
+    * long-sum bound: xi ≤ 5e6, so Σxi per cell stays exact to ~1.8e12
+    * members — documented, far past any tier. */
+  private def trainIvf(q: DataFrame): DataFrame = {
+    val c = math.ceil(math.sqrt(q.count().toDouble)).toInt.max(2)
+    val g = Clustering.SweepGroup(0, col("xq"),
+      Clustering.seedVectors(q, c), sphered)
+    val cb = Clustering.trainSweep(Seq(g), 3)(
+      Clustering.nearestTags(q, Seq(g)))._1(0).last
+    import q.sparkSession.implicits._
+    cb.toSeq.zipWithIndex.map { case (cv, j) => (j.toLong, cv.toSeq) }
+      .toDF("cid", "cv").coalesce(1) // a few-KB table: one file
   }
 
-  /** The IVF codebook training loop over an ARBITRARY
-    * (vec_id, embedding, …) corpus — factored out of the stage closure
-    * so [[retrainAnnIndex]] can run it over a drifted live store.
-    * Codebook size C = ceil(sqrt(N)) — one count() sizes it (the same
-    * two-pass shape AQE uses: a cheap stats pass, then the plan) —
-    * then THREE integer Lloyd rounds from the md5-order seeds. The
-    * result is a maintained table at 100 TB, exactly like the gram
-    * postings; long-sum bound: xi ≤ 5e6, so Σxi per (cell, pos) stays
-    * exact to ~1.8e12 members per cell — documented, far past any
-    * tier. */
-  private def trainIvf(vecs: DataFrame): DataFrame = {
-    val base = quantized(vecs, "vec_id", "embedding")
-    val c = math.ceil(math.sqrt(base.count().toDouble)).toInt.max(2)
-    // Each round is eagerly localCheckpoint'ed: round r's assignment
-    // broadcasts round r-1's centroids, and without truncation that
-    // broadcast subquery re-executes every earlier round's plan (the
-    // 3-round lineage ran ~2x the jobs it needed). The checkpointed
-    // frame is a few-KB centroid table; losing it just fails the
-    // one-time build, which the stage cache would simply re-run.
-    (1 to 3).foldLeft(hashSeeds(base, c): DataFrame)((cc, _) =>
-      lloydStep(base, cc).localCheckpoint(true))
-  }
+  /** An IVF codebook frame (cid, cv) as the centroid array, in cid
+    * order, that the encoders' LongNearest kernel takes. */
+  private def codebookRows(cb: DataFrame): Array[Array[Long]] =
+    Clustering.centroidRows(cb.select(col("cid"), col("cv").as("cq")))
+
+  /** Nearest-cell assignment (vec_id, cell) of a quantized (vec_id, xq)
+    * frame against a collected codebook: one narrow projection with
+    * the LongNearest kernel (integer L2, ties to the lower cid), no
+    * join, no shuffle. A row without a usable vector (NULL, empty or
+    * ragged) gets a NULL cell. */
+  private def cellsOf(q: DataFrame, cb: Array[Array[Long]]): DataFrame =
+    q.select(col("vec_id"), Clustering.nearest(cb).as("n"))
+      .select(col("vec_id"), Clustering.cidOrNull(col("n")).as("cell"))
 
   def ivfCodebook(s: SparkSession, d: String, name: String = ""): DataFrame =
     // A NAMED instance's codebook starts as a copy of the shared
@@ -486,12 +424,12 @@ object Sketches {
     // depends on that) and is replaced wholesale by
     // [[retrainAnnIndex]] when drift warrants it.
     if (name.isEmpty)
-      graft.StageCache.memoized(s, d, "ivfcb")(trainIvf(embBase(s, d)))
+      graft.StageCache.memoized(s, d, "ivfcb")(trainIvf(storeQ(s, d, "")))
     else
       graft.StageCache.memoized(s, d, s"ivfcb@$name")(ivfCodebook(s, d))
 
   /** Cell assignment of the indexed corpus (vec_id, cell) — also
-    * stage-cached: the N x C broadcast assignment is per-corpus work,
+    * stage-cached: the N x C nearest-cell pass is per-corpus work,
     * not per-query work (at 100 TB the cell id is a column of the
     * index table, maintained on ingest). */
   def ivfAssignments(s: SparkSession, d: String, name: String = ""): DataFrame =
@@ -504,7 +442,7 @@ object Sketches {
     liveView(s, d, VecTombs, name,
       graft.StageCache.memoized(s, d,
         if (name.isEmpty) "ivfassign" else s"ivfassign@$name")(
-        assignQ(storeQ(s, d, ""), ivfCodebook(s, d, name))),
+        cellsOf(storeQ(s, d, ""), codebookRows(ivfCodebook(s, d, name)))),
       "vec_id")
 
   /** MULTI-PROBE IVF search for an arbitrary query frame `(qid, qv)`:
@@ -567,10 +505,12 @@ object Sketches {
     ()
   }
 
-  /** Force-build the PQ artifacts (per-subspace codebook, then the
-    * compressed code table). Independent of the IVF chain — Bench runs
-    * the two on separate threads. */
+  /** Force-build the PQ artifacts: the quantized store `pqSearch`
+    * reranks against, the per-subspace codebook trained over it, then
+    * the compressed code table. Independent of the IVF chain — Bench
+    * runs the two on separate threads. */
   def warmPqStage(s: SparkSession, d: String): Unit = {
+    storeQ(s, d, "")
     pqCodes(s, d)
     ()
   }
@@ -586,75 +526,68 @@ object Sketches {
   val PqM = 8
   val PqK = 32
 
-  /** Quantized subvector rows (vec_id, m, sq): the integer-basis xq
-    * split into PqM contiguous blocks. The corpus is unit-norm by
-    * contract ([[quantized]]), so per-subspace L2 on these blocks sums
-    * to the full-vector squared distance — and ADC (the sum of
-    * per-subspace distances to the assigned codewords) approximates
-    * 2·(1 − cos)·1e12 additively, exactly the classic L2-ADC form. */
+  /** Subspace `m` of the integer-basis `xq` column: its m-th of
+    * [[PqM]] contiguous blocks (size(xq) div PqM coordinates each). The
+    * corpus is unit-norm by contract ([[quantized]]), so per-subspace
+    * L2 on these blocks sums to the full-vector squared distance — and
+    * ADC (the sum of per-subspace distances to the assigned codewords)
+    * approximates 2·(1 − cos)·1e12 additively, exactly the classic
+    * L2-ADC form. */
+  private def pqSlice(m: Int): Column =
+    expr(s"slice(xq, $m * (size(xq) div $PqM) + 1, size(xq) div $PqM)")
+
+  /** Quantized subvector rows (vec_id, m, sq) of a (vec_id, xq) frame:
+    * one row per [[pqSlice]]. */
   private def pqSubQ(q: DataFrame): DataFrame =
-    q.select(col("vec_id"), posexplode(expr(
-      s"""transform(sequence(0, $PqM - 1),
-         |  m -> slice(xq, m * (size(xq) div $PqM) + 1,
-         |             size(xq) div $PqM))""".stripMargin))
-      .as(Seq("m", "sq")))
+    q.select(col("vec_id"), posexplode(array(
+      (0 until PqM).map(pqSlice): _*)).as(Seq("m", "sq")))
 
-  /** Per-subspace assignment: integer-L2 argmin over that subspace's
-    * centroids, ties to the smallest cid — the same packed-long
-    * hash-aggregable argmin as [[assignQ]] (per-subspace d is bounded
-    * by the full-vector d, so the same bit budget holds). `cb` must
-    * be (m, cid, cv) and is broadcast — K*M rows. */
-  private def pqAssignQ(sv: DataFrame, cb: DataFrame): DataFrame =
-    sv.join(broadcast(cb), "m")
-      .groupBy("vec_id", "m")
-      .agg(argminPacked(l2sq(col("sq"), col("cv")), col("cid")).as("_p"))
-      .select(col("vec_id"), col("m"), packedCid(col("_p")).as("cid"))
-
-  /** The PQ training loop over an arbitrary (vec_id, embedding, …)
-    * corpus — factored like [[trainIvf]] for [[retrainAnnIndex]].
-    * Same integer discipline as the IVF loop: md5-order seeds (the
-    * same PqK vectors seed every subspace), three Lloyd rounds of
+  /** The PQ codebook (m, cid, cv) of a quantized (vec_id, xq) corpus —
+    * factored like [[trainIvf]] for [[retrainAnnIndex]]. Same integer
+    * discipline and the same loop ([[Clustering.trainSweep]]): [[PqM]]
+    * groups, group m over [[pqSlice]] m, all seeded by the same
+    * [[PqK]] md5-first vectors' m-th blocks, three Lloyd rounds of
     * integer-L2 argmin + truncating integer mean with carry-forward,
-    * so the (m, cid, cv) codebook is DuckDB-replayable bit-exact. All
-    * M subspaces train in ONE plan per round — the per-m grouping
-    * rides the same shuffles. */
-  private def trainPq(vecs: DataFrame): DataFrame = {
-    val q = quantized(vecs, "vec_id", "embedding")
-    val sv = pqSubQ(q)
-    val wSeed = org.apache.spark.sql.expressions.Window
-      .orderBy(col("h"), col("vec_id"))
-    val seedIds = q
-      .select(col("vec_id"), md5(col("vec_id").cast("string")).as("h"))
-      .orderBy(col("h"), col("vec_id")).limit(PqK)
-      .select(col("vec_id"),
-        (row_number().over(wSeed) - 1).cast("long").as("cid"))
-    val seeds = sv.join(broadcast(seedIds), "vec_id")
-      .select(col("m"), col("cid"), col("sq").as("cv"))
-    def lloyd(cb: DataFrame): DataFrame = {
-      // One hash aggregate over unexploded subvectors (LongVecSum,
-      // r22) — same fuse and same bit-for-bit argument as [[lloydStep]]
-      // (per-position count == group count within a (m, cid) cell).
-      val mv = pqAssignQ(sv, cb).join(sv, Seq("vec_id", "m"))
-        .groupBy("m", "cid")
-        .agg(graft.functions.VectorFunctions.longVecSum(col("sq"))
-          .as("svs"), count(lit(1)).as("n"))
-        .select(col("m"), col("cid"),
-          expr("transform(svs, x -> x div n)").as("mv"))
-      cb.join(mv, Seq("m", "cid"), "left")
-        .select(col("m"), col("cid"), coalesce(col("mv"), col("cv")).as("cv"))
-    }
-    // Same per-round lineage truncation as [[trainIvf]]: the M x K
-    // codebook is tiny, and an un-truncated round-3 plan re-runs the
-    // round-1/2 subplans inside its broadcast subquery.
-    (1 to 3).foldLeft(seeds: DataFrame)((cb, _) =>
-      lloyd(cb).localCheckpoint(true))
+    * so the codebook is DuckDB-replayable bit-exact. All M subspaces
+    * train in ONE E-step projection and ONE aggregate per round. */
+  private def trainPq(q: DataFrame): DataFrame = {
+    val seeds = Clustering.seedVectors(q, PqK)
+    val sub = seeds.headOption.fold(0)(_.length) / PqM
+    val groups = (0 until PqM).map(m => Clustering.SweepGroup(m,
+      pqSlice(m), seeds.map(_.slice(m * sub, m * sub + sub))))
+    val hists = Clustering.trainSweep(groups, 3)(
+      Clustering.nearestTags(q, groups))._1
+    import q.sparkSession.implicits._
+    (0 until PqM).flatMap { m =>
+      hists(m).last.toSeq.zipWithIndex.map { case (cv, j) =>
+        (m, j.toLong, cv.toSeq) }
+    }.toDF("m", "cid", "cv").coalesce(1) // a few-KB table: one file
   }
+
+  /** A PQ codebook frame as one centroid array per subspace, in cid
+    * order. */
+  private def pqBooks(cb: DataFrame): Map[Int, Array[Array[Long]]] =
+    cb.select("m", "cid", "cv").collect().groupBy(_.getInt(0)).map {
+      case (m, rows) =>
+        m -> rows.sortBy(_.getLong(1)).map(_.getSeq[Long](2).toArray)
+    }
+
+  /** PQ encoding (vec_id, m, cid) of a quantized (vec_id, xq) frame:
+    * per subspace, the LongNearest argmin over that subspace's
+    * codewords (integer L2, ties to the smallest cid) — one narrow
+    * projection, [[PqM]] rows per vector. A row without a usable
+    * vector keeps NULL codes. */
+  private def pqEncode(q: DataFrame, books: Map[Int, Array[Array[Long]]]): DataFrame =
+    q.select(col("vec_id"), posexplode(array((0 until PqM).map(m =>
+        Clustering.nearest(books.getOrElse(m, Array.empty), pqSlice(m))): _*))
+      .as(Seq("m", "n")))
+      .select(col("vec_id"), col("m"), Clustering.cidOrNull(col("n")).as("cid"))
 
   def pqCodebook(s: SparkSession, d: String, name: String = ""): DataFrame =
     // Named instances copy the shared codebook until a retrain swaps
     // it — see [[ivfCodebook]].
     if (name.isEmpty)
-      graft.StageCache.memoized(s, d, "pqcb")(trainPq(embBase(s, d)))
+      graft.StageCache.memoized(s, d, "pqcb")(trainPq(storeQ(s, d, "")))
     else
       graft.StageCache.memoized(s, d, s"pqcb@$name")(pqCodebook(s, d))
 
@@ -667,7 +600,7 @@ object Sketches {
     liveView(s, d, VecTombs, name,
       graft.StageCache.memoized(s, d,
         if (name.isEmpty) "pqcodes" else s"pqcodes@$name")(
-        codesOf(s, d, embBase(s, d), name)),
+        pqEncode(storeQ(s, d, ""), pqBooks(pqCodebook(s, d, name)))),
       "vec_id")
 
   /** Close the ANN maintained-index loop (the embedding-side analogue
@@ -681,10 +614,10 @@ object Sketches {
     * bit-identical to a from-scratch rebuild over the grown corpus
     * (pinned in SketchesSpec), and centroid retraining remains a
     * deliberate offline rebuild, never an ingest side effect. O(batch)
-    * work: one centroid broadcast and one codebook broadcast over the
-    * batch only. At 100 TB this is the daily embedding ingest: append
-    * to the cell-clustered index partitions, searches see the new
-    * vectors immediately. */
+    * work: one narrow nearest-centroid projection per artifact over
+    * the batch only, each codebook riding in the kernel. At 100 TB
+    * this is the daily embedding ingest: append to the cell-clustered
+    * index partitions, searches see the new vectors immediately. */
   def upsertIntoAnnIndex(s: SparkSession, d: String, batch: DataFrame,
       name: String): Unit = {
     require(name.nonEmpty,
@@ -728,13 +661,13 @@ object Sketches {
     * corpus (the same role [[bandsOf]] plays for the MinHash index). */
   private[graft] def assignOf(s: SparkSession, d: String,
       vecs: DataFrame, name: String = ""): DataFrame =
-    assignQ(quantized(vecs, "vec_id", "embedding"),
-      ivfCodebook(s, d, name))
+    cellsOf(quantized(vecs, "vec_id", "embedding"),
+      codebookRows(ivfCodebook(s, d, name)))
 
   private[graft] def codesOf(s: SparkSession, d: String,
       vecs: DataFrame, name: String = ""): DataFrame =
-    pqAssignQ(pqSubQ(quantized(vecs, "vec_id", "embedding")),
-      pqCodebook(s, d, name))
+    pqEncode(quantized(vecs, "vec_id", "embedding"),
+      pqBooks(pqCodebook(s, d, name)))
 
   /** Flat-PQ ANN for an arbitrary query frame `(qid, qv)`: the query
     * builds its per-subspace distance table (Q×M×K dots against the
@@ -1330,8 +1263,9 @@ object Sketches {
     // Live-store snapshot: every artifact below derives from ONE frame,
     // not from stage reads that the swaps underneath would invalidate.
     val store = embStore(s, d, name).localCheckpoint(true)
-    val newIvf = trainIvf(store).coalesce(1).localCheckpoint(true)
-    val newPq = trainPq(store).coalesce(1).localCheckpoint(true)
+    val storeXq = quantized(store, "vec_id", "embedding").localCheckpoint(true)
+    val newIvf = trainIvf(storeXq).localCheckpoint(true)
+    val newPq = trainPq(storeXq).localCheckpoint(true)
     graft.StageCache.rewrite(s, d, s"ivfcb@$name")(
       ivfCodebook(s, d))(_ => newIvf)
     graft.StageCache.rewrite(s, d, s"pqcb@$name")(
@@ -1340,12 +1274,10 @@ object Sketches {
       _ => store.coalesce(targetFiles))
     graft.StageCache.rewrite(s, d, s"ivfassign@$name")(
       assignOf(s, d, embBase(s, d), name))(
-      _ => assignQ(quantized(store, "vec_id", "embedding"), newIvf)
-        .coalesce(targetFiles))
+      _ => cellsOf(storeXq, codebookRows(newIvf)).coalesce(targetFiles))
     graft.StageCache.rewrite(s, d, s"pqcodes@$name")(
       codesOf(s, d, embBase(s, d), name))(
-      _ => pqAssignQ(pqSubQ(quantized(store, "vec_id", "embedding")), newPq)
-        .coalesce(targetFiles))
+      _ => pqEncode(storeXq, pqBooks(newPq)).coalesce(targetFiles))
     graft.StageCache.rewrite(s, d, tombStage(VecTombs, name))(
       s.range(0).select(col("id")))(_.limit(0).coalesce(1))
     // Retraining is exactly the event the drift series must reflect:
@@ -1478,7 +1410,9 @@ object Sketches {
     // one double sqrt + divide per query vector at the end.
     def udot(a: Column, b: Column): Column =
       graft.functions.VectorFunctions.longShiftedDot(a, b, Clustering.ShiftQ)
-    val fidelity = pqAssignQ(qsv, cb)
+    val codes = pqEncode(qq.select(col("qid").as("vec_id"), col("xq")),
+      pqBooks(cb))
+    val fidelity = codes
       .join(qsv, Seq("vec_id", "m"))
       .join(broadcast(cb), Seq("m", "cid"))
       .groupBy("vec_id")
@@ -1487,7 +1421,7 @@ object Sketches {
         sum(udot(col("cv"), col("cv"))).as("nr"))
       .select((col("dq") / (sqrt(col("nx")) * sqrt(col("nr")))).as("rc"))
       .agg(avg("rc")).collect()(0).getDouble(0)
-    val divRow = pqAssignQ(qsv, cb)
+    val divRow = codes
       .groupBy("m", "cid").agg(count(lit(1)).as("cnt"))
       .groupBy("m")
       .agg((sum(col("cnt") * col("cnt")) /
@@ -1578,8 +1512,10 @@ object Sketches {
       |qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id % 97 = 0)"""
 
   /** The IVF training recurrence + final corpus cell assignment —
-    * [[trainIvf]] / [[assignQ]] unrolled. The realized cell count
-    * always equals the seeded greatest(2, ceil(sqrt(N))) because the
+    * [[trainIvf]] / [[cellsOf]] unrolled. Seeds rank only rows with a
+    * vector, as [[Clustering.seedVectors]] does; N counts every row on
+    * both sides. The realized cell count always equals the seeded
+    * greatest(2, ceil(sqrt(N))) (given that many vectors) because the
     * carry-forward M-step never drops a cid, on BOTH sides. */
   private def ivfCtes: String = {
     val rounds = (1 to 3).map { i =>
@@ -1612,7 +1548,7 @@ object Sketches {
       |ivsd AS MATERIALIZED (SELECT vec_id, cid FROM (
       |    SELECT vec_id, row_number() OVER (
       |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cid
-      |    FROM embeddings), cn WHERE cid < cn.c),
+      |    FROM embeddings WHERE len(embedding) > 0), cn WHERE cid < cn.c),
       |ivc0 AS MATERIALIZED (
       |  SELECT sd.cid, e.idx, e.xi AS c
       |  FROM ivsd sd JOIN eq e USING (vec_id)),
@@ -1642,8 +1578,8 @@ object Sketches {
       "\n  JOIN ivasg a ON a.cell = p.cid AND a.vec_id <> p.qid)"
 
   /** The PQ training recurrence + the corpus code table — [[trainPq]] /
-    * [[pqAssignQ]] unrolled; all M subspaces ride one CTE chain via the
-    * m grouping column, exactly like the Spark plan. */
+    * [[pqEncode]] unrolled; all M subspaces ride one CTE chain via the
+    * m grouping column, as they ride one sweep in the Spark plan. */
   private def pqCtes: String = {
     val rounds = (1 to 3).map { i =>
       s"""pqd$i AS (SELECT q.vec_id, q.m, c.cid,
@@ -1670,7 +1606,7 @@ object Sketches {
       |pqsd AS MATERIALIZED (SELECT vec_id, cid FROM (
       |    SELECT vec_id, row_number() OVER (
       |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS cid
-      |    FROM embeddings) WHERE cid < $PqK),
+      |    FROM embeddings WHERE len(embedding) > 0) WHERE cid < $PqK),
       |pqc0 AS MATERIALIZED (
       |  SELECT q.m, sd.cid, q.j, q.xi AS c
       |  FROM pqsd sd JOIN sq q USING (vec_id)),
@@ -2234,7 +2170,7 @@ object Sketches {
       s"""WITH $annEqCte,
         |$pqCtes,
         |${pqAdcCtes(candRestrict = false, "greatest(32, nt.n // 6)")},
-        |${annRerankSql("pool")}""", "ivf", "pq") { (s, d) =>
+        |${annRerankSql("pool")}""", "pq") { (s, d) =>
       pqSearch(s, d, defaultQueries(s, d),
         rerank = n => math.max(32, (n / 6).toInt))
     },

@@ -334,12 +334,11 @@ object StreamDemos {
     * frozen-artifact contract as [[ingestVecBatches]]' codebooks); the
     * scoring itself is the LITERAL E-step, a stateless narrow
     * projection — no watermark, no state store, no shuffle, so the
-    * stream ≡ batch equality is structural (pinned in StreamingSpec).
-    * At K past the literal threshold a production stream would apply
-    * the broadcast-join E-step inside foreachBatch per micro-batch
-    * (the per-vector argmin aggregate is batch-local, not
-    * cross-batch state); the registry-default K rides the stateless
-    * path. */
+    * stream ≡ batch equality is structural (pinned in StreamingSpec)
+    * at every exact K (≤ RoutedMinK). Past it batch assignment routes,
+    * and [[scoredVecBatches]] applies that E-step inside foreachBatch
+    * per micro-batch (the routed argmin is batch-local, not
+    * cross-batch state). */
   /** Quantized, domain-guarded streaming source over a vec-batch
     * directory — the shared front half of both scoring twins.
     *
@@ -373,13 +372,13 @@ object StreamDemos {
       inDir: String): DataFrame = {
     import graft.ops.Clustering
     val k = Clustering.kOf(spark)
-    // the stateless path IS the literal E-step; past the literal
-    // threshold the least()-over-K-structs tree is exactly the blowup
-    // LiteralMaxK exists to prevent — fail loudly with the prescribed
-    // alternative instead of stalling codegen
-    require(k <= Clustering.LiteralMaxK,
-      s"scoredVecStream is the stateless literal-E-step path (k <= " +
-        s"${Clustering.LiteralMaxK}); at k=$k use scoredVecBatches " +
+    // the stateless path IS the exact literal E-step, which batch
+    // assign serves through RoutedMinK; past it batch assignment
+    // routes, so a literal stream would no longer equal batch — fail
+    // loudly with the prescribed alternative instead
+    require(k <= Clustering.RoutedMinK,
+      s"scoredVecStream is the stateless exact literal-E-step path (k <= " +
+        s"${Clustering.RoutedMinK}); at k=$k use scoredVecBatches " +
         "(foreachBatch through the batch assign dispatch) instead")
     val cents = Clustering.centroidHistory(spark, corpusDir, k).last
     Clustering.assignLiteral(quantizedVecSource(spark, inDir), cents)
@@ -387,11 +386,10 @@ object StreamDemos {
   }
 
   /** Large-K twin of [[scoredVecStream]] (the path its require
-    * prescribes): past the literal threshold the stateless projection
-    * would be the least()-over-K-structs blowup, so each micro-batch
-    * scores through the SAME [[graft.ops.Clustering.assign]] dispatch
-    * production batch scoring uses — exact join through RoutedMinK,
-    * the two-level ROUTED path beyond (the K∝n regime) — inside
+    * prescribes): past RoutedMinK batch assignment routes, so each
+    * micro-batch scores through the SAME [[graft.ops.Clustering.assign]]
+    * dispatch production batch scoring uses — exact literal through
+    * RoutedMinK, the two-level ROUTED path beyond (the K∝n regime) — inside
     * foreachBatch: the per-vector argmin is batch-local, never
     * cross-batch state, so no watermark and no state store. Frozen
     * corpus-trained centroids (memoized/persistable like every batch

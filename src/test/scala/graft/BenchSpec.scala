@@ -24,6 +24,15 @@ class BenchSpec extends AnyFunSuite {
       .toMap
   /** The chains the frozen fixture predates. */
   private lazy val untabled = Registry.chains.map(_._1).toSet -- tabled.keySet
+  /** `pq`'s `#chain` line predates the chain building `annq`, the
+    * quantized store its reader reranks against: warmed alone, with its
+    * one reader run after it, in a child JVM at sf0.001. */
+  private lazy val livePq: Map[String, Set[String]] =
+    StageDirsChild.child("reads", "q_sim_ann_pq").map(_.split("\t", -1))
+      .map { l =>
+        l(0) -> l(1).split(",").filter(_.nonEmpty)
+          .map(_.replaceAll("[0-9]+$", "")).toSet
+      }.toMap
   /** Those chains warmed, then their readers run, in a child JVM at
     * sf0.001: each step's new dirs by name. */
   private lazy val live: Map[String, Set[String]] = StageDirsChild.child(
@@ -63,7 +72,8 @@ class BenchSpec extends AnyFunSuite {
     val adhocReads =
       adhoc.map(_.head).filter(Registry.byName(_).reads.nonEmpty)
     assert(adhocReads.isEmpty, adhocReads.mkString(", "))
-    val dirsOf = tabled ++ untabled.map(c => c -> live(c))
+    val dirsOf = tabled ++ untabled.map(c => c -> live(c)) +
+      ("pq" -> livePq("pq"))
     val unread = index.flatMap { l =>
       val have = Registry.byName(l.head).reads.flatMap(dirsOf).toSet
       l(4).split(",").filterNot(have).map(l.head + ": " + _)
@@ -79,6 +89,12 @@ class BenchSpec extends AnyFunSuite {
       Set("q_scan_csv", "q_sim_lsh_points", "q_sketch_cms"))
     readers.foreach(q => assert(live(q).isEmpty, s"$q built ${live(q)}"))
     untabled.foreach(c => assert(live(c).nonEmpty, s"chain $c built nothing"))
+  }
+
+  test("the pq chain builds the quantized store its reader reranks against") {
+    assert(Registry.byName("q_sim_ann_pq").reads === Seq("pq"))
+    assert(livePq("pq") === Set("graft_annq", "graft_pqcb", "graft_pqcodes"))
+    assert(livePq("q_sim_ann_pq").isEmpty, livePq.toString)
   }
 
   test("an allowlist warms exactly the chains its queries read") {
@@ -156,6 +172,34 @@ class BenchSpec extends AnyFunSuite {
       sc.removeSparkListener(labels)
       sc.removeSparkListener(shapes)
     }
+  }
+
+  test("the ivf and pq warms train in the shared Lloyd loop: job counts pinned") {
+    // Each warm in its own cold session, under its own label; a
+    // sentinel job marks when every warm job's start has been seen.
+    val spark = TestSpark.spark
+    val sc = spark.sparkContext
+    val shapes = new Bench.ShapeListener
+    sc.addSparkListener(shapes)
+    def labelled(label: String)(body: => Unit): Unit = {
+      sc.setLocalProperty(Bench.LabelKey, label)
+      try body finally sc.setLocalProperty(Bench.LabelKey, null)
+    }
+    try {
+      labelled("ivf")(ops.Sketches.warmIvfStage(spark.newSession(), TestSpark.sf))
+      labelled("pq")(ops.Sketches.warmPqStage(spark.newSession(), TestSpark.sf))
+      labelled("sentinel")(spark.range(0, 10, 1, 1).rdd.count())
+      eventually(timeout(30.seconds)) {
+        assert(shapes("sentinel").jobs == 1)
+      }
+      // Shape pin: per Lloyd round one nearest-centroid projection and
+      // one aggregate, and one projection to encode the corpus (18 and
+      // 17 jobs measured; the packed-argmin cross joins ran 33 and 30).
+      // Job counts can differ by a job or two between runs, hence the
+      // slack.
+      assert(shapes("ivf").jobs <= 24, s"the ivf warm ran ${shapes("ivf")}")
+      assert(shapes("pq").jobs <= 22, s"the pq warm ran ${shapes("pq")}")
+    } finally sc.removeSparkListener(shapes)
   }
 
   private lazy val mainSources = {

@@ -92,38 +92,20 @@ class ClusteringSpec extends AnyFunSuite {
     }
   }
 
-  test("join E-step assignment is bit-identical to the literal path") {
+  test("the literal E-step keeps fully-duplicate input rows") {
+    // a double-ingested vector must weigh twice (as in the oracle's e
+    // CTE): each copy keeps its own row and gets its original's answer
     val b = ops.Clustering.base(spark, sf)
+    val extra = b.orderBy("vec_id").limit(25)
     val cents = ops.Clustering.trainHistory(b, 8, ops.Clustering.Iters).last
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cid", "dist2").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(rows(ops.Clustering.assignJoin(b, cents)) ===
-      rows(ops.Clustering.assignLiteral(b, cents)))
-  }
-
-  test("join E-step keeps fully-duplicate input rows, like the literal path") {
-    // a double-ingested vector must weigh twice in both paths (and in
-    // the oracle's e CTE) — the argmin group-by must not collapse it
-    val b = ops.Clustering.base(spark, sf)
-    val dup = b.unionAll(b.limit(25))
-    val cents = ops.Clustering.trainHistory(b, 8, ops.Clustering.Iters).last
-    val nLit = ops.Clustering.assignLiteral(dup, cents).count()
-    val nJoin = ops.Clustering.assignJoin(dup, cents).count()
-    assert(nLit === b.count() + 25)
-    assert(nJoin === nLit, "assignJoin collapsed duplicate rows")
-  }
-
-  test("training through the join E-step reproduces the literal path bit-exact") {
-    val b = ops.Clustering.base(spark, sf)
-    val litC = ops.Clustering.trainHistory(b, 8, ops.Clustering.Iters).last
-    val jn = ops.Clustering.trainHistory(b, litC.length,
-      ops.Clustering.Iters, ops.Clustering.assignJoin).last
-    assert(jn.length === litC.length)
-    jn.indices.foreach { j =>
-      assert(java.util.Arrays.equals(jn(j), litC(j)),
-        s"centroid $j differs between E-step paths")
-    }
+    val once = rows(ops.Clustering.assignLiteral(b, cents))
+    val twice = rows(ops.Clustering.assignLiteral(b.unionAll(extra), cents))
+    assert(twice.length.toLong === b.count() + 25)
+    val ids = extra.select("vec_id").collect().map(_.getLong(0)).toSet
+    assert(twice === (once ++ once.filter(r => ids(r._1))).sorted)
   }
 
   test("public semanticDedup at a non-default k partitions the corpus") {
@@ -138,8 +120,8 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   // ---- the two-level routed E-step (r15: the K∝n scale path) ----
-  // Exact-path-trained centroids at a K past the literal threshold, so
-  // the routed hierarchy is exercised for real (r = ⌈√80⌉ = 9 coarse).
+  // Exact-path-trained centroids at a K where routing engages, so the
+  // routed hierarchy is exercised for real (r = ⌈√80⌉ = 9 coarse).
   private lazy val routedFixture = {
     val b = ops.Clustering.base(spark, sf)
     (b, ops.Clustering.trainHistory(b, 80, 2).last)
@@ -177,7 +159,7 @@ class ClusteringSpec extends AnyFunSuite {
     def byId(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cid", "dist2").collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val flat = byId(ops.Clustering.assignJoin(b, cents))
+    val flat = byId(ops.Clustering.assignLiteral(b, cents))
     val routed = byId(ops.Clustering.assignRouted(b, cents))
     assert(routed.keySet === flat.keySet)
     routed.foreach { case (id, (cid, d2)) =>
@@ -389,13 +371,13 @@ class ClusteringSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cid", "dist2").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    // exact join path: bit-identical to the literal path on the SAME frame
+    // exact literal path: the map column rides along, values unchanged
     val cents8 = ops.Clustering.trainHistory(b, 8, ops.Clustering.Iters).last
-    val j = ops.Clustering.assignJoin(withMap, cents8)
+    val j = ops.Clustering.assignLiteral(withMap, cents8)
     assert(j.columns.toSeq ===
       (withMap.columns.toSeq ++ Seq("cid", "dist2")),
-      "assignJoin changed the column contract")
-    assert(rows(j) === rows(ops.Clustering.assignLiteral(withMap, cents8)))
+      "assignLiteral changed the column contract")
+    assert(rows(j) === rows(ops.Clustering.assignLiteral(b, cents8)))
     // routed path at k=80 (literal probe branch + grouped argmin)
     val r = ops.Clustering.assignRouted(withMap, cents80)
     assert(rows(r) === rows(ops.Clustering.assignRouted(b, cents80)),
@@ -404,9 +386,9 @@ class ClusteringSpec extends AnyFunSuite {
     val m = r.filter(col("vec_id") === b.select(min("vec_id")).head().getLong(0))
       .select(col("meta")("id"), col("vec_id").cast("string")).head()
     assert(m.getString(0) === m.getString(1), "map payload corrupted")
-    // large-r probe branch (r > LiteralMaxK forces the topKByScore
-    // aggregate): 65 coarse entries, 3 probes per vector
-    val coarse65 = cents80.take(ops.Clustering.LiteralMaxK + 1)
+    // large-r probe branch (r > LiteralProbeMaxR forces the
+    // topKByScore aggregate): 65 coarse entries, 3 probes per vector
+    val coarse65 = cents80.take(ops.Clustering.LiteralProbeMaxR + 1)
     val keyed = withMap.withColumn("_rid",
       monotonically_increasing_id())
     val probed = ops.Clustering.routeProbe(keyed, coarse65, 3)
@@ -520,7 +502,7 @@ class ClusteringSpec extends AnyFunSuite {
     val b = ops.Clustering.base(spark, sf)
     val it = ops.Clustering.Iters
     val ks = Seq(2, 4, 8, 16)
-    val joint = ops.Clustering.trainSweep(b, ks, it)
+    val joint = ops.Clustering.trainKs(b, ks, it)
     assert(joint.keySet === ks.toSet)
     ks.foreach { k =>
       assert(hists(joint(k)) ===
@@ -549,7 +531,7 @@ class ClusteringSpec extends AnyFunSuite {
       .isInCollection(order.take(3).toSeq ++ others.slice(5, 30))))
     val it = ops.Clustering.Iters
     val ks = Seq(2, 4, 8, 16)
-    val joint = ops.Clustering.trainSweep(frame, ks, it)
+    val joint = ops.Clustering.trainKs(frame, ks, it)
     ks.foreach { k =>
       assert(hists(joint(k)) ===
         hists(ops.Clustering.trainHistory(frame, k, it)), s"K=$k")
@@ -561,18 +543,20 @@ class ClusteringSpec extends AnyFunSuite {
     assert(joint(2).forall(_(1).sameElements(seed(1))))
   }
 
-  test("the kmeans sweep trains K past LiteralMaxK on its own") {
+  test("the kmeans sweep trains every exact K jointly, routed K on its own") {
+    // K = 80 is past the old 64-centroid literal bound and still exact:
+    // it trains in the same sweep as K = 2, bit-identical to training
+    // it alone. Only a routed K (past RoutedMinK) stays out of the sweep.
     val b = ops.Clustering.base(spark, sf)
-    val big = ops.Clustering.LiteralMaxK + 1
     intercept[IllegalArgumentException] {
-      ops.Clustering.trainSweep(b, Seq(2, big), 1)
+      ops.Clustering.trainKs(b, Seq(2, ops.Clustering.RoutedMinK + 1), 1)
     }
     val s = spark.newSession()
     val c0 = ops.Clustering.trainCounter.get()
-    ops.Clustering.centroidHistories(s, sf, Seq(2, big))
+    ops.Clustering.centroidHistories(s, sf, Seq(2, 80))
     assert(ops.Clustering.trainCounter.get() === c0 + 2)
-    assert(hists(ops.Clustering.centroidHistory(s, sf, big)) ===
-      hists(ops.Clustering.trainHistory(b, big, ops.Clustering.Iters)))
+    assert(hists(ops.Clustering.centroidHistory(s, sf, 80)) ===
+      hists(ops.Clustering.trainHistory(b, 80, ops.Clustering.Iters)))
   }
 
   test("a cold kmeans warm trains once per sweep K and writes the K=8 frame stage from it") {

@@ -576,6 +576,57 @@ class NativeKernelsSpec extends AnyFunSuite {
     }
   }
 
+  test("LongNearest at K = 65 and 1024 and over a slice(xq, …) input == a driver argmin") {
+    // Past the old 64-centroid literal bound the kernel serves every
+    // exact K, and the ANN encoders feed it PQ subspace slices; the
+    // reference is the same contract spelled on the driver.
+    import spark.implicits._
+    val b = ops.Clustering.base(spark, sf).select("vec_id", "xq")
+    val vecs = b.orderBy("vec_id").limit(64).collect()
+      .map(_.getSeq[Long](1).toArray)
+    val dim = vecs.head.length
+    val sub = dim / 8
+    val odd = Seq((-1L, None), (-2L, Some(Seq.empty[Long])),
+      (-3L, Some(vecs.head.toSeq.take(dim - 1)))).toDF("vec_id", "xq")
+    val path = java.nio.file.Files.createTempDirectory("graft_nearest_k")
+      .resolve("rows").toString
+    b.unionByName(odd).write.parquet(path)
+    val input = spark.read.parquet(path).collect()
+      .map(r => r.getLong(0) -> Option(r.getSeq[Long](1))).toSeq
+    // k distinct centroids: the fixture vectors, shifted per copy of 64
+    def shifted(k: Int) =
+      Array.tabulate(k)(j => vecs(j % 64).map(_ + (j / 64) * 1000L))
+    // the kernel's contract: (NULL, 0) for a NULL, empty or ragged row,
+    // else the smallest integer L2, ties to the lower cid
+    def argmin(x: Option[Seq[Long]], cents: Array[Array[Long]]) = x match {
+      case Some(v) if v.nonEmpty && v.length == cents.head.length =>
+        val ds = cents.map(c => c.indices.map(i => (v(i) - c(i)) * (v(i) - c(i))).sum)
+        (Some(ds.min), ds.indexOf(ds.min).toLong)
+      case _ => (None, 0L)
+    }
+    val cases = Seq(
+      ("k=65", col("xq"), shifted(65), (x: Seq[Long]) => x),
+      ("k=1024", col("xq"), shifted(1024), (x: Seq[Long]) => x),
+      ("slice", expr(s"slice(xq, ${sub + 1}, $sub)"),
+        vecs.map(_.slice(sub, 2 * sub)), (x: Seq[Long]) => x.slice(sub, 2 * sub)))
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.codegen.factoryMode", mode)
+      s.conf.set("spark.sql.codegen.wholeStage", (mode == "CODEGEN_ONLY").toString)
+      val df = s.read.parquet(path)
+      cases.foreach { case (name, v, cents, f) =>
+        val got = df.select(col("vec_id"),
+            VectorFunctions.longNearest(v, cents).as("n"))
+          .select(col("vec_id"), col("n.d"), col("n.cid")).collect()
+          .map(r => (r.getLong(0), Option(r.getAs[java.lang.Long](1))
+            .map(_.longValue), r.getLong(2))).sorted.toSeq
+        val want = input.map { case (id, x) =>
+          val (d, c) = argmin(x.map(f), cents); (id, d, c) }.sorted
+        assert(got === want, s"$name, $mode")
+      }
+    }
+  }
+
   test("LongNearest generates the same code for every K; equality is by content") {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.graftnative.LongNearest

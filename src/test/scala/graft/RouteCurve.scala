@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * One JSON line per probe point on stdout. `trainMode` (join|routed,
   * default join) picks how the centroids are TRAINED before the curve
-  * measures assignment against them: join isolates pure routing error
-  * on exactly-trained centroids; routed measures the production
+  * measures assignment against them: join (the name kept for the
+  * committed curves; it now trains with the exact literal E-step)
+  * isolates pure routing error on exactly-trained centroids; routed
+  * measures the production
   * configuration, whose assignments are self-consistent with the
   * hierarchy and agree substantially more (measured — see SCALE.md).
   * Either way the agreement baseline is the exact flat argmin on the
@@ -59,9 +61,9 @@ object RouteCurve {
     val b = ops.Clustering.base(s, dir)
     val n = b.count()
     val cents = ops.Clustering.trainHistory(b, k, ops.Clustering.Iters,
-      if (trainMode == "join") ops.Clustering.assignJoin
+      if (trainMode == "join") ops.Clustering.assignLiteral
       else ops.Clustering.assignRouted).last
-    val flat = ops.Clustering.assignJoin(b, cents)
+    val flat = ops.Clustering.assignLiteral(b, cents)
       .select(col("vec_id"), col("cid").as("cf")).localCheckpoint(true)
     for (p <- probes) {
       val routed = ops.Clustering.assignRouted(b, cents, p)

@@ -125,9 +125,9 @@ object ScaleBench {
     // second moment above, whose designed law is n^1.5. Training runs
     // the ROUTED E-step (passed to trainHistory, r15) — the path the K
     // dispatch takes in this regime past RoutedMinK, and the fix for
-    // the r14-flagged n×K ≈ n²/125 training cost; at K ≤ LiteralMaxK
-    // (the ×1 tier) routed falls back to the literal path by
-    // construction. The K-row cell table is checkpointed so the three
+    // the r14-flagged n×K ≈ n²/125 training cost; at K ≤ 9, where
+    // the probes visit every branch, routed falls back to the literal
+    // path by construction. The K-row cell table is checkpointed so the three
     // counts don't re-run the E-step.
     // The kmeans/routed chain stops at the x100 decade (LOUD cap, not
     // silent: the artifact simply lacks the kmeans_*/estep_* keys and
@@ -169,7 +169,7 @@ object ScaleBench {
     // spends ~n^1.75 to hold assignment agreement scale-stable instead
     // of letting a fixed probe count decay with K (r15 verdict #1).
     // One flat assignment pass serves both agreement counts.
-    val flatA = ops.Clustering.assignJoin(kmBase, kmCents)
+    val flatA = ops.Clustering.assignLiteral(kmBase, kmCents)
       .select(col("vec_id"), col("cid").as("cf")).localCheckpoint(true)
     def agreeOf(routed: DataFrame): Long =
       flatA.join(routed.select(col("vec_id"), col("cid").as("cr")),

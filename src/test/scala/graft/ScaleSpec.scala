@@ -252,7 +252,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // must survive the extra approximation layer: planted cos ≥ 0.9
     // near-dups still co-cluster after routed TRAINING and routed
     // assignment. K here is n/8 (min 65 so the hierarchy actually
-    // engages, k > LiteralMaxK at both tiers) — finer than the n/125
+    // engages at both tiers) — finer than the n/125
     // production regime, i.e. HARDER for both exponent and recall.
     // The K dispatch would stay exact at these K, so training and
     // assignment take the routed path directly.

@@ -323,10 +323,43 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed === batch)
   }
 
+  test("CAP-STREAM-KMEANS: the stateless stream serves every exact K (k=80 == batch assign)") {
+    // K = 80 is past the old 64-centroid literal bound but exact: the
+    // stateless literal stream must take it and equal batch assignment
+    // row for row.
+    val s80 = spark.newSession()
+    s80.conf.set("spark.graft.kmeans.k", "80")
+    val inDir = tmpDir("graft_kms80_in").toString
+    val sample = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") % 3 === 0)
+      .select(col("vec_id"),
+        col("embedding").cast("array<float>").as("embedding"))
+    sample.filter(col("vec_id") % 2 === 0)
+      .coalesce(1).write.mode("append").parquet(inDir)
+    sample.filter(col("vec_id") % 2 =!= 0)
+      .coalesce(1).write.mode("append").parquet(inDir)
+    val streamed = StreamDemos.runAvailableNow(s80,
+      StreamDemos.scoredVecStream(s80, sf, inDir),
+      "append", "kmeans_scored_k80")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sorted.toSeq
+    val expectIds = sample.select("vec_id").collect().map(_.getLong(0)).toSet
+    val b = ops.Clustering.base(s80, sf)
+    val batch = ops.Clustering
+      .assign(b, ops.Clustering.centroids(s80, sf, 80))
+      .filter(col("vec_id").isInCollection(expectIds))
+      .select("vec_id", "cid", "dist2")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .sorted.toSeq
+    assert(streamed.nonEmpty)
+    assert(streamed.length === expectIds.size)
+    assert(streamed === batch)
+  }
+
   test("CAP-STREAM-KMEANS-LARGE-K: foreachBatch large-K scoring == batch assign") {
     // The large-K twin scoredVecStream's require prescribes: each
     // micro-batch scores through the SAME assign dispatch as batch —
-    // at k=80 past LiteralMaxK (the join E-step) — and must reproduce
+    // at k=80 the exact literal E-step — and must reproduce
     // the batch assignment row-for-row across two micro-batch files.
     val inDir = tmpDir("graft_kmsL_in").toString
     val ck = tmpDir("graft_kmsL_ck").toString
